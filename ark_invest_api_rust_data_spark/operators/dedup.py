@@ -22,7 +22,6 @@ division.
 from __future__ import annotations
 
 import logging
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame, Window
@@ -207,11 +206,10 @@ def minhash_signature(base_hash_arr: Column, num_hashes: int = 16) -> Column:
 # OPTIMIZATION_r12.md) — at 16 hash functions the interpreted fold
 # beats the extra ArrowEvalPython round-trip per signature stage;
 # wider affine families (more folds per row, same crossing cost) tip
-# to NumPy. The Arrow tier stays for >16 and is env-selectable; the
-# expression tier remains the plan-transparent bit-equality reference
-# (pure int64 affine math on a 2³¹ grid is representation-exact in
-# both tiers, and tests force both and pin equality).
-_SIG_ARROW_BOUND = int(os.environ.get("SPARK_GRAFT_SIG_ARROW_BOUND", "16"))
+# to NumPy, so the Arrow tier runs above 16 (pure int64 affine math on
+# a 2³¹ grid is representation-exact in both tiers, and tests force
+# both and pin equality).
+_SIG_ARROW_BOUND = 16
 
 
 def _minhash_sig_udf(num_hashes: int):
@@ -1080,68 +1078,44 @@ SIMHASH_BITS = 32
 
 
 def simhash(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text", tier: str = "expr"
+    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
 ) -> DataFrame:
     """SimHash-32 fingerprint per document over distinct tokens with
     unit weights: bit b is set iff Σ_tokens (±1 by token-hash bit b)
-    is positive. Pure integer pipeline either way; tiers:
-
-    * ``tier="expr"`` (default) — the signature is doc-local, so the
-      per-bit sums are 32 folds over the document's materialized
-      token-hash array: ONE narrow projection, zero shuffles. The
-      100 TB shape (nothing moves).
-    * ``tier="grouped"`` — explode distinct tokens → one groupBy(doc)
-      with 32 conditional sums (map-side combined); kept as the
-      comparison tier.
+    is positive. Pure integer pipeline. The signature is doc-local, so
+    the per-bit sums are 32 folds over the document's materialized
+    token-hash array: ONE narrow projection, zero shuffles. The 100 TB
+    shape (nothing moves).
 
     (Hashing the distinct vocabulary once + broadcast-joining back was
     also measured and lost — the join overhead exceeds the integer
     fold cost on short tokens.)"""
     from .text import token_hash32
 
-    if tier not in ("expr", "grouped"):  # a typo'd tier must not
-        # silently switch the physical plan (ADVICE r2)
-        raise ValueError(f"tier must be 'expr' or 'grouped', got {tier!r}")
     toks = F.array_distinct(F.split(F.trim(F.col(text_col)), r"\s+"))
-    if tier == "expr":
-        # token-hash array as its OWN column: 32 fold expressions
-        # reference it, and inlining would re-evaluate the char-fold
-        # per reference (cf. rolling_fingerprint)
-        base = _spread(df).select(
-            F.col(id_col).alias("_id"), F.transform(toks, token_hash32).alias("_th")
-        )
-        def _fold(b):
-            # closure factory, not a default arg — PySpark counts lambda
-            # parameters to type the HOF, so the merge must be 2-ary
-            return F.aggregate(
-                F.col("_th"),
-                F.lit(0).cast("long"),
-                lambda acc, h: acc
-                + F.when((F.floor(h / F.lit(2**b)) % 2) == 1, 1).otherwise(-1),
-            )
-
-        bit_sum = [_fold(b) for b in range(SIMHASH_BITS)]
-        sim = None
-        for b in range(SIMHASH_BITS):
-            term = F.when(bit_sum[b] > 0, F.lit(2**b)).otherwise(F.lit(0))
-            sim = term if sim is None else sim + term
-        return base.select(F.col("_id").alias(id_col), sim.cast("long").alias("simhash"))
-
-    exploded = _spread(df).select(F.col(id_col).alias("_id"), F.explode(toks).alias("_tok"))
-    hashed = exploded.withColumn("_h", token_hash32(F.col("_tok")))
-    bit_sums = hashed.groupBy("_id").agg(
-        *[
-            F.sum(
-                F.when((F.floor(F.col("_h") / F.lit(2**b)) % 2) == 1, 1).otherwise(-1)
-            ).alias(f"_b{b}")
-            for b in range(SIMHASH_BITS)
-        ]
+    # token-hash array as its OWN column: 32 fold expressions
+    # reference it, and inlining would re-evaluate the char-fold
+    # per reference (cf. rolling_fingerprint)
+    base = _spread(df).select(
+        F.col(id_col).alias("_id"), F.transform(toks, token_hash32).alias("_th")
     )
+
+    def _fold(b):
+        # closure factory, not a default arg — PySpark counts lambda
+        # parameters to type the HOF, so the merge must be 2-ary
+        return F.aggregate(
+            F.col("_th"),
+            F.lit(0).cast("long"),
+            lambda acc, h: acc
+            + F.when((F.floor(h / F.lit(2**b)) % 2) == 1, 1).otherwise(-1),
+        )
+
+    bit_sum = [_fold(b) for b in range(SIMHASH_BITS)]
     sim = None
     for b in range(SIMHASH_BITS):
-        term = F.when(F.col(f"_b{b}") > 0, F.lit(2**b)).otherwise(F.lit(0))
+        term = F.when(bit_sum[b] > 0, F.lit(2**b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
-    return bit_sums.select(F.col("_id").alias(id_col), sim.cast("long").alias("simhash"))
+    return base.select(F.col("_id").alias(id_col), sim.cast("long").alias("simhash"))
 
 
 def hamming64(a: Column, b: Column) -> Column:

@@ -16,10 +16,10 @@ Why this shape survives 100 TB (and a vocabulary join would not):
   ``d``-row tables regardless of corpus size, built by one
   map-side-combined count each. No dictionary to build, broadcast, or
   keep consistent across batches.
-* the lambda table is ``d`` rows — it broadcasts to every executor for
-  free; scoring is a narrow explode + broadcast-join + per-doc combine.
-  The ONLY corpus-wide exchange is the per-doc sum's map-side-combined
-  groupBy (O(docs) rows).
+* the lambda table is ``d`` rows — it crosses the driver once and rides
+  to every executor in the scoring closure; scoring is one narrow
+  vectorized pass per document batch. Every exchange is over the d-row
+  model tables.
 * selection is a bounded top-``budget`` (TakeOrderedAndProject — each
   partition ships at most ``budget`` rows). For proportional budgets at
   lake scale, threshold on the score quantile instead (see
@@ -43,27 +43,22 @@ surface); this extends SURVEY.md §2 B31.
 
 from __future__ import annotations
 
-import os
 import re
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql.window import Window
 
-from .text import HASH_MOD, token_hash32, tokens
+from .text import HASH_MOD
 
 DEFAULT_D = 1024
 DEFAULT_SHIFT = 20
 
 # Java's default \s ([ \t\n\x0B\f\r]) == Python's \s under re.ASCII —
 # without the flag Python would also split on Unicode whitespace
-# (e.g. \xa0) and the fused tier would tokenize differently from
-# F.split(text, r"\s+")
+# (e.g. \xa0) and would tokenize differently from the oracle's
+# whitespace split
 _WS = re.compile(r"\s+", re.ASCII)
-
-
-def _bucket(tok: Column, d: int) -> Column:
-    return F.pmod(token_hash32(tok), F.lit(d)).cast("int")
 
 
 def _token_buckets_np(texts, d: int):
@@ -72,8 +67,8 @@ def _token_buckets_np(texts, d: int):
     token. The hash is EXACTLY token_hash32's char fold — h = (h·31 +
     codepoint) mod 2³² — vectorized ACROSS tokens per char position
     (the accumulation order per token is unchanged, and the math is
-    pure integers, so the result is bit-identical to the expression
-    tier and the DuckDB oracle). Codepoints come from a UTF-32 view
+    pure integers, so the result is bit-identical to text.token_hash32
+    and the DuckDB oracle). Codepoints come from a UTF-32 view
     of the concatenated token text (1:1 with F.ascii/ord)."""
     import numpy as np
 
@@ -104,22 +99,12 @@ def _token_buckets_np(texts, d: int):
     return np.asarray(doc_idx, dtype=np.int64), h % d
 
 
-def _bucket_counts(df: DataFrame, d: int, text_col: str, out: str) -> DataFrame:
-    """Hashed-unigram corpus model: (bucket, count) — at most ``d``
-    rows after one map-side-combined aggregation (expression tier)."""
-    toks = df.select(F.explode(tokens(F.col(text_col))).alias("_t")).filter(
-        F.col("_t") != ""
-    )
-    return toks.groupBy(_bucket(F.col("_t"), d).alias("bucket")).agg(
-        F.count("*").alias(out)
-    )
-
-
 def _bucket_counts_arrow(
     df: DataFrame, d: int, text_col: str, out: str
 ) -> DataFrame:
-    """Fused Arrow tier of ``_bucket_counts``: one mapInPandas pass
-    emits ≤ d partial (bucket, count) rows per batch — the corpus
+    """Hashed-unigram corpus model: (bucket, count) — at most ``d``
+    rows. One mapInPandas pass emits ≤ d partial (bucket, count) rows
+    per batch and one tiny groupBy finishes them — the corpus
     never explodes into a token stream, and the per-token char fold
     runs vectorized in NumPy instead of the interpreted expression
     evaluator (HOF folds are CodegenFallback — the C7 lesson). Counts
@@ -145,6 +130,12 @@ def _bucket_counts_arrow(
     return partials.groupBy("bucket").agg(F.sum("_c").cast("long").alias(out))
 
 
+def _lam_rows(lam: DataFrame) -> list:
+    """The d-row λ table as (bucket, lam) pairs — one bounded driver
+    crossing."""
+    return [(r["bucket"], r["lam"]) for r in lam.select("bucket", "lam").collect()]
+
+
 def _score_fused(
     df: DataFrame,
     lam_rows: list,
@@ -161,7 +152,7 @@ def _score_fused(
     dsir_weights' INNER join (a token whose bucket is absent from λ
     is dropped from count and sum), True = dsir_score_batch's LEFT
     join (counted, λ=0 prior). Integer math end to end — bit-equal to
-    the expression tier (pytest-pinned)."""
+    the DuckDB oracle."""
 
     def gen(batches):
         import numpy as np
@@ -206,28 +197,23 @@ def dsir_lambda(
     d: int = DEFAULT_D,
     text_col: str = "text",
     shift: int = DEFAULT_SHIFT,
-    tier: str = "arrow",
 ) -> DataFrame:
     """The per-bucket integer log-likelihood-ratio table
     (bucket, ct, cr, lam) — ``d`` rows, broadcastable. Buckets are the
     ones present in the RAW corpus (documents scored are drawn from
     it, so every token they contain lands in a raw bucket).
 
-    ``tier``: 'arrow' (default) fuses tokenize→hash→count into one
-    vectorized mapInPandas pass per corpus; 'expr' keeps the
-    explode+groupBy expression plan. Bit-identical (integer counts) —
-    the expression tier's per-char HOF fold is CodegenFallback, which
-    made model building O(corpus chars) INTERPRETED (SCALE.md
-    finding 30's DSIR wall)."""
+    Each corpus model is one vectorized tokenize→hash→count
+    mapInPandas pass: an explode+groupBy expression plan pays a
+    per-char HOF fold that is CodegenFallback, which made model
+    building O(corpus chars) INTERPRETED (SCALE.md finding 30's DSIR
+    wall)."""
     if d < 1:
         raise ValueError(f"d must be >= 1, got {d}")
     if not 0 < shift < 43:
         raise ValueError(f"shift must be in (0, 43), got {shift}")
-    if tier not in ("arrow", "expr"):
-        raise ValueError(f"tier must be 'arrow' or 'expr', got {tier!r}")
-    counts = _bucket_counts_arrow if tier == "arrow" else _bucket_counts
-    cr = counts(raw, d, text_col, "cr")
-    ct = counts(target, d, text_col, "ct")
+    cr = _bucket_counts_arrow(raw, d, text_col, "cr")
+    ct = _bucket_counts_arrow(target, d, text_col, "ct")
     # x = ((ct+1) << shift) DIV (cr+1), clamped to >= 1 so the bit
     # length is defined; lambda = bitlen(x) - 1 - shift can go negative
     # (bucket rarer in target than raw), exactly like the float LLR.
@@ -249,7 +235,6 @@ def dsir_weights(
     id_col: str = "doc_id",
     text_col: str = "text",
     shift: int = DEFAULT_SHIFT,
-    tier: str = "arrow",
 ) -> DataFrame:
     """Per-document importance weights against a trusted target corpus.
 
@@ -258,30 +243,12 @@ def dsir_weights(
     more target-like. Docs with no tokens are omitted (consistent with
     the tokenizing operators).
 
-    ``tier``: 'arrow' (default) collects the d-row λ table (one
-    bounded driver crossing, the kmeans-seed pattern) and scores each
-    document inside ONE fused mapInPandas — no token explode, no
-    join, no per-doc shuffle; 'expr' keeps the lazy
-    explode→broadcast-join→groupBy plan. Bit-identical int64 output
-    either way (pytest-pinned tier equality)."""
-    lam = dsir_lambda(raw, target, d=d, text_col=text_col, shift=shift, tier=tier)
-    if tier == "arrow":
-        lam_rows = [
-            (r["bucket"], r["lam"])
-            for r in lam.select("bucket", "lam").collect()
-        ]
-        return _score_fused(
-            raw, lam_rows, d, id_col, text_col, keep_missing=False
-        )
-    toks = raw.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t")
-    ).filter(F.col("_t") != "")
-    scored = toks.select(id_col, _bucket(F.col("_t"), d).alias("bucket")).join(
-        F.broadcast(lam.select("bucket", "lam")), "bucket"
-    )
-    return scored.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens"),
-        F.sum("lam").alias("dsir_score"),
+    The d-row λ table is collected (one bounded driver crossing, the
+    kmeans-seed pattern) and each document is scored inside ONE fused
+    mapInPandas — no token explode, no join, no per-doc shuffle."""
+    lam = dsir_lambda(raw, target, d=d, text_col=text_col, shift=shift)
+    return _score_fused(
+        raw, _lam_rows(lam), d, id_col, text_col, keep_missing=False
     )
 
 
@@ -338,12 +305,9 @@ def dsir_select_threshold(
     # the checkpoint loses cold (2.19-2.44 s vs 1.77 s without, table
     # in OPTIMIZATION_r12.md), and the advisor flagged its O(docs)
     # block retention besides (blocks are never released; sweeping
-    # keep_frac accumulates them). Default is therefore the lazy r10
-    # double-evaluation plan; long-lived deployments scoring huge
-    # corpora once per threshold can opt in via SPARK_GRAFT_DSIR_CKPT=1
-    # and own the retention.
-    if os.environ.get("SPARK_GRAFT_DSIR_CKPT", "0") == "1":
-        weights = weights.localCheckpoint()
+    # keep_frac accumulates them). The plan is therefore the lazy r10
+    # double evaluation; a caller scoring a huge corpus once per
+    # threshold can checkpoint ``weights`` itself and own the retention.
     hist = weights.groupBy(score_col).agg(F.count("*").alias("_c"))
     w = Window.orderBy(score_col).rowsBetween(Window.unboundedPreceding, 0)
     # the histogram window holds one row per DISTINCT score — bounded
@@ -365,14 +329,13 @@ def dsir_score_batch(
     d: int,
     id_col: str = "doc_id",
     text_col: str = "text",
-    tier: str = "arrow",
 ) -> DataFrame:
     """Incremental DSIR: score an ARRIVING batch against a FROZEN
     λ table (a prior ``dsir_lambda`` output) — the deployment shape,
     mirroring the incremental-IVF contract: the corpus models train
     once on the reference snapshot, every subsequent ingest batch is
-    scored with zero retraining and zero corpus-wide work (one batch
-    explode + a d-row broadcast join + a per-doc combine).
+    scored with zero retraining and zero corpus-wide work (one narrow
+    vectorized pass over the batch).
 
     Buckets absent from the frozen table (tokens the reference corpus
     never hashed into — possible when the reference is a subset) score
@@ -381,24 +344,9 @@ def dsir_score_batch(
     silent. Bit-identical to ``dsir_weights`` for any batch drawn
     from the λ table's raw corpus (pytest pins it).
 
-    ``tier`` as in ``dsir_weights``; the arrow tier collects the
-    frozen λ (d rows) once per call — at deployment scale amortize by
-    collecting once and scoring many batches via ``_score_fused``."""
-    if tier == "arrow":
-        lam_rows = [
-            (r["bucket"], r["lam"])
-            for r in lam.select("bucket", "lam").collect()
-        ]
-        return _score_fused(
-            batch, lam_rows, d, id_col, text_col, keep_missing=True
-        )
-    toks = batch.select(
-        F.col(id_col), F.explode(tokens(F.col(text_col))).alias("_t")
-    ).filter(F.col("_t") != "")
-    scored = toks.select(id_col, _bucket(F.col("_t"), d).alias("bucket")).join(
-        F.broadcast(lam.select("bucket", "lam")), "bucket", "left"
-    )
-    return scored.groupBy(id_col).agg(
-        F.count("*").alias("n_tokens"),
-        F.coalesce(F.sum("lam"), F.lit(0)).cast("long").alias("dsir_score"),
+    Scored like ``dsir_weights``: the frozen λ (d rows) is collected
+    once per call — at deployment scale amortize by collecting once
+    and scoring many batches via ``_score_fused``."""
+    return _score_fused(
+        batch, _lam_rows(lam), d, id_col, text_col, keep_missing=True
     )

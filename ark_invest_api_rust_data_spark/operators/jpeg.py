@@ -576,7 +576,11 @@ def decode_jpeg(b: bytes) -> tuple[int, int, bytes] | None:
                 code = 0
                 for length in range(1, 17):
                     for _ in range(counts[length - 1]):
-                        if i >= len(seg):
+                        # truncated table, or more codes than fit
+                        # ``length`` bits: a canonical code that fits
+                        # its length is prefix-free, so the LUT and the
+                        # bitwise walk consume the same bits
+                        if i >= len(seg) or code >= 1 << length:
                             if len(_DHT_CACHE) < 256:
                                 _DHT_CACHE[seg] = _DHT_BAD
                             return None

@@ -539,6 +539,8 @@ def _lzw_encode(data: bytes, min_code_size: int) -> bytes:
 
 def _lzw_decode(data: bytes, min_code_size: int) -> bytes | None:
     """GIF-flavor LZW decompress. None on a corrupt stream."""
+    if min_code_size > 8:  # GIF caps it at 8 (one byte per pixel)
+        return None
     clear = 1 << min_code_size
     eoi = clear + 1
     table: dict[int, bytes] = {i: bytes([i]) for i in range(clear)}
@@ -652,8 +654,8 @@ def decode_gif_frames(b: bytes) -> tuple[int, int, list[bytes]] | None:
                 i += 1 + b[i]
             i += 1
             continue
-        if block != 0x2C:
-            return None
+        if block != 0x2C or i + 10 > n:
+            return None  # unknown block or truncated image descriptor
         left = int.from_bytes(b[i + 1 : i + 3], "little")
         top = int.from_bytes(b[i + 3 : i + 5], "little")
         fw = int.from_bytes(b[i + 5 : i + 7], "little")

@@ -219,12 +219,3 @@ class Materializer:
                 fs.delete(path, True)
         except Exception:
             pass
-
-
-def _release_local(df: DataFrame) -> None:
-    """Legacy helper for call sites that always use the local tier
-    (bounded one-shot materializations, not iteration loops)."""
-    try:
-        df._jdf.logicalPlan().rdd().unpersist(False)
-    except Exception:
-        pass

@@ -36,7 +36,6 @@ Spark-first shape:
 from __future__ import annotations
 
 import math
-import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -44,11 +43,9 @@ from pyspark.sql import DataFrame
 # above this many flattened coarse coordinates (n_centroids·dim) the
 # fused expression-tier IVF-PQ trainer hands off to the independent
 # Arrow-tier trainers (the coarse passes must vectorize there). This is
-# pq's own regime switch — it intentionally does NOT track clustering's
-# ``_ARROW_ASSIGN_BOUND`` (round 11 lowered that one to route plain
-# k-means assignments to NumPy much earlier; the fused trainer's
-# measured win at small coarse k [-41% llm_ivfpq_topk] lives below
-# THIS bound and would be thrown away by the lower one).
+# pq's own regime switch — clustering's k-means runs every pass on
+# NumPy, but the fused trainer's measured win at small coarse k
+# [-41% llm_ivfpq_topk] lives below THIS bound.
 _FUSED_TRAIN_BOUND = 16384
 
 # above this many TOTAL flattened codebook coordinates (coarse k·dim +
@@ -72,8 +69,8 @@ _FUSED_TRAIN_BOUND = 16384
 # and pin equality; the NumPy math reuses
 # clustering._assign_dists_chunks, whose coordinate-ascending IEEE
 # accumulation and first-min argmin are bit-identical to the folds
-# (and to the SQL oracle's replay). Env-overridable for deployments.
-_PQ_ARROW_BOUND = int(os.environ.get("SPARK_GRAFT_PQ_ARROW_BOUND", "16384"))
+# (and to the SQL oracle's replay).
+_PQ_ARROW_BOUND = 16384
 
 MU = 1_000_000  # quantization grid, matches clustering._quantize
 
@@ -99,9 +96,10 @@ def _assign_expr(
     q: F.Column, flat: F.Column, k: int, dim: int, off: int = 0
 ) -> F.Column:
     """Nearest-centroid id for quantized subvector ``q`` against
-    flattened coords ``flat`` — the clustering._assign_expr_from math
-    (left-to-right IEEE distance folds, first-occurrence argmin =
-    lowest-cid tie-break), parameterized by the q column so one row can
+    flattened coords ``flat`` — left-to-right IEEE distance folds
+    (the order clustering._assign_dists_chunks and the oracle's
+    list_reduce use) and a first-occurrence argmin (lowest-cid
+    tie-break), parameterized by the q column so one row can
     carry all ``m`` subspace assignments in a single pass. ``off``
     reads the subvector at elements off+1..off+dim of ``q``, so a
     single full-vector quantized column serves every subspace (round
@@ -440,7 +438,7 @@ def _ivfpq_train(
     serves as both the IVF assignment and the codes table (so the lake
     build's former codes⋈assignment join disappears too).
 
-    Bit-identity: coarse math is exactly kmeans_fit's expression tier
+    Bit-identity: coarse math reproduces kmeans_fit bit-for-bit
     (same lowest-id seeds, same left-to-right IEEE folds via
     ``_assign_expr`` at off=0 over the full vector, same exact int64
     sums and one double division per coordinate, same carry-forward
@@ -451,7 +449,7 @@ def _ivfpq_train(
     dims — ANSI-safe, values unchanged.
 
     Scope: expression tier only — callers fall back to the separate
-    trainers above kmeans_fit's Arrow bound (corpus-scaled k), where
+    trainers above ``_FUSED_TRAIN_BOUND`` (corpus-scaled k), where
     the passes vectorize independently. Returns
     (coarse_centroids, assignments_df, PqModel)."""
     if iters < 1:

@@ -570,8 +570,8 @@ def ann_join(
     built once and amortized over every query batch, exactly like
     ``IvfIndex``; assignments must cover ``data``'s ids.
 
-    At 100 TB: n_centroids scales with the corpus (√n rule) which
-    crosses kmeans_fit's Arrow bound so all passes vectorize;
+    At 100 TB: n_centroids scales with the corpus (√n rule) and
+    every kmeans_fit pass is vectorized;
     candidates shuffle once on the cluster key whose fan-in is
     bounded by cell size, and the query side (an inference batch) is
     broadcast — no q-partition hot keys, no corpus-sized window."""

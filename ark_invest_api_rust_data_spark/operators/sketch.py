@@ -387,7 +387,6 @@ def kmins_sketch(
     key_col: str,
     group_cols: list[str],
     k: int = 32,
-    arrow: bool = False,
 ) -> DataFrame:
     """Per-group k-mins distinct sketch: for each of k independent
     multiply-shift hashes, the minimum hash value of the group's keys
@@ -412,22 +411,12 @@ def kmins_sketch(
     """
     # base char-fold materialized ONCE per key in its own projection
     # (see kmins_positions_from_hash): with k register expressions the
-    # inlined fold dominated wall time k-fold at corpus scale.
-    # arrow=True swaps in the vectorized pandas-UDF fold twin
-    # (text.token_hash32_vec, bit-identical, pytest-pinned) — kept as
-    # the measured-LOSER tier: with the fold hoisted to one pass per
-    # key, Arrow string shipping outweighs the interpreted lambda at
-    # every tested scale (sf0.1: 1.54 s vs 1.01 s; sf1: 14.9 s vs
-    # 9.6 s on the 64-register overlap sketch), so the expression
-    # fold stays the default. The vec twin exists for key shapes
-    # where the fold genuinely dominates (very long keys).
-    from .text import token_hash32_vec
-
-    fold = (
-        token_hash32_vec()(F.col(key_col).cast("string"))
-        if arrow
-        else token_hash32(F.col(key_col).cast("string"))
-    )
+    # inlined fold dominated wall time k-fold at corpus scale. With the
+    # fold hoisted to one pass per key, a vectorized pandas-UDF fold
+    # measured slower at every tested scale (Arrow string shipping
+    # outweighs the interpreted lambda: sf0.1 1.54 s vs 1.01 s; sf1
+    # 14.9 s vs 9.6 s on the 64-register overlap sketch).
+    fold = token_hash32(F.col(key_col).cast("string"))
     based = df.select(*group_cols, fold.alias("_bh"))
     hashed = based.select(
         *group_cols,

@@ -15,7 +15,6 @@ exact int64 arithmetic.
 
 from __future__ import annotations
 
-import pandas as pd
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
@@ -45,52 +44,6 @@ def token_hash32(tok: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, ch: (acc * F.lit(31) + F.ascii(ch)) % F.lit(HASH_MOD),
     )
-
-
-def token_hash32_vec():
-    """Vectorized (Arrow-batched pandas UDF) twin of ``token_hash32``
-    — BIT-IDENTICAL by construction, not by rounding luck: the fold
-    is pure integer (h·31 + codepoint, masked to 32 bits; the largest
-    intermediate is < 2³⁷, exact in uint64), and codepoints come from
-    a UTF-32-LE view (1:1 with Python ``ord`` and Spark ``ascii`` —
-    the importance.py precedent). The interpreted expression fold is
-    CodegenFallback and dominates every sketch-family probe's wall at
-    corpus scale; this tier replaces k·n interpreted lambda frames
-    with a masked NumPy loop over max-token-length steps per batch.
-    NULL in → NULL out (nullable Int64), matching the expression
-    tier's aggregate-over-null-array semantics. Returned as a factory
-    so UDF registration happens at call time, not import time."""
-
-    @F.pandas_udf("long")
-    def _fold(s: pd.Series) -> pd.Series:
-        import numpy as np
-
-        null_mask = s.isna().to_numpy()
-        vals = s.fillna("").to_numpy()
-        n = len(vals)
-        out = np.zeros(n, dtype=np.uint64)
-        if n:
-            lens = np.fromiter(
-                (len(x) for x in vals), dtype=np.int64, count=n
-            )
-            lmax = int(lens.max()) if n else 0
-            if lmax:
-                buf = np.frombuffer(
-                    "".join(vals).encode("utf-32-le"), dtype=np.uint32
-                )
-                starts = np.zeros(n, dtype=np.int64)
-                np.cumsum(lens[:-1], out=starts[1:])
-                for j in range(lmax):
-                    live = lens > j
-                    out[live] = (
-                        out[live] * np.uint64(31)
-                        + buf[(starts + j)[live]].astype(np.uint64)
-                    ) & np.uint64(0xFFFFFFFF)
-        res = pd.array(out.astype(np.int64), dtype="Int64")
-        res[null_mask] = pd.NA
-        return pd.Series(res)
-
-    return _fold
 
 
 def text_stats(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
@@ -265,7 +218,6 @@ def quality_filter(
     min_uniq_ratio: float = 0.35,
     max_top_2gram_frac: float = 0.12,
     max_dup_3gram_frac: float = 0.10,
-    tier: str = "expr",
     keep_docs: bool = False,
 ) -> DataFrame:
     """Composite corpus quality verdict (Gopher-style filter cascade,
@@ -275,127 +227,34 @@ def quality_filter(
     failing rule as the drop reason (rule order is part of the
     contract — the oracle evaluates the same CASE chain).
 
-    Tiers (measured at sf0.1, see bench.py):
+    Repetition signals come from the sorted-array run-length fold
+    (``_run_length_signals``): ONE narrow projection over the corpus,
+    zero shuffles, no row multiplication. This is the 100 TB shape —
+    the whole verdict is map-only, where an explode→groupBy
+    formulation would move per-gram rows through two shuffles.
 
-    * ``tier="expr"`` (default) — repetition signals via the sorted-
-      array run-length fold (``_run_length_signals``): ONE narrow
-      projection over the corpus, zero shuffles, no row multiplication.
-      This is the 100 TB shape — the whole verdict is map-only.
-    * ``tier="fused"`` — the explode→groupBy formulation (one corpus
-      scan, two linear map-side-combined shuffles), kept as the
-      comparison tier; per-gram rows ride two shuffles.
-
-    Both tiers produce identical verdicts (pytest-proven on the
-    corpus); gram-less documents differ only in an internal NULL-vs-0
-    repetition stat that the ``too_short`` rule shadows.
-
-    ``keep_docs=True`` (expr tier only) returns the SURVIVING input
-    rows with all their columns instead of the verdict frame: the
-    verdict is computed in the same projection as the scan and applied
-    as a filter — so "quality-filter the corpus" is ONE scan with no
-    verdict-to-corpus join (a join would re-shuffle and, on small
-    inputs, lets AQE serialize the fold stage; measured 7.3s → 1.0s
-    at sf0.1 inside the composed pipeline probe).
+    ``keep_docs=True`` returns the SURVIVING input rows with all their
+    columns instead of the verdict frame: the verdict is computed in
+    the same projection as the scan and applied as a filter — so
+    "quality-filter the corpus" is ONE scan with no verdict-to-corpus
+    join (a join would re-shuffle and, on small inputs, lets AQE
+    serialize the fold stage; measured 7.3s → 1.0s at sf0.1 inside the
+    composed pipeline probe).
     """
     from .dedup import _spread
 
-    if tier not in ("expr", "fused"):  # a typo'd tier must not silently
-        raise ValueError(f"tier must be 'expr' or 'fused', got {tier!r}")
     toks = tokens(F.col(text_col))
-    if tier == "expr":
-        sig2 = _run_length_signals(word_ngrams(toks, 2))
-        sig3 = _run_length_signals(word_ngrams(toks, 3))
-        nc = F.length(F.col(text_col))
-        rolled = _spread(df).withColumns(
-            {
-                "_nt": F.size(toks),
-                "_ur": F.size(F.array_distinct(toks)).cast("double")
-                / F.size(toks).cast("double"),
-                "_top2": sig2["top_cover"].cast("double") / nc.cast("double"),
-                "_dup3": sig3["dup_chars"].cast("double") / nc.cast("double"),
-            }
-        )
-        reason = (
-            F.when(F.col("_nt") < min_tokens, "too_short")
-            .when(F.col("_ur") < min_uniq_ratio, "low_diversity")
-            .when(F.col("_top2") > max_top_2gram_frac, "repetitive_2gram")
-            .when(F.col("_dup3") > max_dup_3gram_frac, "repetitive_3gram")
-            .otherwise("ok")
-        )
-        rolled = rolled.withColumn("_reason", reason)
-        if keep_docs:
-            # The verdict filter must NOT be pushed below the _spread
-            # exchange: Catalyst's predicate pushdown would inline the
-            # ENTIRE fold expression into the filter and sink it into
-            # the scan stage, serializing the heavy per-doc folds onto
-            # however few splits the file has (measured at sf1: 40 s on
-            # 2 scan tasks vs ~4 s post-exchange on 32). Wrapping the
-            # verdict in an always-true non-deterministic guard blocks
-            # the pushdown (filters cannot cross non-deterministic
-            # projections) while changing no values. rand(), not
-            # monotonically_increasing_id(): the latter is rejected by
-            # the streaming UnsupportedOperationChecker, and this op
-            # must keep running over streams (corpus-prep-as-it-lands).
-            #
-            # Guard choice matters: Spark 4's OptimizeRand rule FOLDS
-            # bound comparisons on rand() (rand >= -1 → true), which
-            # silently re-enabled the pushdown and re-serialized the
-            # fold onto the scan splits (caught by the round-3 scale
-            # audit: composed pipeline 1.4 s → 10 s at sf0.1). An
-            # inequality against an out-of-range literal survives the
-            # rule; tests/test_plans.py asserts the filter stays above
-            # the exchange so a future optimizer change can't regress
-            # this silently again.
-            nd_guard = F.rand(seed=0) != F.lit(-5.0)  # always true
-            rolled = rolled.withColumn(
-                "_reason", F.when(nd_guard, F.col("_reason"))
-            )
-            return rolled.filter(F.col("_reason") == "ok").drop(
-                "_nt", "_ur", "_top2", "_dup3", "_reason"
-            )
-        return rolled.select(
-            id_col,
-            (F.col("_reason") == "ok").alias("keep"),
-            F.col("_reason").alias("reason"),
-        )
-
-    if keep_docs:
-        raise ValueError("keep_docs requires tier='expr'")
-    grams = F.concat(
-        F.transform(word_ngrams(toks, 2), lambda g: F.struct(F.lit(2).alias("n"), g.alias("gram"))),
-        F.transform(word_ngrams(toks, 3), lambda g: F.struct(F.lit(3).alias("n"), g.alias("gram"))),
-    )
-    # Fused single-scan plan: the length/diversity stats are computed in
-    # the same projection that explodes the grams and CARRIED through
-    # the aggregation as (functionally doc-dependent) grouping keys —
-    # one corpus scan and two linear shuffles, versus scanning twice
-    # and joining the two signal frames (at 100 TB the second text scan
-    # is the dominant cost). explode_outer keeps gram-less documents
-    # (< 2 tokens) in the verdict — an inner gram pipeline would drop
-    # them instead of marking them too_short.
-    exploded = _spread(df).select(
-        F.col(id_col),
-        F.length(F.col(text_col)).alias("_nc"),
-        F.size(toks).alias("_nt"),
-        (F.size(F.array_distinct(toks)).cast("double") / F.size(toks).cast("double")).alias(
-            "_ur"
-        ),
-        F.explode_outer(grams).alias("g"),
-    )
-    counted = exploded.groupBy(
-        id_col, "_nc", "_nt", "_ur", F.col("g.n").alias("_n"), F.col("g.gram").alias("_gram")
-    ).agg(F.count("*").alias("_c"))
-    cover = F.col("_c") * F.length(F.col("_gram"))
-    rolled = counted.groupBy(id_col, "_nc", "_nt", "_ur").agg(
-        (
-            F.max(F.when(F.col("_n") == 2, cover)).cast("double") / F.col("_nc").cast("double")
-        ).alias("_top2"),
-        (
-            F.coalesce(
-                F.sum(F.when((F.col("_n") == 3) & (F.col("_c") > 1), cover)), F.lit(0)
-            ).cast("double")
-            / F.col("_nc").cast("double")
-        ).alias("_dup3"),
+    sig2 = _run_length_signals(word_ngrams(toks, 2))
+    sig3 = _run_length_signals(word_ngrams(toks, 3))
+    nc = F.length(F.col(text_col))
+    rolled = _spread(df).withColumns(
+        {
+            "_nt": F.size(toks),
+            "_ur": F.size(F.array_distinct(toks)).cast("double")
+            / F.size(toks).cast("double"),
+            "_top2": sig2["top_cover"].cast("double") / nc.cast("double"),
+            "_dup3": sig3["dup_chars"].cast("double") / nc.cast("double"),
+        }
     )
     reason = (
         F.when(F.col("_nt") < min_tokens, "too_short")
@@ -404,8 +263,41 @@ def quality_filter(
         .when(F.col("_dup3") > max_dup_3gram_frac, "repetitive_3gram")
         .otherwise("ok")
     )
-    return rolled.withColumn("reason", reason).select(
-        id_col, (F.col("reason") == "ok").alias("keep"), "reason"
+    rolled = rolled.withColumn("_reason", reason)
+    if keep_docs:
+        # The verdict filter must NOT be pushed below the _spread
+        # exchange: Catalyst's predicate pushdown would inline the
+        # ENTIRE fold expression into the filter and sink it into
+        # the scan stage, serializing the heavy per-doc folds onto
+        # however few splits the file has (measured at sf1: 40 s on
+        # 2 scan tasks vs ~4 s post-exchange on 32). Wrapping the
+        # verdict in an always-true non-deterministic guard blocks
+        # the pushdown (filters cannot cross non-deterministic
+        # projections) while changing no values. rand(), not
+        # monotonically_increasing_id(): the latter is rejected by
+        # the streaming UnsupportedOperationChecker, and this op
+        # must keep running over streams (corpus-prep-as-it-lands).
+        #
+        # Guard choice matters: Spark 4's OptimizeRand rule FOLDS
+        # bound comparisons on rand() (rand >= -1 → true), which
+        # silently re-enabled the pushdown and re-serialized the
+        # fold onto the scan splits (caught by the round-3 scale
+        # audit: composed pipeline 1.4 s → 10 s at sf0.1). An
+        # inequality against an out-of-range literal survives the
+        # rule; tests/test_plans.py asserts the filter stays above
+        # the exchange so a future optimizer change can't regress
+        # this silently again.
+        nd_guard = F.rand(seed=0) != F.lit(-5.0)  # always true
+        rolled = rolled.withColumn(
+            "_reason", F.when(nd_guard, F.col("_reason"))
+        )
+        return rolled.filter(F.col("_reason") == "ok").drop(
+            "_nt", "_ur", "_top2", "_dup3", "_reason"
+        )
+    return rolled.select(
+        id_col,
+        (F.col("_reason") == "ok").alias("keep"),
+        F.col("_reason").alias("reason"),
     )
 
 

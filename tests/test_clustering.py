@@ -175,20 +175,6 @@ def test_semantic_dedup_external_assignments(spark):
 
 
 # ---------------------------------------- semantic dedup, scaled k
-def test_kmeans_broadcast_coords_equals_literal(spark, monkeypatch):
-    """The default broadcast-coords assignment and the literal-leaves
-    reference tier must be BIT-IDENTICAL (same folds, same coords) —
-    the equality that lets the broadcast default inherit the literal
-    tier's oracle proofs."""
-    from ark_invest_api_rust_data_spark.operators import clustering
-
-    emb = load_table(spark, SF, "embeddings")
-    bc = {(r["vec_id"], r["cluster"]) for r in kmeans_assign(emb, k=4, iters=2).collect()}
-    monkeypatch.setattr(clustering, "_LITERAL_COORD_BOUND", 1 << 30)
-    lit = {(r["vec_id"], r["cluster"]) for r in kmeans_assign(emb, k=4, iters=2).collect()}
-    assert lit == bc
-
-
 def test_semantic_dedup_scaled_matches_bruteforce(spark):
     """The production path (corpus-derived k) keeps the same keep/drop
     contract: drop x iff some same-cluster y<x has cosine ≥ τ —
@@ -534,41 +520,6 @@ def test_semantic_dedup_soft_skips_mutual_secondary_pairs(spark):
     assert out2 == {1: True, 2: False}
 
 
-def test_kmeans_arrow_tier_equals_expr(spark, monkeypatch):
-    """The vectorized (Arrow/NumPy) Lloyd's tier and the expression
-    fold must be BIT-IDENTICAL: _assign_dists_chunks accumulates
-    coordinates in the same left-to-right IEEE order as the fold, the
-    partial cluster sums are exact int64, and argmin ties break to the
-    lowest cid like the (dist, cid) struct order. Hard, soft (nprobe),
-    and the downstream dedup keep/drop set are all compared."""
-    from ark_invest_api_rust_data_spark.operators import clustering as C
-
-    emb = load_table(spark, SF, "embeddings")
-
-    def snap(nprobe):
-        asg = C.kmeans_assign(emb, k=16, iters=3, nprobe=nprobe)
-        return sorted(tuple(r) for r in asg.collect())
-
-    def dedup_snap(nprobe):
-        out = C.semantic_dedup_scaled(
-            emb, target_cluster_size=16, iters=2, threshold=0.45, nprobe=nprobe
-        )
-        return sorted(tuple(r) for r in out.collect())
-
-    # pin the EXPRESSION tier explicitly for the reference snapshot:
-    # the default bound is 0 since round 11 (Arrow tier everywhere —
-    # measured 0.83x end-to-end), so the default no longer exercises
-    # the expr fold
-    monkeypatch.setattr(C, "_ARROW_ASSIGN_BOUND", 1 << 30)
-    want = {("h", 1): snap(1), ("h", 2): snap(2),
-            ("d", 1): dedup_snap(1), ("d", 2): dedup_snap(2)}
-    monkeypatch.setattr(C, "_ARROW_ASSIGN_BOUND", 0)
-    assert snap(1) == want[("h", 1)]
-    assert snap(2) == want[("h", 2)]
-    assert dedup_snap(1) == want[("d", 1)]
-    assert dedup_snap(2) == want[("d", 2)]
-
-
 def test_cluster_diversity_matches_bruteforce_pairs(spark):
     """The sum-identity diversity (|Σq|² − Σ|q|², decimal folds) must
     equal the brute-force Σ over ordered pairs of q_a·q_b computed by
@@ -629,32 +580,20 @@ def test_cluster_diversity_singleton_null_mean(spark):
     assert got[1]["n"] == 2 and got[1]["mean_pair_dot"] is not None
 
 
-def test_assign_to_centroids_frozen_reproduces_final_pass(spark, monkeypatch):
+def test_assign_to_centroids_frozen_reproduces_final_pass(spark):
     """The incremental-ingest half of the IVF lifecycle: assigning the
     TRAINING set against the frozen centroid dict must reproduce
     kmeans_fit's own final assignment row-for-row (same grid-space
-    distance folds, same tie-breaks), in both the expression and the
-    Arrow tier; soft assignment keeps the (id, cluster, probe_rank)
-    shape."""
+    distances, same tie-breaks); soft assignment keeps the
+    (id, cluster, probe_rank) shape."""
     from ark_invest_api_rust_data_spark.operators import clustering as C
 
     emb = load_table(spark, SF, "embeddings")
     cents, asg = C.kmeans_fit(emb, k=8, iters=2)
     want = sorted(tuple(r) for r in asg.collect())
 
-    # pin the EXPRESSION tier explicitly (default bound is 0 since
-    # round 11 — Arrow everywhere), so both tiers stay covered
-    monkeypatch.setattr(C, "_ARROW_ASSIGN_BOUND", 1 << 30)
-    got_expr = sorted(
-        tuple(r) for r in C.assign_to_centroids(emb, cents).collect()
-    )
-    assert got_expr == want
-
-    monkeypatch.setattr(C, "_ARROW_ASSIGN_BOUND", 0)
-    got_arrow = sorted(
-        tuple(r) for r in C.assign_to_centroids(emb, cents).collect()
-    )
-    assert got_arrow == want
+    got = sorted(tuple(r) for r in C.assign_to_centroids(emb, cents).collect())
+    assert got == want
 
     soft = C.assign_to_centroids(emb, cents, nprobe=2)
     assert soft.columns == ["vec_id", "cluster", "probe_rank"]

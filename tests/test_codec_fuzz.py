@@ -5,9 +5,10 @@ inspection — this locks the CLASS. ~1k payloads derived from golden
 fixtures by deterministic mutation (truncation, byte flips,
 length-field lies, chunk shuffles, magic-prefixed garbage) are fed to
 EVERY decoder (cross-format confusion included); each call must
-return None / a well-formed value or raise a regular exception, under
-a hard per-call allocation budget (<64 MB traced peak from any ≤2 KB
-payload) and a wall-time guard.
+return None / a well-formed value without raising (the decoders'
+strict contract: a malformed payload is None, never an exception),
+under a hard per-call allocation budget (<64 MB traced peak from any
+≤2 KB payload) and a wall-time guard.
 
 Deterministic: random.Random(42) — a failure reproduces by index.
 """
@@ -132,10 +133,8 @@ def test_fuzz_corpus_none_or_raise_under_budget():
                 t0 = time.perf_counter()
                 try:
                     fn(payload)
-                except MemoryError:
-                    failures.append(f"#{i} {name}: MemoryError")
-                except Exception:
-                    pass  # clean raise is acceptable
+                except Exception as e:  # noqa: BLE001
+                    failures.append(f"#{i} {name}: raised {e!r}")
                 elapsed = time.perf_counter() - t0
                 _, peak = tracemalloc.get_traced_memory()
                 if peak > MAX_ALLOC:

@@ -905,17 +905,6 @@ def test_contamination_short_docs_never_flagged(spark):
     assert got == {2}  # doc 1 is shorter than the shingle width
 
 
-def test_quality_filter_tiers_equivalent(spark):
-    """The zero-shuffle run-length-fold tier must produce the exact
-    verdict of the explode->groupBy tier on the real corpus."""
-    from ark_invest_api_rust_data_spark.operators.text import quality_filter
-
-    docs = load_table(spark, SF, "documents")
-    a = {r["doc_id"]: (r["keep"], r["reason"]) for r in quality_filter(docs, tier="expr").collect()}
-    b = {r["doc_id"]: (r["keep"], r["reason"]) for r in quality_filter(docs, tier="fused").collect()}
-    assert a == b and len(a) > 0
-
-
 def test_jaccard_prefix_equals_exact_cross_join(spark):
     """jaccard_prefix_pairs must return EXACTLY the O(n²) tier's rows
     (same pairs, same jc) — the completeness of the prefix+length
@@ -1113,8 +1102,14 @@ def test_dsir_weights_matches_python_reference(spark):
     bucket counts for raw and target, integer fixed-point log2 ratio
     lambda = bitlen(((ct+1)<<shift) // (cr+1)) - 1 - shift, per-doc
     token-sum — including negative lambdas (bucket rarer in target)
-    and the DIV-to-zero clamp."""
+    and the DIV-to-zero clamp. Edge rows pin the \\s tokenizer (tab,
+    double space), the codepoint fold on non-ASCII tokens, and the
+    omission of empty docs; frozen-λ batch scoring against a model
+    trained on a subset scores never-seen buckets with the λ=0
+    prior."""
     from ark_invest_api_rust_data_spark.operators.importance import (
+        dsir_lambda,
+        dsir_score_batch,
         dsir_select,
         dsir_weights,
     )
@@ -1125,6 +1120,9 @@ def test_dsir_weights_matches_python_reference(spark):
         (3, "zz9 zz9 zz9 noise junk", "xx"),
         (4, "prose clean good", "xx"),
         (5, "   ", "xx"),
+        (6, "alpha beta\tgamma  delta alpha", "en"),
+        (7, "beta beta café résumé", "en"),
+        (8, "", "xx"),
     ]
     df = spark.createDataFrame(docs, "doc_id long, text string, lang string")
     d, shift = 16, 20
@@ -1140,27 +1138,33 @@ def test_dsir_weights_matches_python_reference(spark):
             h = (h * 31 + ord(ch)) % 4294967296
         return h
 
-    cr, ct = {}, {}
-    for doc_id, text, lang in docs:
-        for t in text.split():
-            b = h32(t) % d
-            cr[b] = cr.get(b, 0) + 1
-            if lang == "en":
-                ct[b] = ct.get(b, 0) + 1
-    lam = {
-        b: max((ct.get(b, 0) + 1) * (1 << shift) // (cr[b] + 1), 1).bit_length()
-        - 1
-        - shift
-        for b in cr
-    }
-    want = {}
-    for doc_id, text, lang in docs:
-        toks = [t for t in text.split() if t]
-        if not toks:
-            continue
-        want[doc_id] = (len(toks), sum(lam[h32(t) % d] for t in toks))
+    def model(rows):
+        cr, ct = {}, {}
+        for doc_id, text, lang in rows:
+            for t in text.split():
+                b = h32(t) % d
+                cr[b] = cr.get(b, 0) + 1
+                if lang == "en":
+                    ct[b] = ct.get(b, 0) + 1
+        return {
+            b: max((ct.get(b, 0) + 1) * (1 << shift) // (cr[b] + 1), 1)
+            .bit_length()
+            - 1
+            - shift
+            for b in cr
+        }
+
+    def score(rows, lam):
+        out = {}
+        for doc_id, text, lang in rows:
+            toks = [t for t in text.split() if t]
+            if toks:
+                out[doc_id] = (len(toks), sum(lam.get(h32(t) % d, 0) for t in toks))
+        return out
+
+    want = score(docs, model(docs))
     assert got == want
-    assert 5 not in got  # zero-token doc omitted
+    assert 5 not in got and 8 not in got  # zero-token docs omitted
     # target-like docs outscore the junk doc
     assert got[1][1] > got[3][1]
 
@@ -1168,6 +1172,18 @@ def test_dsir_weights_matches_python_reference(spark):
     rows = sorted((r["sel_rank"], r["doc_id"]) for r in sel.collect())
     by_score = sorted(want.items(), key=lambda kv: (-kv[1][1], kv[0]))[:2]
     assert rows == [(i + 1, doc_id) for i, (doc_id, _) in enumerate(by_score)]
+
+    # frozen model over docs 1-5: docs 6-7 carry buckets it never saw
+    ref = [r for r in docs if r[0] <= 5]
+    lam_ref = model(ref)
+    assert any(h32(t) % d not in lam_ref for t in "alpha beta gamma delta café résumé".split())
+    ref_df = df.filter("doc_id <= 5")
+    lam = dsir_lambda(ref_df, ref_df.filter("lang = 'en'"), d=d, shift=shift)
+    batch = {
+        r["doc_id"]: (r["n_tokens"], r["dsir_score"])
+        for r in dsir_score_batch(df, lam, d=d).collect()
+    }
+    assert batch == score(docs, lam_ref)
 
 
 def test_mmr_rerank_prefers_diverse_over_duplicate(spark):
@@ -1508,62 +1524,6 @@ def test_pair_ngram_overlap_releases_shingle_storage(spark):
     assert jsc.getPersistentRDDs().size() <= base
 
 
-def test_dsir_tier_equality_arrow_vs_expr(spark):
-    """The fused Arrow DSIR tier (vectorized char-fold hash, no
-    explode/join/shuffle) must be BIT-IDENTICAL to the expression
-    tier for the λ model, the weights (inner-join semantics: tokens
-    in buckets absent from λ drop from count AND sum), and the
-    frozen-λ batch scoring (left-join semantics: λ=0 prior, token
-    counted). Includes a non-ASCII token to pin codepoint-fold parity
-    and tab/multi-space boundaries to pin the \\s tokenizer."""
-    from ark_invest_api_rust_data_spark.operators.importance import (
-        dsir_lambda,
-        dsir_score_batch,
-        dsir_weights,
-    )
-
-    rows = [
-        (1, "alpha beta\tgamma  delta alpha"),
-        (2, "beta beta café résumé"),
-        (3, "zeta eta theta iota kappa"),
-        (4, ""),
-        (5, "alpha"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    target = docs.filter("doc_id IN (1, 2)")
-    d = 64
-
-    lam_a = sorted(
-        tuple(r) for r in dsir_lambda(docs, target, d=d, tier="arrow").collect()
-    )
-    lam_e = sorted(
-        tuple(r) for r in dsir_lambda(docs, target, d=d, tier="expr").collect()
-    )
-    assert lam_a == lam_e
-
-    w_a = sorted(
-        tuple(r) for r in dsir_weights(docs, target, d=d, tier="arrow").collect()
-    )
-    w_e = sorted(
-        tuple(r) for r in dsir_weights(docs, target, d=d, tier="expr").collect()
-    )
-    assert w_a == w_e
-    assert 4 not in {t[0] for t in w_a}  # empty doc omitted by both
-
-    lam = dsir_lambda(target, target, d=d, tier="arrow")  # subset model:
-    # docs 3/5 carry buckets the frozen table never saw (λ=0 prior)
-    b_a = sorted(
-        tuple(r)
-        for r in dsir_score_batch(docs, lam, d=d, tier="arrow").collect()
-    )
-    b_e = sorted(
-        tuple(r)
-        for r in dsir_score_batch(docs, lam, d=d, tier="expr").collect()
-    )
-    assert b_a == b_e
-    assert 3 in {t[0] for t in b_a}  # unseen-bucket doc still scored
-
-
 def test_dsir_fused_scoring_plan_has_no_shuffle(spark):
     """Plan-shape regression for the fused DSIR tier: scoring is one
     narrow mapInPandas over the scan — no token explode, no join, no
@@ -1840,8 +1800,8 @@ def test_segment_dedup_delimiter_mode(spark):
 
 
 def test_minhash_signature_arrow_tier_equals_expression_tier(spark):
-    """The vectorized signature tier (_SIG_ARROW_BOUND = 0 default,
-    one ArrowEvalPython over the hashed-shingle array) is a perf
+    """The vectorized signature tier (above _SIG_ARROW_BOUND = 16
+    hashes, one ArrowEvalPython over the hashed-shingle array) is a perf
     shape, not a semantic change: (_id, _sh, _sig) must be
     bit-identical to the interpreted pmod + 16×array_min(transform)
     fold it replaces — including NULL text and sub-n-token documents

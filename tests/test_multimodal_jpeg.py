@@ -113,6 +113,10 @@ def test_rejects_junk_truncation_progressive():
     # 16-bit quant table precision → strict None
     j = blob.index(b"\xff\xdb") + 4
     assert decode_jpeg(blob[:j] + bytes([0x10]) + blob[j + 1 :]) is None
+    # DHT declaring three 1-bit codes (only two exist): malformed table
+    dht = bytes.fromhex("FFD8" "FFC4" "0016" "00" "03" + "00" * 15 + "010203")
+    assert decode_jpeg(dht) is None
+    assert decode_jpeg(dht) is None  # cached verdict, same answer
 
 
 def test_rejects_implausible_declared_dims():

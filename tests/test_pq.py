@@ -188,7 +188,7 @@ def test_fused_ivfpq_trainer_equals_split_trainers(spark):
 
 
 def test_fused_trainer_falls_back_above_arrow_bound(spark):
-    """Above kmeans_fit's Arrow bound the fused expression tier would
+    """Above _FUSED_TRAIN_BOUND the fused expression tier would
     interpret a corpus-sized fold — the trainer must delegate to the
     split trainers (combined is None) and still return their outputs."""
     from ark_invest_api_rust_data_spark.operators import pq as pq_mod
@@ -527,11 +527,11 @@ def test_pq_stream_ingest_lake_exactly_once_and_pruned(spark, tmp_path):
 
 
 def test_pq_arrow_tier_equals_expression_tier(spark):
-    """The NumPy assignment/update tier (_PQ_ARROW_BOUND = 0 default)
-    is a perf shape, not a semantic change: codebooks, codes, coarse
-    centroids/assignments and frozen batch encodes must all be
-    bit-identical to the interpreted _assign_expr fold tier it
-    replaces (same coordinate-ascending IEEE accumulation, same
+    """The NumPy assignment/update tier (above _PQ_ARROW_BOUND = 16384
+    codebook coordinates) is a perf shape, not a semantic change:
+    codebooks, codes, coarse centroids/assignments and frozen batch
+    encodes must all be bit-identical to the interpreted _assign_expr
+    fold tier below the bound (same coordinate-ascending IEEE accumulation, same
     first-min argmin, same exact int64 update sums)."""
     from ark_invest_api_rust_data_spark.operators import pq as pq_mod
     from ark_invest_api_rust_data_spark.operators.pq import (

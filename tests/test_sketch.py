@@ -297,18 +297,21 @@ def test_corpus_overlap_empty_side_raises(spark):
         corpus_overlap(keys, empty, "sh", k=8)
 
 
-def test_token_hash32_vec_bit_identical_to_expression(spark):
-    """The vectorized (pandas UDF) char-fold must equal the expression
-    fold BIT for bit on real corpus shingles plus crafted edges
-    (empty string, nulls, multi-char unicode)."""
+def test_token_hash32_matches_python_reference(spark):
+    """The expression char-fold equals h = (h·31 + ord(ch)) mod 2³² in
+    Python on real corpus shingles plus crafted edges (empty string,
+    null, multi-char unicode)."""
     import pyspark.sql.functions as F
 
     from ark_invest_api_rust_data_spark.catalog import load_table
     from ark_invest_api_rust_data_spark.operators.dedup import word_shingles
-    from ark_invest_api_rust_data_spark.operators.text import (
-        token_hash32,
-        token_hash32_vec,
-    )
+    from ark_invest_api_rust_data_spark.operators.text import token_hash32
+
+    def h32(tok):
+        h = 0
+        for ch in tok:
+            h = (h * 31 + ord(ch)) % 4294967296
+        return h
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
     keys = docs.select(
@@ -319,14 +322,11 @@ def test_token_hash32_vec_bit_identical_to_expression(spark):
             "k string",
         )
     )
-    out = keys.select(
-        "k",
-        token_hash32(F.col("k")).alias("_e"),
-        token_hash32_vec()(F.col("k")).alias("_v"),
-    ).collect()
+    out = keys.select("k", token_hash32(F.col("k")).alias("_e")).collect()
     assert len(out) > 1000
     for r in out:
-        assert r["_e"] == r["_v"], repr(r["k"])
+        want = None if r["k"] is None else h32(r["k"])
+        assert r["_e"] == want, repr(r["k"])
 
 
 def test_corpus_overlap_docs_equals_split_pipeline(spark):
@@ -398,27 +398,3 @@ def test_corpus_overlap_docs_empty_side_raises(spark):
     )
     with pytest.raises(ValueError, match="keys_b has no keys"):
         corpus_overlap_docs(df, "text", "_en", n=3, k=8)
-
-
-def test_kmins_sketch_arrow_tier_equals_expression(spark):
-    """kmins_sketch(arrow=True) registers == the expression tier's, on
-    the grouped shingle sketch the overlap probe runs."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.catalog import load_table
-    from ark_invest_api_rust_data_spark.operators.dedup import word_shingles
-    from ark_invest_api_rust_data_spark.operators.sketch import kmins_sketch
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    sh = docs.select(
-        "lang", F.explode(word_shingles(F.col("text"), 3)).alias("sh")
-    )
-    a = {
-        r["lang"]: list(r["mins"])
-        for r in kmins_sketch(sh, "sh", ["lang"], 32, arrow=True).collect()
-    }
-    b = {
-        r["lang"]: list(r["mins"])
-        for r in kmins_sketch(sh, "sh", ["lang"], 32, arrow=False).collect()
-    }
-    assert a == b and len(a) >= 2

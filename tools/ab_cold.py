@@ -13,7 +13,7 @@ ambient host drift cancels. Reports per-rep numbers and the min.
 
 Usage:
   python tools/ab_cold.py --reps 3 \
-      --env SPARK_GRAFT_SIG_ARROW_BOUND=0:1000000 \
+      --env SPARK_GRAFT_CPUS=4:8 \
       [--env K=VA:VB ...] -- QUERY [QUERY ...]
 
 The first value of each --env is variant A, the second variant B.

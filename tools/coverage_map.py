@@ -21,9 +21,9 @@ TEST_ONLY = {
     "llm_semantic_dedup_scaled (r4) is SemDeDup's production path — "
     "k = ceil(n/32) derived from the corpus (oracle derives the same k "
     "via a count subquery in the seed LIMIT), bounded cluster sizes, "
-    "pair-count-linearity pytest, broadcast-coords assignment as the "
-    "default at every k (the flattened-literal tier is kept only as "
-    "the bit-equality test reference), assignments= hook reusing IVF "
+    "pair-count-linearity pytest, vectorized (Arrow) assignment "
+    "against a broadcast centroid matrix at every k, assignments= "
+    "hook reusing IVF "
     "centroids; llm_semantic_dedup_ivf (r5) hash-checks the "
     "IvfIndex.build_exact → assignments= composition (index clustered "
     "once, dedup reuses it at zero extra clustering cost) against the "

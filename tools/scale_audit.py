@@ -72,7 +72,7 @@ def main() -> None:
         i = argv.index("--sfs")
         sfs = argv[i + 1].split(",")
         argv = argv[:i] + argv[i + 2 :]
-    if "--only" in argv:  # audit a probe subset (merge with merge_audits)
+    if "--only" in argv:  # audit a probe subset
         i = argv.index("--only")
         only = argv[i + 1].split(",")
         argv = argv[:i] + argv[i + 2 :]
