@@ -5,14 +5,16 @@ folds 11 per-security fixups over the frame. The core primitive,
 ``get_expr`` (ticker.rs:48-72), is subtle: a rule that matches on
 ``company`` writes the new value to BOTH ticker and company, and the
 generated expression ORDER matters because one of the two assignments
-overwrites the condition column — each with_columns step must evaluate
-its condition against the PRE-step value. Spark's ``withColumns``
-(plural) has exactly those semantics: all expressions see the input
-row, so each step is one withColumns call.
+overwrites the condition column — each with_columns step evaluates its
+condition against the PRE-step value.
 
-Rules are declarative data; ``apply_security_rules`` compiles them to a
-chain of narrow projections — all built-in when/otherwise, fully
-codegen'd, no shuffle.
+Every rule tests ``company`` against a literal and assigns literals, so
+the ordered fold is a function of the starting ``company`` alone.
+``apply_security_rules`` runs that fold on the driver once per match
+literal and emits the outcome as one ``withColumns``: one
+``CASE company WHEN …`` per target column, all reading the input row.
+The result equals the sequential fold by construction, cascades
+included (``ROCKET LAB USA`` → ``ROCKET LAB`` without gaining a ticker).
 """
 
 from __future__ import annotations
@@ -25,25 +27,24 @@ from pyspark.sql import DataFrame
 
 @dataclass(frozen=True)
 class Rule:
-    """One with_columns step: when(match_col == match_val) then set
-    each target column to its new value, else keep."""
+    """One with_columns step: when(company == match_val) then set each
+    target column to its new value, else keep."""
 
-    match_col: str  # column the condition tests ("company" or "ticker")
-    match_val: str  # literal the condition compares against
+    match_val: str  # literal the company condition compares against
     sets: tuple[tuple[str, str], ...]  # (target_col, new_value) pairs
 
 
 def _sync(match_val: str, new: str) -> Rule:
     """get_expr('company', …): set BOTH ticker and company."""
-    return Rule("company", match_val, (("ticker", new), ("company", new)))
+    return Rule(match_val, (("ticker", new), ("company", new)))
 
 
 def _set_ticker(match_val: str, new: str) -> Rule:
-    return Rule("company", match_val, (("ticker", new),))
+    return Rule(match_val, (("ticker", new),))
 
 
 def _set_company(match_val: str, new: str) -> Rule:
-    return Rule("company", match_val, (("company", new),))
+    return Rule(match_val, (("company", new),))
 
 
 # Ordered exactly as format::Ticker::all iterates the enum
@@ -79,24 +80,38 @@ SECURITY_RULES: list[Rule] = [
     # RKLB (R8): the reference runs both in one with_columns pass; the
     # first touches only ticker, so two sequential passes are
     # equivalent ('ROCKET LAB USA' must not gain a ticker — preserved).
-    Rule("company", "ROCKET LAB", (("ticker", "RKLB"),)),
-    Rule("company", "ROCKET LAB USA", (("company", "ROCKET LAB"),)),
+    _set_ticker("ROCKET LAB", "RKLB"),
+    _set_company("ROCKET LAB USA", "ROCKET LAB"),
 ]
 
 
+def _fold_rules(company: str, rules: list[Rule]) -> dict[str, str]:
+    """The sequential fold from one starting ``company``: returns the
+    literal each target column ends with (a target absent from the
+    result keeps its input value)."""
+    out: dict[str, str] = {}
+    for rule in rules:
+        if company == rule.match_val:  # tested before this pass assigns
+            out.update(rule.sets)
+            company = out.get("company", company)
+    return out
+
+
 def apply_security_rules(df: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
-    """R1 framework: fold every rule over the frame, one withColumns
-    pass per rule (all assignments in a pass read pre-pass values)."""
+    """R1 framework: the fold over ``rules``, compiled to one
+    withColumns with one CASE per target column."""
     if rules is None:
         rules = SECURITY_RULES
     if "company" not in df.columns or "ticker" not in df.columns:
         return df
-    for rule in rules:
-        cond = F.col(rule.match_col) == F.lit(rule.match_val)
-        df = df.withColumns(
-            {
-                target: F.when(cond, F.lit(new)).otherwise(F.col(target))
-                for target, new in rule.sets
-            }
-        )
-    return df
+    outcomes = {r.match_val: _fold_rules(r.match_val, rules) for r in rules}
+    cases: dict[str, F.Column] = {}
+    for target in dict.fromkeys(t for r in rules for t, _ in r.sets):
+        case = None
+        for val, out in outcomes.items():
+            if target in out:
+                cond, new = F.col("company") == F.lit(val), F.lit(out[target])
+                case = F.when(cond, new) if case is None else case.when(cond, new)
+        if case is not None:
+            cases[target] = case.otherwise(F.col(target))
+    return df.withColumns(cases)

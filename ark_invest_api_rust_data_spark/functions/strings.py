@@ -7,10 +7,10 @@ replace flavors exist there: replace-all and replace-FIRST-occurrence
 load-bearing (e.g. the " CO" rule fires before "CORPORATION" can).
 
 We encode each chain as a declarative rule table ``(pattern,
-replacement, first_only)`` and compile it to one chained Column
-expression — all built-ins (locate/substr/concat/replace), zero UDFs,
-so the whole chain stays inside whole-stage codegen and costs one
-projection pass per row at any scale.
+replacement, first_only)`` and compile it to one nested Column
+expression — all built-ins (replace/regexp_replace/rtrim), zero UDFs.
+Every step references its input exactly once, so the tree grows
+linearly with the chain and a whole chain is one projection.
 """
 
 from __future__ import annotations
@@ -88,25 +88,35 @@ COMPANY_RULES: list[tuple[str, str, bool]] = [
 ]
 
 
+def _java_quote(s: str) -> str:
+    """``java.util.regex.Pattern.quote``: the literal as a regex."""
+    return "\\Q" + s.replace("\\E", "\\E\\\\E\\Q") + "\\E"
+
+
+def _java_quote_replacement(s: str) -> str:
+    """``java.util.regex.Matcher.quoteReplacement``: the literal as a
+    replacement string (``\\`` and ``$`` escaped)."""
+    return s.replace("\\", "\\\\").replace("$", "\\$")
+
+
 def replace_first(c: Column, pattern: str, replacement: str) -> Column:
     """Replace only the FIRST literal occurrence of ``pattern`` —
     Polars ``str.replace`` semantics, which Spark lacks (its
-    replace/regexp_replace are replace-all). Composed from
-    locate/substr/concat built-ins so it stays codegen'd."""
-    pos = F.locate(pattern, c)  # 1-based, 0 if absent
-    head = c.substr(F.lit(1), pos - F.lit(1))
-    tail = c.substr(pos + F.lit(len(pattern)), F.length(c))
-    return F.when(pos > 0, F.concat(head, F.lit(replacement), tail)).otherwise(c)
+    replace/regexp_replace are replace-all). The regex is the quoted
+    literal followed by ``(.*)`` in DOTALL mode: the search stops at the
+    first occurrence and the group swallows the rest of the string, so
+    no second match can start; the tail is put back through ``$1``.
+    ``c`` is referenced once, so chains of these nest linearly."""
+    return F.regexp_replace(
+        c,
+        "(?s)" + _java_quote(pattern) + "(.*)",
+        _java_quote_replacement(replacement) + "$1",
+    )
 
 
 def apply_rules(c: Column, rules: list[tuple[str, str, bool]]) -> Column:
-    """Fold an ordered rule table into one chained expression, ending
-    with the reference's trailing rstrip.
-
-    Column-level folding is only safe for SHORT chains: every
-    ``replace_first`` references its input ~6×, so nesting N of them
-    grows the expression tree ~6^N — use :func:`apply_rules_to_column`
-    (DataFrame-level, linear) for long chains like COMPANY_RULES."""
+    """Fold an ordered rule table into one nested expression, ending
+    with the reference's trailing rstrip."""
     for pattern, replacement, first_only in rules:
         if first_only:
             c = replace_first(c, pattern, replacement)
@@ -115,36 +125,17 @@ def apply_rules(c: Column, rules: list[tuple[str, str, bool]]) -> Column:
     return F.rtrim(c)
 
 
-def apply_rules_to_column(df, colname: str, rules: list[tuple[str, str, bool]]):
-    """DataFrame-level rule chain: consecutive replace-ALL rules fuse
-    into one expression (linear growth, single-reference, so Catalyst
-    happily collapses them); each replace-FIRST rule becomes its own
-    projection step (its input is referenced several times, which
-    CollapseProject correctly refuses to inline — keeping the plan
-    polynomial instead of the 6^N blowup of naive nesting)."""
-    pending: Column = F.col(colname)
-    for pattern, replacement, first_only in rules:
-        if first_only:
-            df = df.withColumn(colname, pending)
-            df = df.withColumn(colname, replace_first(F.col(colname), pattern, replacement))
-            pending = F.col(colname)
-        else:
-            pending = F.replace(pending, F.lit(pattern), F.lit(replacement))
-    return df.withColumn(colname, F.rtrim(pending))
-
-
 def company_chain_fused(c: Column) -> Column:
     """Single-pass FUSED variant of the C7 chain: one Arrow-batched
     pandas UDF running the whole ordered rule table in Python string
     ops per batch.
 
-    MEASURED (sf0.1, 186k rows, local[32], min-of-2 after warmup):
-    fused UDF 1.5s vs expression tier 3.8s — the fused pass wins ~2.5×.
-    The JVM chain pays an allocation per string op (~50/row); CPython's
-    ``str.replace`` returns the original object when the pattern is
-    absent, so most of the 50 steps are a C-speed scan with no copy.
-    Hoisting ``locate`` into its own projection was also tried: 3.7s —
-    the cost is allocation churn, not redundant scans.
+    MEASURED (parity_company_bulk at sf0.1, 188k rows, 4-core host,
+    local[4], tools/bench_subset.py min-of-2): fused UDF 1.8-2.5 s vs
+    expression tier 7.1-7.7 s. The JVM chain pays an allocation per
+    string op (~50/row); CPython's ``str.replace`` returns the original
+    object when the pattern is absent, so most of the 50 steps are a
+    C-speed scan with no copy.
 
     Therefore this IS the bulk/corpus-scale tier (``clean_company_df``
     ``tier="fused"``); the expression tier remains the default for the
@@ -174,21 +165,25 @@ def company_chain_fused(c: Column) -> Column:
 
 
 def clean_ticker(c: Column) -> Column:
-    """C6: strip exchange suffixes, fix DKNN→DKNG (first occ), rstrip.
-    Short chain (one first-only rule) → safe as a single expression."""
+    """C6: strip exchange suffixes, fix DKNN→DKNG (first occ), rstrip."""
     return apply_rules(c, TICKER_RULES)
 
 
+def clean_company(c: Column) -> Column:
+    """C7: the ~50-step ordered company canonicalization chain."""
+    return apply_rules(c, COMPANY_RULES)
+
+
 def clean_company_df(df, colname: str = "company", tier: str = "expr"):
-    """C7: the ~50-step ordered company canonicalization chain.
+    """C7 (:func:`clean_company`) over one column of ``df``.
 
     ``tier="expr"`` (default) — codegen'd built-in expressions, no
     Python workers; right for the per-ticker parity pipeline.
-    ``tier="fused"`` — single-pass Arrow pandas UDF; measured ~2.5×
+    ``tier="fused"`` — single-pass Arrow pandas UDF; measured 3-4×
     faster at corpus scale (see company_chain_fused). Identical output
     (oracle-verified both ways)."""
     if tier not in ("expr", "fused"):  # typo'd tier must not silently
         raise ValueError(f"tier must be 'expr' or 'fused', got {tier!r}")
     if tier == "fused":
         return df.withColumn(colname, company_chain_fused(F.col(colname)))
-    return apply_rules_to_column(df, colname, COMPANY_RULES)
+    return df.withColumn(colname, clean_company(F.col(colname)))

@@ -6,6 +6,12 @@ checks (free in Spark — no action). The only action inside is the tiny
 date-format-budget aggregate (C1), and only when ``date`` arrives as a
 string.
 
+The plan stays flat: the security rules compile to one projection (one
+CASE per target column, functions/rules.py), and the casts plus both
+string chains to another (each chain one linearly nested expression,
+functions/strings.py), so a call adds a handful of DataFrame ops and
+three composed calls stay cheap to analyze.
+
 Convergence, not one-shot idempotence: security rules run BEFORE the
 C7 company cleanup (same order as the reference, util.rs:240), so rule
 cascades can need several passes — e.g. ``ROCKET LAB USA INC`` →
@@ -35,7 +41,7 @@ from ..functions.casts import (
     thousands_to_long,
 )
 from ..functions.rules import apply_security_rules
-from ..functions.strings import clean_company_df, clean_ticker
+from ..functions.strings import clean_company, clean_ticker
 from .adapters import DataSource, apply_provider_adapters
 
 CANONICAL_COLS = [
@@ -115,8 +121,8 @@ def normalize(df: DataFrame, source: DataSource | None = None) -> DataFrame:
         if required not in df.columns:
             raise ValueError(f"normalize: required column '{required}' missing")
     casts["ticker"] = clean_ticker(F.col("ticker"))
+    casts["company"] = clean_company(F.col("company"))
     df = df.withColumns(casts)
-    df = clean_company_df(df, "company")
 
     # P4 — drop rows whose date failed to parse (util.rs:434)
     if "date" in df.columns:

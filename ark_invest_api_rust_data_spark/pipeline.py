@@ -101,10 +101,8 @@ def refresh_ticker(
     else:
         write_ticker(merged, root, ticker.name)
     # return the parquet-backed cache, not the in-memory plan: same rows,
-    # but callers get a narrow scan with working predicate pushdown.
-    # Pushing a filter through the composed rule-chain projections makes
-    # Catalyst substitute the ~50-step replace expression into the
-    # predicate at every level — an optimizer-time blowup.
+    # but callers get a narrow scan with working predicate pushdown
+    # instead of re-running three composed normalizer passes.
     return read_ticker(spark, root, ticker.name)
 
 
@@ -124,12 +122,6 @@ def csv_backfill(
     cache = read_ticker(spark, root, ticker.name)
     if cache is not None:
         df = concat_dedupe([normalize(cache), normalize(df)])
-        # composing the ~50-step company chain 3× multiplies the
-        # Catalyst expression tree to ~O(chain³) nodes and OOMs the
-        # optimizer; a lazy localCheckpoint swaps the analyzed subtree
-        # for a plan cut. Backfill frames are per-ticker holdings
-        # (MB-scale), so losing pushdown across the cut costs nothing.
-        df = df.localCheckpoint(eager=False)
     # reference backfill formats the concat AND the write path again
     # (util.rs:555-572 → csv_merge .format() + write_parquet .format()),
     # so rule cascades get the same number of passes as refresh_ticker —

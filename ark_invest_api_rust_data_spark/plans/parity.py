@@ -378,7 +378,8 @@ def _chain_oracle_layers(rules: list[tuple[str, str, bool]]) -> list[str]:
     growth); each replace-FIRST rule gets its own layer because its
     CASE/strpos/substr form references ``c`` several times — nesting
     those would grow the SQL text exponentially, layering keeps it
-    linear. Mirrors apply_rules_to_column's plan-shape argument."""
+    linear. Written independently of the engine's regex form of
+    replace-first (functions/strings.py), so the two check each other."""
     layers: list[str] = []
     pending = "c"
     for pat, rep, first in rules:
@@ -437,9 +438,9 @@ def _company_bulk_input(spark: SparkSession, sf: str) -> DataFrame:
 
 
 def parity_company_bulk(spark: SparkSession, sf: str) -> DataFrame:
-    """C7 chain at sf-proportional row count (~600k rows/sf0.1):
-    uppercased l_comment pushed through the full ordered rule table in
-    the codegen'd expression tier. This is the ROADMAP #2 fusion
+    """C7 chain at sf-proportional row count (~188k rows at sf0.1):
+    the uppercased document windows of _company_bulk_input pushed
+    through the full ordered rule table in the expression tier. This is the ROADMAP #2 fusion
     benchmark subject — same oracle as the fused-UDF twin below, bench
     records both so the expression-vs-UDF margin is tracked per round."""
     return clean_company_df(_company_bulk_input(spark, sf)).select("id", "company")

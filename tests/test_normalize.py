@@ -12,8 +12,12 @@ import pyspark.sql.functions as F
 import pytest
 from pyspark.sql import types as T
 
-from ark_invest_api_rust_data_spark.functions.rules import apply_security_rules
-from ark_invest_api_rust_data_spark.functions.strings import clean_company_df, clean_ticker
+from ark_invest_api_rust_data_spark.functions.rules import SECURITY_RULES, apply_security_rules
+from ark_invest_api_rust_data_spark.functions.strings import (
+    clean_company_df,
+    clean_ticker,
+    replace_first,
+)
 from ark_invest_api_rust_data_spark.operators.adapters import DataSource
 from ark_invest_api_rust_data_spark.operators.normalize import normalize
 
@@ -100,6 +104,130 @@ def test_security_rule_matrix(spark, name, in_t, in_c, exp_t, exp_c):
     out = apply_security_rules(default_df(spark, in_t, in_c))
     expected = default_df(spark, exp_t, exp_c)
     assert as_rows(out) == as_rows(expected)
+
+
+def _sequential_fold(ticker, company, rules=SECURITY_RULES):
+    """The reference's rule loop, one with_columns pass per rule: the
+    condition reads the pre-pass company, then the pass assigns."""
+    for rule in rules:
+        if company is not None and company == rule.match_val:
+            sets = dict(rule.sets)
+            ticker = sets.get("ticker", ticker)
+            company = sets.get("company", company)
+    return ticker, company
+
+
+def test_compiled_security_rules_equal_sequential_fold(spark):
+    """The one-CASE-per-column compilation equals the rule-by-rule fold
+    on every match literal, every value a rule writes (cascade outputs
+    fed back in), null and a non-matching value, under a null and a
+    non-null input ticker."""
+    companies = {r.match_val for r in SECURITY_RULES}
+    companies |= {new for r in SECURITY_RULES for _, new in r.sets}
+    companies = sorted(companies) + ["TESLA", "rocket lab", None]
+    rows = [
+        (i, t, c) for i, (t, c) in enumerate((t, c) for c in companies for t in ("T0", None))
+    ]
+    df = spark.createDataFrame(rows, "id int, ticker string, company string")
+    got = {r["id"]: (r["ticker"], r["company"]) for r in apply_security_rules(df).collect()}
+    assert got == {i: _sequential_fold(t, c) for i, t, c in rows}
+    # the cascade: ROCKET LAB USA loses "USA" but gains no ticker this pass
+    assert _sequential_fold(None, "ROCKET LAB USA") == (None, "ROCKET LAB")
+    assert _sequential_fold(None, "ROCKET LAB") == ("RKLB", "ROCKET LAB")
+
+
+def test_compiled_rules_follow_cascades_inside_one_fold(spark):
+    """A rule whose output another, later rule matches: the compiled
+    CASE must follow the cascade in rule order, and not backwards."""
+    from ark_invest_api_rust_data_spark.functions.rules import Rule
+
+    forward = [Rule("A", (("company", "B"),)), Rule("B", (("ticker", "T"), ("company", "C")))]
+    backward = list(reversed(forward))
+    rows = [(i, "t", c) for i, c in enumerate(["A", "B", "C", None])]
+    df = spark.createDataFrame(rows, "id int, ticker string, company string")
+    for rules in (forward, backward):
+        got = {
+            r["id"]: (r["ticker"], r["company"])
+            for r in apply_security_rules(df, rules).collect()
+        }
+        assert got == {i: _sequential_fold(t, c, rules) for i, t, c in rows}
+    assert _sequential_fold("t", "A", forward) == ("T", "C")
+    assert _sequential_fold("t", "A", backward) == ("t", "B")
+
+
+REPLACE_FIRST_CASES = [
+    # (input, pattern, replacement): regex metacharacters in the pattern
+    ("a.b.c", ".", "X"),
+    ("a$b$c", "$", "D"),
+    ("50%5%", "%", ""),
+    ("f(x)(y)", "(", "["),
+    ("A & B & C", "&", "and"),
+    ("x\\y\\z", "\\", "/"),
+    ("a\\Eb\\Ec", "\\E", "-"),
+    ("a.*b", ".*", "?"),
+    # replacement metacharacters: group references and backslashes
+    ("aXbXc", "X", "$1"),
+    ("aXbXc", "X", "\\"),
+    ("aXbXc", "X", "$0\\1"),
+    # edges
+    ("", "X", "Y"),
+    ("XAB", "X", "Y"),
+    ("ABX", "X", "Y"),
+    ("HLDGS HLDGS", "HLDGS", ""),
+    ("line1 DR\nDR line2", "DR", "*"),
+    ("A\nB", "Z", "*"),
+    ("café DR résumé DR", "é", "e"),
+    ("日本 DR 日本", " DR", ""),
+    ("no match", "DR", ""),
+]
+
+
+def test_replace_first_is_python_replace_once(spark):
+    """replace_first is a regex under the hood; the quoting must keep
+    it literal: equal to Python ``s.replace(p, r, 1)`` on every case,
+    and null in gives null out."""
+    rows = [(i, s) for i, (s, _, _) in enumerate(REPLACE_FIRST_CASES)] + [(-1, None)]
+    df = spark.createDataFrame(rows, "id int, s string")
+    out = df.select(
+        "id",
+        *[
+            replace_first(F.col("s"), p, r).alias(f"c{i}")
+            for i, (_, p, r) in enumerate(REPLACE_FIRST_CASES)
+        ],
+    ).collect()
+    for row in out:
+        i = row["id"]
+        if i < 0:
+            assert all(v is None for v in list(row)[1:])
+            continue
+        s, p, r = REPLACE_FIRST_CASES[i]
+        assert row[f"c{i}"] == s.replace(p, r, 1), (s, p, r)
+
+
+# normalize(normalize(normalize(api frame))) analyzes to 14 Project
+# nodes; rule-per-projection compilation gave 185. A per-rule or
+# per-replace-first projection coming back pushes this past the bound.
+MAX_TRIPLE_NORMALIZE_PROJECTS = 14
+
+
+def test_triple_normalize_plan_stays_flat(spark):
+    import json
+    import re
+
+    from ark_invest_api_rust_data_spark.sources.data_reader import json_to_df
+
+    records = [
+        {"company": c, "cusip": f"C{i}", "date": "2024-01-09", "market_value": 1000.0,
+         "share_price": 10.0, "shares": 100.0, "ticker": t, "weight": 1.5, "weight_rank": i}
+        for i, (t, c) in enumerate([("TSLA UW", "TESLA INC"), ("RKLB UW", "ROCKET LAB USA INC")])
+    ]
+    out = normalize(normalize(normalize(json_to_df(spark, json.dumps(records)))))
+    plan = out._jdf.queryExecution().analyzed().treeString()
+    projects = sum(1 for line in plan.splitlines() if re.match(r"^[\s:+\-]*Project \[", line))
+    assert projects <= MAX_TRIPLE_NORMALIZE_PROJECTS, plan
+    assert {(r["ticker"], r["company"]) for r in out.collect()} == {
+        ("TSLA", "TESLA"), ("RKLB", "ROCKET LAB"),
+    }
 
 
 @pytest.mark.parametrize(
