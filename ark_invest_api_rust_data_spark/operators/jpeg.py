@@ -457,14 +457,16 @@ def _huff_lut(table: dict[tuple[int, int], int]) -> tuple[list, int]:
     """(lut, maxlen) for one Huffman table: lut[prefix] = (sym, length)
     for every maxlen-bit prefix, None for invalid prefixes. One peek +
     one consume replaces up to 16 single-bit reads per symbol — the
-    consumed bits are identical to ``_huff_decode``'s walk (a Huffman
-    code is prefix-free, so the first match IS the match)."""
+    consumed bits are identical to ``_huff_decode``'s walk. Codes fill
+    shortest first and never overwrite a slot, so on a table that is
+    not prefix-free the shortest matching code wins, as in the walk."""
     maxlen = max(length for length, _ in table)
     lut: list = [None] * (1 << maxlen)
-    for (length, code), sym in table.items():
+    for (length, code), sym in sorted(table.items()):
         base = code << (maxlen - length)
-        for i in range(1 << (maxlen - length)):
-            lut[base + i] = (sym, length)
+        for i in range(base, base + (1 << (maxlen - length))):
+            if lut[i] is None:
+                lut[i] = (sym, length)
     return lut, maxlen
 
 

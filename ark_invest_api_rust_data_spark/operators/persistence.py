@@ -180,10 +180,12 @@ class Materializer:
         out = df.localCheckpoint(eager=False)
         try:
             # the same internal-RDD count eager localCheckpoint runs
-            n = int(out._jdf.logicalPlan().rdd().count())
+            return out, int(out._jdf.logicalPlan().rdd().count())
         except Exception:
-            n = out.count()  # fallback: 2 AQE jobs, still correct
-        return out, n
+            # the plan no longer exposes the LogicalRDD: take the eager
+            # path, so the blocks are materialized on either branch
+            out = df.localCheckpoint(eager=True)
+            return out, out.count()
 
     def release(self, df: DataFrame) -> None:
         """Free the storage behind a ``cut`` frame we no longer need.

@@ -102,8 +102,9 @@ def refresh_ticker(
         write_ticker(merged, root, ticker.name)
     # return the parquet-backed cache, not the in-memory plan: same rows,
     # but callers get a narrow scan with working predicate pushdown
-    # instead of re-running three composed normalizer passes.
-    return read_ticker(spark, root, ticker.name)
+    # instead of re-running three composed normalizer passes. The
+    # written frame's schema spares the footer-inference job.
+    return read_ticker(spark, root, ticker.name, schema=merged.schema)
 
 
 def csv_backfill(
@@ -129,7 +130,7 @@ def csv_backfill(
     merged = canonical_sort(normalize(normalize(df)))
     write_ticker(merged, root, ticker.name)
     # parquet-backed return for the same reason as refresh_ticker
-    return read_ticker(spark, root, ticker.name)
+    return read_ticker(spark, root, ticker.name, schema=merged.schema)
 
 
 def scheduled_run(

@@ -5,7 +5,11 @@ per ETF per day) and stays on the driver, exactly like the reference's
 reqwest client (/root/reference/src/util/data_reader.rs:19-47). The
 parse then hands off to Spark (``spark.read.csv/json``) so everything
 downstream is distributed and schema-inferred the same way Polars
-inferred it.
+inferred it. JSON bodies reach Spark as a JVM-local ``Dataset[String]``
+rather than through ``sc.parallelize``: PySpark's ``read.json(RDD)``
+wraps the RDD in a Python ``mapPartitions``, so every job that scanned
+the fetched day (schema inference, the watermark aggregate, the
+dedupe shuffle) ran Python worker tasks over a few dozen rows.
 
 ``fetcher`` is injectable so tests run on recorded fixture bodies with
 zero network (SURVEY §5 — replaces the reference's live API tests).
@@ -96,10 +100,27 @@ def csv_to_df(spark: SparkSession, text: str) -> DataFrame:
 
 def json_to_df(spark: SparkSession, text: str) -> DataFrame:
     """JSON body → inferred DataFrame (S4). Accepts either a record
-    list or a single object (the arkfunds.io envelope)."""
+    list or a single object (the arkfunds.io envelope).
+
+    The records go to the JVM as a local ``Dataset[String]`` (a
+    ``LocalRelation``), not ``sc.parallelize``: on the JVM
+    ``read.json(RDD)`` is ``read.json(createDataset(rdd))``, so schema
+    inference and parsing are the same code, but no Python worker runs
+    in any job that scans the result. The records cross py4j as one
+    newline-joined string split on the JVM (``json.dumps`` never emits
+    a raw newline), which costs three round trips instead of one per
+    record."""
     parsed = json.loads(text)
     records = parsed if isinstance(parsed, list) else [parsed]
-    return spark.read.json(spark.sparkContext.parallelize([json.dumps(r) for r in records]))
+    jvm = spark._jvm
+    # no records split to one empty line, which the JSON reader skips
+    lines = (
+        jvm.java.util.regex.Pattern.compile("\n")
+        .splitAsStream("\n".join(json.dumps(r) for r in records))
+        .toList()
+    )
+    jds = spark._jsparkSession.createDataset(lines, jvm.org.apache.spark.sql.Encoders.STRING())
+    return DataFrame(spark._jsparkSession.read().json(jds), spark)
 
 
 def explode_holdings(df: DataFrame) -> DataFrame:

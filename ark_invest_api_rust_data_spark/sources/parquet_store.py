@@ -20,17 +20,24 @@ import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from ..session import tune
 
 
-def read_ticker(spark: SparkSession, root: str, ticker: str) -> DataFrame | None:
-    """S1 — lazy per-ticker cache scan; None if no cache (bootstrap)."""
+def read_ticker(
+    spark: SparkSession, root: str, ticker: str, schema: StructType | None = None
+) -> DataFrame | None:
+    """S1 — lazy per-ticker cache scan; None if no cache (bootstrap).
+    A caller that just wrote the file passes its ``schema``, which
+    skips the footer-inference job (file sources force nullability, so
+    the result matches an inferring read)."""
     tune(spark)
     path = f"{root}/{ticker}.parquet"
     if not os.path.exists(path):
         return None
-    return spark.read.parquet(path)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(path)
 
 
 def write_ticker(df: DataFrame, root: str, ticker: str) -> str:

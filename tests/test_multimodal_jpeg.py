@@ -11,6 +11,10 @@ from hypothesis import strategies as st
 
 from ark_invest_api_rust_data_spark.operators.jpeg import (
     QUANT,
+    _BitReader,
+    _huff_decode,
+    _huff_decode_lut,
+    _huff_lut,
     decode_jpeg,
     encode_jpeg,
     encode_jpeg_gray,
@@ -117,6 +121,29 @@ def test_rejects_junk_truncation_progressive():
     dht = bytes.fromhex("FFD8" "FFC4" "0016" "00" "03" + "00" * 15 + "010203")
     assert decode_jpeg(dht) is None
     assert decode_jpeg(dht) is None  # cached verdict, same answer
+
+
+@pytest.mark.parametrize("reverse", [False, True])
+def test_huff_lut_matches_walk_on_colliding_table(reverse):
+    """On a table that is not prefix-free ("0" and "00" both codes) the
+    walk takes the shortest match; the LUT must consume the same bits
+    and return the same symbols, whatever the table's insertion order
+    (DHT parsing inserts by increasing length)."""
+    items = [((1, 0b0), 5), ((2, 0b00), 7), ((2, 0b10), 9), ((3, 0b110), 11)]
+    table = dict(reversed(items) if reverse else items)
+    bits = "0010110010" * 4
+    data = int(bits, 2).to_bytes(len(bits) // 8, "big")
+    lut, maxlen = _huff_lut(table)
+
+    def decode_all(step):
+        r, out = _BitReader(data, 0), []
+        while (sym := step(r)) is not None:
+            out.append(sym)
+        return out
+
+    walk = decode_all(lambda r: _huff_decode(r, table))
+    assert walk == [5, 5, 9, 11, 5, 9] * 4
+    assert decode_all(lambda r: _huff_decode_lut(r, lut, maxlen, table)) == walk
 
 
 def test_rejects_implausible_declared_dims():

@@ -57,6 +57,32 @@ def test_local_cut_dies_on_block_loss(spark):
         cut.collect()
 
 
+def test_cut_counted_fallback_materializes_checkpoint(spark, monkeypatch):
+    """When the lazy checkpoint's plan does not expose its LogicalRDD
+    (the fast count raises), cut_counted takes the eager path: the
+    returned frame is materialized and the count is still right."""
+    lazy_calls = []
+
+    class _Opaque:  # a lazy checkpoint whose plan hides the LogicalRDD
+        @property
+        def _jdf(self):
+            raise RuntimeError("no LogicalRDD")
+
+    df = spark.range(500).select((F.col("id") * 3).alias("v"))
+    real = type(df).localCheckpoint
+
+    def fake(self, eager=True, storageLevel=None):
+        lazy_calls.append(eager)
+        return real(self, eager=True) if eager else _Opaque()
+
+    monkeypatch.setattr(type(df), "localCheckpoint", fake)
+    out, n = Materializer(spark, None).cut_counted(df)
+    assert lazy_calls == [False, True]
+    assert n == 500
+    assert out._jdf.logicalPlan().rdd().isCheckpointed()
+    assert sorted(r["v"] for r in out.collect()) == [3 * i for i in range(500)]
+
+
 def test_release_deletes_superseded_checkpoint_files(spark, tmp_path):
     d = str(tmp_path / "ckpt")
     mat = Materializer(spark, d)

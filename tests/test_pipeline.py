@@ -5,14 +5,20 @@ merge, provider adapters through the real ingestion path, sort order."""
 from __future__ import annotations
 
 import datetime
+import json
 
 import pyspark.sql.functions as F
+import pytest
 
 from ark_invest_api_rust_data_spark.operators.adapters import DataSource
 from ark_invest_api_rust_data_spark.operators.merge import canonical_sort, watermark
 from ark_invest_api_rust_data_spark.operators.normalize import normalize
-from ark_invest_api_rust_data_spark.pipeline import refresh_ticker
-from ark_invest_api_rust_data_spark.sources.data_reader import csv_to_df, json_to_df
+from ark_invest_api_rust_data_spark.pipeline import csv_backfill, refresh_ticker
+from ark_invest_api_rust_data_spark.sources.data_reader import (
+    csv_to_df,
+    explode_holdings,
+    json_to_df,
+)
 from ark_invest_api_rust_data_spark.sources.parquet_store import read_ticker, write_ticker
 from ark_invest_api_rust_data_spark.tickers import Source, Ticker
 
@@ -143,6 +149,66 @@ def test_json_api_shape(spark):
     r = out.first()
     assert r["share_price"] == 200.0 and r["shares"] == 5000
     assert out.columns[:4] == ["date", "ticker", "cusip", "company"]
+
+
+def _json_via_python_rdd(spark, text: str):
+    """The reader json_to_df replaced: records through sc.parallelize."""
+    parsed = json.loads(text)
+    records = parsed if isinstance(parsed, list) else [parsed]
+    return spark.read.json(spark.sparkContext.parallelize([json.dumps(r) for r in records]))
+
+
+_JSON_EDGES = {
+    "bigint_beyond_long": '[{"a": 12345678901234567890123, "b": 1}]',
+    "int_float_mix": '[{"x": 1, "y": 2.5}, {"x": 2.5, "y": 3}]',
+    "all_null_field": '[{"n": null, "a": 1}, {"n": null, "a": 2}]',
+    "nested": '[{"s": {"t": [1, 2], "u": {"v": "w"}}, "arr": [{"k": "v"}, {"k": null}]}]',
+    "non_ascii": '[{"company": "Caf\u00e9 \u6771\u4eac \u2014 S.A.", "e": "\ud83d\ude80"}]',
+    "empty_list": "[]",
+    "empty_object": "[{}]",
+    "non_object_element": '[1, {"a": 1}, "s"]',
+    "envelope": ARKFUNDSIO_JSON,
+    "api_page": API_JSON_PAGE2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(_JSON_EDGES))
+def test_json_to_df_matches_python_rdd_reader(spark, name):
+    """Same schema and rows as the sc.parallelize reader on every edge
+    input (Spark infers and parses the same way for both origins)."""
+    text = _JSON_EDGES[name]
+    got, want = json_to_df(spark, text), _json_via_python_rdd(spark, text)
+    if name == "envelope":
+        got, want = explode_holdings(got), explode_holdings(want)
+    assert got.schema == want.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+
+
+def test_json_to_df_runs_no_python_worker(spark):
+    """The fetched day reaches Spark as a JVM-local Dataset: no
+    PythonRDD in the lineage any job over it would run."""
+
+    def lineage(df):
+        return df._jdf.queryExecution().toRdd().toDebugString()
+
+    assert "PythonRDD" not in lineage(json_to_df(spark, API_JSON_PAGE2))
+    assert "PythonRDD" in lineage(_json_via_python_rdd(spark, API_JSON_PAGE2))
+
+
+def test_read_back_with_written_schema_equals_inferred_read(spark, tmp_path):
+    """refresh_ticker and csv_backfill return the cache read with the
+    written frame's schema (no footer inference). Schema (nullability
+    included) and rows equal a plain inferring read of the file."""
+    root = str(tmp_path / "parquet")
+    out = refresh_ticker(spark, Ticker.ARKK, Source.API_FULL, root, lambda url: API_JSON_PAGE2)
+    csv_root = tmp_path / "csv"
+    (csv_root / "ARKQ").mkdir(parents=True)
+    (csv_root / "ARKQ" / "part1.csv").write_text(ARK_CSV)
+    out2 = csv_backfill(spark, Ticker.ARKQ, str(csv_root), root)
+    for ticker, got in (("ARKK", out), ("ARKQ", out2)):
+        plain = spark.read.parquet(f"{root}/{ticker}.parquet")
+        assert got.schema == plain.schema
+        assert sorted(map(str, got.collect())) == sorted(map(str, plain.collect()))
 
 
 def test_lake_partitioned_roundtrip(spark, tmp_path):
@@ -289,8 +355,6 @@ def test_csv_backfill_roundtrip_with_cascade(spark, tmp_path):
     the backfill frame multiple times, so a multi-step company cascade
     (ROCKET LAB USA INC → ROCKET LAB USA → ROCKET LAB) must reach its
     fixpoint here too, on BOTH the bootstrap and the merge path."""
-    from ark_invest_api_rust_data_spark.pipeline import csv_backfill
-
     cascade_csv = "\n".join(
         ['date,fund,company,ticker,cusip,shares,"market value ($)","weight (%)"']
         + ['01/03/2024,ARKK,ROCKET LAB USA INC,RKLB UW,77312X108,100,"$1,000.00",1.00%']
