@@ -9,18 +9,31 @@ unlike the reference's eager ``collect()`` before every introspection
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaObject
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import types as T
+
+from .memo import jseq, per_jvm
 
 # Candidate formats, tried in order (/root/reference/src/util.rs:231-237).
 # None = engine inference (ISO) — Polars strptime(format=None) ≙ to_date(c).
 DATE_FORMATS: list[str | None] = ["M/d/yyyy", "yyyy/M/d", None]
 
 
-def _try_parse(c: Column, fmt: str | None) -> Column:
+@per_jvm
+def _try_parse(colname: str, fmt: str | None) -> Column:
     # try_to_date ≙ Polars strptime(strict=false): null on parse failure
     # (plain to_date THROWS under Spark 4's default ANSI mode).
+    c = F.col(colname)
     return F.try_to_date(c, fmt) if fmt is not None else F.try_to_date(c)
+
+
+@per_jvm
+def _budget_aggs(colname: str) -> list[Column]:
+    """Height plus the parsed count under every candidate format."""
+    return [F.count(F.lit(1)).alias("h")] + [
+        F.count(_try_parse(colname, fmt)).alias(f"ok_{i}") for i, fmt in enumerate(DATE_FORMATS)
+    ]
 
 
 def parse_date_with_budget(df: DataFrame, colname: str = "date") -> DataFrame:
@@ -35,21 +48,14 @@ def parse_date_with_budget(df: DataFrame, colname: str = "date") -> DataFrame:
     """
     if not isinstance(df.schema[colname].dataType, T.StringType):
         return df
-    c = F.col(colname)
-    stats = df.agg(
-        F.count(F.lit(1)).alias("h"),
-        *[
-            F.count(_try_parse(c, fmt)).alias(f"ok_{i}")
-            for i, fmt in enumerate(DATE_FORMATS)
-        ],
-    ).first()
+    stats = df.agg(*_budget_aggs(colname)).first()
     h = stats["h"]
     if h == 0:
         return df
     for i, fmt in enumerate(DATE_FORMATS):
         nulls = h - stats[f"ok_{i}"]
         if not nulls > h // 10:  # reference: reject iff null_count > height/10
-            return df.withColumn(colname, _try_parse(c, fmt))
+            return df.withColumn(colname, _try_parse(colname, fmt))
     return df  # all formats rejected → column stays string (parity)
 
 
@@ -85,17 +91,23 @@ def derive_share_price(mv: Column, shares: Column) -> Column:
     return F.round(mv.cast("double") / shares.cast("double"), 2)
 
 
+@per_jvm
+def _repair_projection(spec: tuple[tuple[str, str | None], ...]) -> JavaObject:
+    """JVM Seq of the output columns for ``(name, cast target or None)``."""
+    return jseq([F.col(n) if to is None else F.col(n).cast(to).alias(n) for n, to in spec])
+
+
 def repair_dtypes(df: DataFrame) -> DataFrame:
     """C9 — final dtype repair (/root/reference/src/util.rs:452-476):
     float→long for market_value/shares, long→double for
-    share_price/weight when mistyped."""
-    fields = {f.name: f.dataType for f in df.schema.fields}
-    out = []
-    for name in df.columns:
-        c = F.col(name)
-        if name in ("market_value", "shares") and isinstance(fields[name], T.DoubleType):
-            c = c.cast("long").alias(name)
-        elif name in ("share_price", "weight") and isinstance(fields[name], T.LongType):
-            c = c.cast("double").alias(name)
-        out.append(c)
-    return df.select(out)
+    share_price/weight when mistyped. The projection is built once per
+    JVM for each input schema."""
+    spec = []
+    for f in df.schema.fields:
+        to = None
+        if f.name in ("market_value", "shares") and isinstance(f.dataType, T.DoubleType):
+            to = "long"
+        elif f.name in ("share_price", "weight") and isinstance(f.dataType, T.LongType):
+            to = "double"
+        spec.append((f.name, to))
+    return DataFrame(df._jdf.select(_repair_projection(tuple(spec))), df.sparkSession)

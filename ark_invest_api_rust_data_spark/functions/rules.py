@@ -15,6 +15,8 @@ literal and emits the outcome as one ``withColumns``: one
 ``CASE company WHEN …`` per target column, all reading the input row.
 The result equals the sequential fold by construction, cascades
 included (``ROCKET LAB USA`` → ``ROCKET LAB`` without gaining a ticker).
+The CASEs of ``SECURITY_RULES`` are a per-JVM constant (functions/memo.py):
+each ``F.*`` call in them is a py4j round trip, ~975 for the table.
 """
 
 from __future__ import annotations
@@ -22,7 +24,10 @@ from __future__ import annotations
 from dataclasses import dataclass
 
 import pyspark.sql.functions as F
+from py4j.java_gateway import JavaObject
 from pyspark.sql import DataFrame
+
+from .memo import jseq, per_jvm
 
 
 @dataclass(frozen=True)
@@ -97,13 +102,8 @@ def _fold_rules(company: str, rules: list[Rule]) -> dict[str, str]:
     return out
 
 
-def apply_security_rules(df: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
-    """R1 framework: the fold over ``rules``, compiled to one
-    withColumns with one CASE per target column."""
-    if rules is None:
-        rules = SECURITY_RULES
-    if "company" not in df.columns or "ticker" not in df.columns:
-        return df
+def _compile(rules: list[Rule]) -> dict[str, F.Column]:
+    """The fold over ``rules`` as one CASE per target column."""
     outcomes = {r.match_val: _fold_rules(r.match_val, rules) for r in rules}
     cases: dict[str, F.Column] = {}
     for target in dict.fromkeys(t for r in rules for t, _ in r.sets):
@@ -114,4 +114,24 @@ def apply_security_rules(df: DataFrame, rules: list[Rule] | None = None) -> Data
                 case = F.when(cond, new) if case is None else case.when(cond, new)
         if case is not None:
             cases[target] = case.otherwise(F.col(target))
-    return df.withColumns(cases)
+    return cases
+
+
+@per_jvm
+def _default_cases() -> tuple[JavaObject, JavaObject]:
+    """JVM Seqs of the default table's target names and CASEs."""
+    cases = _compile(SECURITY_RULES)
+    return jseq(list(cases)), jseq(list(cases.values()))
+
+
+def apply_security_rules(df: DataFrame, rules: list[Rule] | None = None) -> DataFrame:
+    """R1 framework: the fold over ``rules``, compiled to one
+    withColumns with one CASE per target column. The default table's
+    CASEs are built once per JVM; an explicit ``rules`` list is
+    compiled per call."""
+    if "company" not in df.columns or "ticker" not in df.columns:
+        return df
+    if rules is not None:
+        return df.withColumns(_compile(rules))
+    targets, cases = _default_cases()
+    return DataFrame(df._jdf.withColumns(targets, cases), df.sparkSession)

@@ -10,7 +10,10 @@ We encode each chain as a declarative rule table ``(pattern,
 replacement, first_only)`` and compile it to one nested Column
 expression — all built-ins (replace/regexp_replace/rtrim), zero UDFs.
 Every step references its input exactly once, so the tree grows
-linearly with the chain and a whole chain is one projection.
+linearly with the chain and a whole chain is one projection. Building a
+tree is not free: each ``F.*`` call is a py4j round trip to the driver
+JVM, ~9 per step, so the normalizer builds both chains once per JVM
+(operators/normalize.py ``_trees``) instead of once per call.
 """
 
 from __future__ import annotations

@@ -32,6 +32,7 @@ that closed form from the source characters.
 from __future__ import annotations
 
 import math
+import threading
 
 # Annex K Table K.1 — luminance quantization, used for ALL components
 # (legal: SOF just points every component at table 0). q0 = 16.
@@ -453,34 +454,45 @@ def _huff_decode(r: _BitReader, table: dict[tuple[int, int], int]) -> int | None
     return None
 
 
+# LUT index width: codes up to this many bits decode with one peek;
+# longer ones (rare in practice) take the bitwise walk, so a table's LUT
+# holds at most 1024 slots whatever its DHT segment declares
+_LUT_BITS = 10
+
+
 def _huff_lut(table: dict[tuple[int, int], int]) -> tuple[list, int]:
-    """(lut, maxlen) for one Huffman table: lut[prefix] = (sym, length)
-    for every maxlen-bit prefix, None for invalid prefixes. One peek +
-    one consume replaces up to 16 single-bit reads per symbol — the
-    consumed bits are identical to ``_huff_decode``'s walk. Codes fill
-    shortest first and never overwrite a slot, so on a table that is
-    not prefix-free the shortest matching code wins, as in the walk."""
-    maxlen = max(length for length, _ in table)
-    lut: list = [None] * (1 << maxlen)
+    """(lut, bits) for one Huffman table: lut[prefix] = (sym, length)
+    for every ``bits``-bit prefix that starts a code of at most ``bits``
+    bits, None otherwise (a longer code or an invalid prefix). One peek
+    + one consume replaces up to ``bits`` single-bit reads per symbol —
+    the consumed bits are identical to ``_huff_decode``'s walk. Codes
+    fill shortest first and never overwrite a slot, so on a table that
+    is not prefix-free the shortest matching code wins, as in the walk."""
+    bits = min(_LUT_BITS, max(length for length, _ in table))
+    lut: list = [None] * (1 << bits)
     for (length, code), sym in sorted(table.items()):
-        base = code << (maxlen - length)
-        for i in range(base, base + (1 << (maxlen - length))):
+        if length > bits:
+            break
+        hit, base = (sym, length), code << (bits - length)
+        for i in range(base, base + (1 << (bits - length))):
             if lut[i] is None:
-                lut[i] = (sym, length)
-    return lut, maxlen
+                lut[i] = hit
+    return lut, bits
 
 
-def _huff_decode_lut(r: _BitReader, lut: list, maxlen: int, table) -> int | None:
+def _huff_decode_lut(r: _BitReader, lut: list, bits: int, table) -> int | None:
     """LUT-accelerated Huffman decode; falls back to the bitwise walk
-    when fewer than ``maxlen`` bits remain in the stream (codes shorter
-    than maxlen can still complete there)."""
-    if r.n < maxlen and not r._fill():
+    when fewer than ``bits`` bits remain in the stream (codes shorter
+    than that can still complete there) or when the prefix starts no
+    code of at most ``bits`` bits (a longer code, or None from the walk
+    for an invalid prefix)."""
+    if r.n < bits and not r._fill():
         return _huff_decode(r, table)
-    if r.n < maxlen:
+    if r.n < bits:
         return _huff_decode(r, table)
-    hit = lut[(r.acc >> (r.n - maxlen)) & ((1 << maxlen) - 1)]
+    hit = lut[(r.acc >> (r.n - bits)) & ((1 << bits) - 1)]
     if hit is None:
-        return None  # invalid prefix: the walk would also dead-end
+        return _huff_decode(r, table)
     sym, length = hit
     r.n -= length
     r.acc &= (1 << r.n) - 1
@@ -493,11 +505,28 @@ def _extend(v: int, size: int) -> int:
     return v
 
 
-# raw DHT segment bytes -> parsed {(tc,th): (tbl, lut, maxlen)}, or
-# _DHT_BAD for malformed segments; bounded at 256 entries (foreign /
-# fuzzed tables just stop being cached)
+# raw DHT segment bytes -> parsed {(tc,th): (tbl, lut, bits)}, or
+# _DHT_BAD for malformed segments; bounded by the bytes its entries keep
+# alive (foreign / fuzzed tables just stop being cached)
 _DHT_CACHE: dict[bytes, object] = {}
+_DHT_CACHE_BUDGET = 4 << 20
+_dht_cache_bytes = 0
+_dht_cache_lock = threading.Lock()
 _DHT_BAD = object()
+
+
+def _dht_cache_put(seg: bytes, entry) -> None:
+    """Cache ``entry`` unless it would take the cache past its budget.
+    An entry's size is estimated as its key, one pointer per LUT slot,
+    and ~100 B per table code (dict entry, key and hit tuples)."""
+    global _dht_cache_bytes
+    size = len(seg)
+    if entry is not _DHT_BAD:
+        size += sum(8 * len(lut or ()) + 100 * len(tbl) for tbl, lut, _ in entry.values())
+    with _dht_cache_lock:
+        if seg not in _DHT_CACHE and _dht_cache_bytes + size <= _DHT_CACHE_BUDGET:
+            _DHT_CACHE[seg] = entry
+            _dht_cache_bytes += size
 
 
 def decode_jpeg(b: bytes) -> tuple[int, int, bytes] | None:
@@ -560,8 +589,8 @@ def decode_jpeg(b: bytes) -> tuple[int, int, bytes] | None:
             # parsed-table cache keyed by the raw segment bytes: our
             # own encoder emits the same two fixed tables on every
             # frame, so a video decode re-parsed (and re-LUT'd) them
-            # per frame (r12, guide §4.5). Bounded; foreign tables
-            # just miss.
+            # per frame (r12, guide §4.5). Bounded by retained bytes;
+            # foreign tables past the budget just miss.
             cached = _DHT_CACHE.get(seg)
             if cached is not None:
                 if cached is _DHT_BAD:
@@ -583,16 +612,14 @@ def decode_jpeg(b: bytes) -> tuple[int, int, bytes] | None:
                         # its length is prefix-free, so the LUT and the
                         # bitwise walk consume the same bits
                         if i >= len(seg) or code >= 1 << length:
-                            if len(_DHT_CACHE) < 256:
-                                _DHT_CACHE[seg] = _DHT_BAD
+                            _dht_cache_put(seg, _DHT_BAD)
                             return None
                         tbl[(length, code)] = seg[i]
                         code += 1
                         i += 1
                     code <<= 1
                 parsed[(tc, th)] = (tbl, *(_huff_lut(tbl) if tbl else (None, 0)))
-            if len(_DHT_CACHE) < 256:
-                _DHT_CACHE[seg] = parsed
+            _dht_cache_put(seg, parsed)
             huff.update(parsed)
         elif marker == 0xDD:  # DRI
             dri = int.from_bytes(seg[0:2], "big")

@@ -1,9 +1,12 @@
 from __future__ import annotations
 
+import collections
 import os
 import sys
 
 import pytest
+from py4j.clientserver import ClientServerConnection
+from py4j.java_gateway import GatewayConnection
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -21,6 +24,27 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMOKE
+
+
+@pytest.fixture
+def py4j_commands(monkeypatch):
+    """Counts the py4j commands the driver sends while the test runs,
+    by command type: ``c`` a method call, ``r`` a reflection lookup
+    (class or function by name), ``i`` a constructor, and so on. Deletes
+    (``m``) are left out: they follow the Python GC, not the code under
+    test. ``clear()`` it after warming up; a budget is usually pinned on
+    ``counts["c"] + counts["r"]``."""
+    counts: collections.Counter = collections.Counter()
+    for cls in (ClientServerConnection, GatewayConnection):
+
+        def send_command(self, command, *args, _send=cls.send_command, **kwargs):
+            kind = command.split("\n", 1)[0]
+            if kind != "m":
+                counts[kind] += 1
+            return _send(self, command, *args, **kwargs)
+
+        monkeypatch.setattr(cls, "send_command", send_command)
+    return counts
 
 
 # Round-12 (VERDICT r11 item 7): the suite outgrew the driver's verify

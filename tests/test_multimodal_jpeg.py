@@ -146,6 +146,54 @@ def test_huff_lut_matches_walk_on_colliding_table(reverse):
     assert decode_all(lambda r: _huff_decode_lut(r, lut, maxlen, table)) == walk
 
 
+def _fresh_dht_cache(monkeypatch, budget=None):
+    from ark_invest_api_rust_data_spark.operators import jpeg as J
+
+    monkeypatch.setattr(J, "_DHT_CACHE", {})
+    monkeypatch.setattr(J, "_dht_cache_bytes", 0)
+    if budget is not None:
+        monkeypatch.setattr(J, "_DHT_CACHE_BUDGET", budget)
+    return J
+
+
+def _dht_blob(seg: bytes) -> bytes:
+    return b"\xff\xd8\xff\xc4" + (len(seg) + 2).to_bytes(2, "big") + seg
+
+
+def test_huff_lut_caps_slots_and_long_codes_take_the_walk(monkeypatch):
+    """An 18-byte DHT declaring one 16-bit code built a 65536-slot LUT;
+    the LUT index is capped at 10 bits (1024 slots), and codes longer
+    than that decode through the walk, consuming the same bits."""
+    J = _fresh_dht_cache(monkeypatch)
+    seg = bytes([0x00]) + bytes(15) + bytes([1]) + bytes([0x2A])
+    assert len(seg) == 18
+    assert decode_jpeg(_dht_blob(seg)) is None  # no frame; the table is parsed
+    ((table, lut, bits),) = J._DHT_CACHE[seg].values()
+    assert table == {(16, 0): 0x2A} and len(lut) <= 1024 and bits <= 10
+
+    def decode_all(data, step):
+        r, out = _BitReader(data, 0), []
+        while (sym := step(r)) is not None:
+            out.append(sym)
+        return out, r.pos, r.n
+
+    for data in (bytes(5), b"\x00\x00\x80\x00", b"\x00\x01\x00\x00"):
+        walk = decode_all(data, lambda r: _huff_decode(r, table))
+        assert decode_all(data, lambda r: _huff_decode_lut(r, lut, bits, table)) == walk
+    assert decode_all(bytes(5), lambda r: _huff_decode(r, table))[0] == [0x2A, 0x2A]
+
+
+def test_dht_cache_is_bounded_by_retained_bytes(monkeypatch):
+    """Distinct DHT segments stop being cached once their estimated
+    bytes reach the budget, whatever their count."""
+    J = _fresh_dht_cache(monkeypatch, budget=50_000)
+    for sym in range(200):
+        seg = bytes([0x00]) + bytes(15) + bytes([1]) + bytes([sym])
+        decode_jpeg(_dht_blob(seg))
+    assert 0 < len(J._DHT_CACHE) < 200
+    assert J._dht_cache_bytes <= 50_000
+
+
 def test_rejects_implausible_declared_dims():
     """ADVICE r5: a crafted tiny JPEG declaring 65535x65535 must be
     rejected BEFORE the per-component plane allocation (~4 GB per

@@ -230,6 +230,114 @@ def test_triple_normalize_plan_stays_flat(spark):
     }
 
 
+# py4j round trips (`c` + `r` commands) of a second normalize of a
+# canonical frame: 1,762 when every call rebuilt the constant trees and
+# column lists, 16 with them built once per JVM. Rebuilding the C7
+# company chain alone per call costs ~480 more.
+MAX_CANONICAL_NORMALIZE_ROUND_TRIPS = 120
+
+
+def test_normalize_round_trip_budget(spark, py4j_commands):
+    canon = normalize(default_df(spark, ["TSLA UW", "RKLB"], ["TESLA INC", "ROCKET LAB USA"]))
+    normalize(canon)
+    py4j_commands.clear()
+    normalize(canon)
+    round_trips = py4j_commands["c"] + py4j_commands["r"]
+    assert round_trips <= MAX_CANONICAL_NORMALIZE_ROUND_TRIPS, dict(py4j_commands)
+
+
+def test_trees_rebuild_when_the_gateway_changes(spark, monkeypatch):
+    """The memo is keyed on the live py4j gateway: a restarted JVM must
+    get new trees, not handles into the old one."""
+    from pyspark import SparkContext
+
+    from ark_invest_api_rust_data_spark.functions import rules
+    from ark_invest_api_rust_data_spark.operators import normalize as N
+
+    trees, cases = N._trees(), rules._default_cases()
+    assert N._trees() is trees and rules._default_cases() is cases
+    monkeypatch.setattr(SparkContext, "_gateway", object())
+    rebuilt = N._trees()
+    assert rebuilt is not trees and rules._default_cases() is not cases
+    assert str(rebuilt["company"]) == str(trees["company"])
+    assert N._trees() is rebuilt
+
+
+def test_concurrent_normalize_from_a_cold_memo_matches_serial(spark):
+    """scheduled_run normalizes on a thread pool: threads racing to
+    build the trees (more threads than the 4 local cores, with frequent
+    thread switches) get the same rows as a serial run, and all of them
+    the one memoized copy."""
+    import sys
+    import threading
+    from concurrent.futures import ThreadPoolExecutor
+
+    from ark_invest_api_rust_data_spark.functions import memo
+    from ark_invest_api_rust_data_spark.operators import normalize as N
+
+    frames = [
+        default_df(spark, [t], [c])
+        for t, c in [("TSLA UW", "TESLA INC"), (None, "COREWEAVE"),
+                     ("RKLB UW", "ROCKET LAB USA INC"), ("DKNN", "AFTKINGS")]
+    ] * 2
+    expected = [as_rows(normalize(normalize(f))) for f in frames]
+    memo.clear()
+    start = threading.Barrier(len(frames))
+
+    def run(f):
+        start.wait(timeout=60)
+        out = normalize(normalize(f))
+        return N._trees(), as_rows(out)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(len(frames)) as pool:
+            results = list(pool.map(run, frames, timeout=300))
+    finally:
+        sys.setswitchinterval(interval)
+    assert [rows for _, rows in results] == expected
+    assert len({id(trees) for trees, _ in results}) == 1
+
+
+@pytest.mark.parametrize("shape", ["api", "strings", "canonical"])
+def test_memoized_normalize_plan_equals_a_fresh_build(spark, shape):
+    """Reusing the trees changes nothing Spark sees: the analyzed plan
+    of normalize∘normalize equals the one built from a cleared memo,
+    exprIds aside, and every alias still gets its own exprId."""
+    import json
+    import re
+
+    from ark_invest_api_rust_data_spark.functions import memo
+    from ark_invest_api_rust_data_spark.sources.data_reader import json_to_df
+
+    if shape == "api":
+        df = json_to_df(spark, json.dumps([
+            {"company": "ROCKET LAB USA INC", "cusip": "C1", "date": "2024-01-09",
+             "market_value": 1000.0, "share_price": 10.0, "shares": 100.0,
+             "ticker": "RKLB UW", "weight": 1.5, "weight_rank": 1},
+        ]))
+    elif shape == "strings":
+        df = spark.createDataFrame(
+            [("01/09/2024", "ARKK", "TESLA INC", "TSLA UW", "C1", "1,234", "$1,234.50", "9.87%")],
+            "date string, fund string, company string, ticker string, cusip string, "
+            "shares string, `market value ($)` string, `weight (%)` string",
+        )
+    else:
+        df = default_df(spark, ["TSLA"], ["TESLA"])
+
+    def plan():
+        return normalize(normalize(df))._jdf.queryExecution().analyzed().treeString()
+
+    plan()
+    memoized = plan()
+    memo.clear()
+    fresh = plan()
+    assert re.sub(r"#\d+", "#", memoized) == re.sub(r"#\d+", "#", fresh)
+    ids = re.findall(r" AS [^,\]]+#(\d+)", memoized)
+    assert len(ids) == len(set(ids)), memoized
+
+
 @pytest.mark.parametrize(
     "raw,expected",
     [

@@ -82,6 +82,24 @@ def test_refresh_bootstrap_then_incremental(spark, tmp_path):
     assert out3.count() == n1 + 1
 
 
+# py4j round trips (`c` + `r` commands) of one API-incremental
+# refresh_ticker on a warmed session: 9,057 when normalize rebuilt its
+# constant trees and column lists on every call, 195 with them built
+# once per JVM.
+MAX_REFRESH_ROUND_TRIPS = 1000
+
+
+def test_refresh_ticker_round_trip_budget(spark, tmp_path, py4j_commands):
+    root = str(tmp_path)
+    write_ticker(normalize(csv_to_df(spark, ARK_CSV)), root, "ARKK")
+    refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
+    py4j_commands.clear()
+    out = refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
+    round_trips = py4j_commands["c"] + py4j_commands["r"]
+    assert round_trips <= MAX_REFRESH_ROUND_TRIPS, dict(py4j_commands)
+    assert out.count() == 15
+
+
 def test_arkfundsio_explode_path(spark, tmp_path):
     """U6: nested holdings list-of-structs is exploded/unnested
     (util.rs:537-546)."""
