@@ -140,12 +140,11 @@ def company_chain_fused(c: Column) -> Column:
     object when the pattern is absent, so most of the 50 steps are a
     C-speed scan with no copy.
 
-    Therefore this IS the bulk/corpus-scale tier (``clean_company_df``
-    ``tier="fused"``); the expression tier remains the default for the
-    reference-parity pipeline, whose per-ticker frames are tiny enough
-    that the Arrow round-trip dominates and a Python-worker dependency
-    buys nothing. bench.py runs BOTH (parity_company_bulk[_fused]) so
-    the margin is re-measured every round.
+    ``clean_company_df`` keeps the expression chain: the reference-parity
+    pipeline's per-ticker frames are tiny enough that the Arrow
+    round-trip dominates and a Python-worker dependency buys nothing.
+    bench.py runs BOTH (parity_company_bulk[_fused]) so the margin is
+    re-measured every round.
 
     Python ``str.replace`` is non-overlapping left-to-right like
     Spark/Polars replace, and ``replace(pat, rep, 1)`` is exactly the
@@ -177,16 +176,7 @@ def clean_company(c: Column) -> Column:
     return apply_rules(c, COMPANY_RULES)
 
 
-def clean_company_df(df, colname: str = "company", tier: str = "expr"):
-    """C7 (:func:`clean_company`) over one column of ``df``.
-
-    ``tier="expr"`` (default) — codegen'd built-in expressions, no
-    Python workers; right for the per-ticker parity pipeline.
-    ``tier="fused"`` — single-pass Arrow pandas UDF; measured 3-4×
-    faster at corpus scale (see company_chain_fused). Identical output
-    (oracle-verified both ways)."""
-    if tier not in ("expr", "fused"):  # typo'd tier must not silently
-        raise ValueError(f"tier must be 'expr' or 'fused', got {tier!r}")
-    if tier == "fused":
-        return df.withColumn(colname, company_chain_fused(F.col(colname)))
+def clean_company_df(df, colname: str = "company"):
+    """C7 (:func:`clean_company`) over one column of ``df``: codegen'd
+    built-in expressions, no Python workers."""
     return df.withColumn(colname, clean_company(F.col(colname)))

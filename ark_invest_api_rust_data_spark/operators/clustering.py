@@ -40,7 +40,7 @@ from typing import NamedTuple
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
-from .similarity import _dot, _norm2, _quantize
+from .similarity import _quantize
 
 
 def _flat_coords(centroids: dict[int, list[float]]) -> list[float]:
@@ -535,51 +535,13 @@ def kmeans_assign(
     )[1]
 
 
-def _dropped_ids_expr(
-    side: DataFrame, threshold: float, id_col: str, soft: bool
-) -> DataFrame:
-    """Pure-DataFrame pair verify: cluster self-join, cosine inline in
-    the join condition. Norm² per doc is computed ONCE below the join
-    (not per pair) and wrapped non-nullable — an inferred
-    isnotnull(_n2) otherwise pushes below the projection and re-runs
-    the quantize+norm folds inside the scan filter
-    ([[catalyst-pushdown-double-compute]])."""
-    side = side.select(
-        "*",
-        F.coalesce(_norm2(F.col("_q")), F.lit(0).cast("long")).alias("_n2"),
-    )
-    a = side.alias("a")
-    b = side.alias("b")
-    # exact int64 dot/norms on the quantized grid; ONE double divide +
-    # IEEE sqrts — the same cross-engine-deterministic cosine as
-    # similarity.cosine_scores
-    cos = _dot(F.col("a._q"), F.col("b._q")).cast("double") / (
-        F.sqrt(F.col("a._n2").cast("double"))
-        * F.sqrt(F.col("b._n2").cast("double"))
-    )
-    pair_cond = (F.col("a.cluster") == F.col("b.cluster")) & (
-        F.col(f"b.{id_col}") < F.col(f"a.{id_col}")
-    )
-    if soft:
-        pair_cond = pair_cond & (
-            (F.col("a.probe_rank") == 1) | (F.col("b.probe_rank") == 1)
-        )
-    return (
-        a.join(b, pair_cond)
-        .where(cos >= F.lit(threshold))
-        .select(F.col(f"a.{id_col}").alias(id_col))
-        .distinct()
-    )
-
-
 def _dropped_ids_arrow(
     side: DataFrame, threshold: float, id_col: str, soft: bool
 ) -> DataFrame:
     """Vectorized pair verify: one Arrow batch per cluster, gram
-    matrix in NumPy. Shuffle shape is identical to the expr tier (one
-    exchange of (id, cluster, _q[, probe_rank]) rows hashed by
-    cluster); only the per-pair compute moves from interpreted
-    zip_with folds to int64 matrix ops. Cluster sizes are bounded by
+    matrix in NumPy. One exchange of (id, cluster, _q[, probe_rank])
+    rows hashed by cluster; the per-pair compute is int64 matrix ops.
+    Cluster sizes are bounded by
     scaled_k's target (the operator's linearity contract), so a group
     batch is a few-hundred-row matrix, never the corpus."""
     import numpy as np
@@ -624,7 +586,6 @@ def semantic_dedup(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     assignments: DataFrame | None = None,
-    verify: str = "arrow",
 ) -> DataFrame:
     """SemDeDup: k-means-cluster the embeddings, then within each
     cluster drop every row that has a higher-priority (lower-id)
@@ -648,29 +609,19 @@ def semantic_dedup(
     membership). The emitted (id, cluster, kept) rows keep the primary
     (probe_rank 1) cluster, so the output schema is unchanged.
 
-    ``verify`` picks the pair-verification tier; both produce the
-    identical drop set (pytest-pinned) and share one SQL oracle:
-
-    * ``"arrow"`` (default) — groupBy(cluster).applyInPandas computes
-      each cluster's gram matrix in NumPy: int64 dots on the quantized
-      grid (exact — |q|≤2⁰²⁰-ish keeps a 64-dim dot ≪ 2⁶³), then ONE
-      double divide over IEEE sqrts. Division and sqrt are correctly
-      rounded per IEEE 754, so NumPy, the JVM, and DuckDB produce the
-      SAME bits (unlike log — see bm25.py). This is SemDeDup's own
-      architecture (cluster-local matrix verify); per-pair cost is a
-      vectorized multiply-add instead of an interpreted
-      zip_with/aggregate fold — measured ~15 µs/pair expression-tier
-      vs effectively-free matrix rows, which was the whole remaining
-      nprobe-vs-scaled premium (the soft tier verifies ~3× the pairs
-      BY DESIGN; the verify must be cheap enough that tripling it is
-      noise).
-    * ``"expr"`` — the pure-DataFrame tier: cluster self-join with the
-      cosine verified INLINE in the join condition (one wide exchange,
-      pair stream never shuffled). Plan-transparent and JVM-only;
-      kept as the cross-check reference and for pandas-less clusters.
+    Pair verification: groupBy(cluster).applyInPandas computes each
+    cluster's gram matrix in NumPy: int64 dots on the quantized grid
+    (exact — |q|≤2⁰²⁰-ish keeps a 64-dim dot ≪ 2⁶³), then ONE double
+    divide over IEEE sqrts. Division and sqrt are correctly rounded per
+    IEEE 754, so NumPy, the JVM, and DuckDB produce the SAME bits
+    (unlike log — see bm25.py), and the drop set hash-matches the SQL
+    oracle. This is SemDeDup's own architecture (cluster-local matrix
+    verify); per-pair cost is a vectorized multiply-add — measured
+    ~15 µs/pair for an interpreted zip_with/aggregate fold vs
+    effectively-free matrix rows, which matters because the soft tier
+    verifies ~3× the pairs BY DESIGN; the verify must be cheap enough
+    that tripling it is noise.
     """
-    if verify not in ("arrow", "expr"):
-        raise ValueError(f"verify must be 'arrow' or 'expr', got {verify!r}")
     if assignments is None:
         assignments = kmeans_assign(df, k=k, iters=iters, id_col=id_col, vec_col=vec_col)
     soft = "probe_rank" in assignments.columns
@@ -679,10 +630,7 @@ def semantic_dedup(
     side_cols = [id_col, "cluster"] + (["probe_rank"] if soft else [])
     side = assignments.select(*side_cols).join(vec, id_col)
 
-    if verify == "arrow":
-        dropped = _dropped_ids_arrow(side, threshold, id_col, soft)
-    else:
-        dropped = _dropped_ids_expr(side, threshold, id_col, soft)
+    dropped = _dropped_ids_arrow(side, threshold, id_col, soft)
     primary = (
         assignments.filter(F.col("probe_rank") == 1).drop("probe_rank")
         if soft
@@ -1130,7 +1078,6 @@ def semantic_dedup_incremental(
     threshold: float = 0.45,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    verify: str = "arrow",
 ) -> DataFrame:
     """SemDeDup for CONTINUOUS ingest: dedup an arriving batch against
     a frozen-index corpus — the semantic twin of the MinHash band
@@ -1169,10 +1116,9 @@ def semantic_dedup_incremental(
     # semantic_dedup reads from both pair sides AND the primary join),
     # and the final batch-row filter — ~5 downstream references, each
     # of which would otherwise re-run the whole assignment pass
-    # (measured r11: the Arrow tier's re-evaluated mapInPandas turned
-    # the 64-task verify stages into 26-34 s of executor time; the
-    # expression tier silently paid the same re-evaluation in
-    # interpreted folds). Two longs per batch row — the same bounded
+    # (measured r11: the re-evaluated mapInPandas turned the 64-task
+    # verify stages into 26-34 s of executor time). Two longs per
+    # batch row — the same bounded
     # localCheckpoint pattern as kmeans_fit's returned frame.
     asg_batch = asg_batch.localCheckpoint()
     touched = asg_batch.select("cluster").distinct()
@@ -1189,7 +1135,6 @@ def semantic_dedup_incremental(
         id_col=id_col,
         vec_col=vec_col,
         assignments=assignments,
-        verify=verify,
     )
     return out.join(asg_batch.select(id_col), id_col)
 
@@ -1281,7 +1226,6 @@ def semantic_dedup_scaled(
     k_min: int = 8,
     nprobe: int = 1,
     probe_ratio2: float | None = None,
-    verify: str = "arrow",
     k_max: int = 65536,
     two_level_bound: int = _TWO_LEVEL_BOUND,
     max_cell_rows: int = 1 << 17,
@@ -1340,7 +1284,7 @@ def semantic_dedup_scaled(
     probe list contains the other's primary cell) recovers ~42%.
     Precision is 1.0 at every nprobe (every drop is a true near-dup —
     the cosine is exact). The soft tier verifies ~3× the pairs, but
-    with the vectorized (arrow) verify that premium is noise: measured
+    with the vectorized verify that premium is noise: measured
     ≤1.05× the hard tier end-to-end at sf0.1 AND sf1 (round-8; the
     r7 judge's bar was ≤1.3×). For recall-critical dedup use the
     exact block-matrix or ANN tiers (similarity.py); SemDeDup's value
@@ -1388,5 +1332,4 @@ def semantic_dedup_scaled(
         id_col=id_col,
         vec_col=vec_col,
         assignments=assignments,
-        verify=verify,
     )

@@ -179,5 +179,5 @@ def pair_ngram_overlap(
     ).localCheckpoint(eager=True)
     sh.unpersist()
     # the returned frame holds only O(pairs) metric rows; callers that
-    # are done with it can free even that via dedup._release_checkpoint
+    # are done with it can free even that via Materializer(spark).release
     return result

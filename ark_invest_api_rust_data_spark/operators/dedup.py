@@ -1199,18 +1199,8 @@ def dedup_clusters(
     finally:
         edges.unpersist()
     return labels  # columns are exactly (node, cluster); returning the
-    # checkpointed frame itself keeps it releasable via _release_checkpoint
-
-
-def _release_checkpoint(df: DataFrame) -> None:
-    """Free the storage behind a localCheckpoint'ed DataFrame we no
-    longer need. DataFrame.unpersist() only consults the SQL cache
-    manager, so reach the checkpointed RDD itself; best-effort (the
-    ContextCleaner would reclaim it eventually anyway)."""
-    try:  # LogicalRDD (the localCheckpoint plan node) holds the RDD
-        df._jdf.logicalPlan().rdd().unpersist(False)
-    except Exception:
-        pass
+    # checkpointed frame itself keeps it releasable via
+    # Materializer(spark).release
 
 
 def cluster_representatives(

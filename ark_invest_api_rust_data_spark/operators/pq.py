@@ -40,21 +40,13 @@ import math
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
 
-# above this many flattened coarse coordinates (n_centroids·dim) the
-# fused expression-tier IVF-PQ trainer hands off to the independent
-# Arrow-tier trainers (the coarse passes must vectorize there). This is
-# pq's own regime switch — clustering's k-means runs every pass on
-# NumPy, but the fused trainer's measured win at small coarse k
-# [-41% llm_ivfpq_topk] lives below THIS bound.
-_FUSED_TRAIN_BOUND = 16384
-
 # above this many TOTAL flattened codebook coordinates (coarse k·dim +
 # m·k·sub) the PQ assignment/update passes run the vectorized NumPy
 # tier instead of the interpreted ``_assign_expr`` folds (HOFs are
 # CodegenFallback, so the fold cost is O(n·k·dim) INTERPRETED — at
 # large codebooks the NumPy tier is the only shape that scales).
 #
-# Default 16384 (= _FUSED_TRAIN_BOUND), NOT the round-11 0: the r11
+# Default 16384, NOT the round-11 0: the r11
 # always-Arrow default was chosen on a warm interleaved A/B, and the
 # r12 cold-session bisect isolated a reproducible session cost — each
 # Arrow training storm (new generated classes + ~33 Python worker
@@ -443,15 +435,14 @@ def _ivfpq_train(
     ``_assign_expr`` at off=0 over the full vector, same exact int64
     sums and one double division per coordinate, same carry-forward
     for empty cells); subspace math is exactly ``pq_train``'s
-    (pytest-pinned equality in tests/test_pq.py). The update
-    aggregation guards ``element_at`` with a size() predicate so
-    subspace rows contribute NULL (ignored by SUM) beyond their sub
-    dims — ANSI-safe, values unchanged.
+    (pytest-pinned equality in tests/test_pq.py, on both sides of
+    ``_PQ_ARROW_BOUND``). The update aggregation guards ``element_at``
+    with a size() predicate so subspace rows contribute NULL (ignored
+    by SUM) beyond their sub dims — ANSI-safe, values unchanged.
 
-    Scope: expression tier only — callers fall back to the separate
-    trainers above ``_FUSED_TRAIN_BOUND`` (corpus-scaled k), where
-    the passes vectorize independently. Returns
-    (coarse_centroids, assignments_df, PqModel)."""
+    Returns (coarse_centroids, assignments_df, PqModel, combined),
+    where ``combined`` is the materialized (id, cluster,
+    code_0..code_{m−1}) frame the other two frames are views of."""
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
     from .dedup import _spread
@@ -469,22 +460,6 @@ def _ivfpq_train(
         if m < 1 or dim % m != 0:
             raise ValueError(f"m={m} must divide dim={dim}")
         sub = dim // m
-        from .clustering import kmeans_fit
-
-        if n_centroids * dim > _FUSED_TRAIN_BOUND:
-            # corpus-scaled coarse k: the coarse passes must vectorize
-            # (Arrow tier) — run the independent trainers; the one
-            # redundant seed-collect job is noise against corpus-sized
-            # vectorized passes at that scale.
-            base.unpersist()
-            cents_q, asg = kmeans_fit(
-                df, k=n_centroids, iters=iters,
-                id_col=id_col, vec_col=vec_col,
-            )
-            model = pq_train(
-                df, m=m, k=k, iters=iters, id_col=id_col, vec_col=vec_col
-            )
-            return cents_q, asg, model, None
         coarse: dict[int, list[float]] = {
             cid: [float(v) for v in row["_q"]]
             for cid, row in enumerate(seed_rows[:n_centroids])
@@ -718,6 +693,19 @@ def adc_tables(model: PqModel, query: list[float]) -> list[list[float]]:
     return tables
 
 
+def _adc_sum(model: PqModel, query: list[float]) -> F.Column:
+    """ADC distance of each codes row to ``query``: per subspace a
+    code → distance-literal lookup (``adc_tables``), summed
+    left-to-right."""
+    expr = None
+    for j, tab in enumerate(adc_tables(model, query)):
+        dj = F.element_at(
+            F.array(*[F.lit(x) for x in tab]), F.col(f"code_{j}") + 1
+        )
+        expr = dj if expr is None else expr + dj
+    return expr
+
+
 def ivfpq_topk(
     df: DataFrame,
     query: list[float],
@@ -731,53 +719,25 @@ def ivfpq_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """IVF-PQ — the FAISS index architecture as Spark plans: a coarse
-    exact-Lloyd's quantizer (clustering.kmeans_fit) partitions the
-    corpus; PQ codes compress it; a query ranks the coarse centroids
-    driver-side (k rows — bounded), keeps its ``nprobe`` nearest
-    partitions, and ADC-scans ONLY their codes. At 100 TB the coarse
-    assignment is the partition-pruning predicate (store the codes
+    exact-Lloyd's quantizer (``_ivfpq_train``, bit-identical to
+    clustering.kmeans_fit) partitions the corpus; PQ codes compress
+    it; a query ranks the coarse centroids driver-side (k rows —
+    bounded), keeps its ``nprobe`` nearest partitions, and ADC-scans
+    ONLY their codes. At 100 TB the coarse assignment is the
+    partition-pruning predicate (store the codes
     ``partitionBy(cluster)``) and the scan reads nprobe/n_centroids of
     a corpus that is itself ~100× smaller than the float vectors.
 
     Centroid ranking uses the same quantized-grid left-to-right fold
     as ``adc_tables`` with (dist, cid) tie-break, so the whole
     composed pipeline is bit-reproducible against a SQL oracle
-    (plans/corpus.py llm_ivfpq_topk)."""
-    cents_q, asg, model, combined = _train_pair(
+    (plans/corpus.py llm_ivfpq_topk). Trains per call, then searches
+    the trained frame as ``IvfPqIndex.search_frame``."""
+    cents_q, _, model, combined = _ivfpq_train(
         df, n_centroids, m, k, iters, id_col, vec_col
     )
-    qq = [float(math.floor(float(x) * MU)) for x in query]
-    ranked = []
-    for cid in range(len(cents_q)):
-        d = 0.0
-        for i, c in enumerate(cents_q[cid]):
-            diff = qq[i] - c
-            d = d + diff * diff
-        ranked.append((d, cid))
-    probe_ids = [cid for _, cid in sorted(ranked)[: max(1, nprobe)]]
-    if combined is not None:
-        # fused trainer: assignment and codes are views of ONE
-        # materialized frame — the candidate restriction is a plain
-        # partition-prunable filter, no codes⋈assignment join at all
-        scan = combined.filter(F.col("cluster").isin(probe_ids))
-    else:
-        cand = asg.filter(F.col("cluster").isin(probe_ids)).select(
-            id_col, "cluster"
-        )
-        scan = model.codes.join(cand, id_col)
-    tables = adc_tables(model, query)
-    expr = None
-    for j, tab in enumerate(tables):
-        dj = F.element_at(F.array(*[F.lit(x) for x in tab]), F.col(f"code_{j}") + 1)
-        expr = dj if expr is None else expr + dj
-    return (
-        scan.select(
-            id_col,
-            F.col("cluster").cast("int").alias("cluster"),
-            expr.alias("adc_dist"),
-        )
-        .orderBy("adc_dist", id_col)
-        .limit(topk)
+    return IvfPqIndex(cents_q, model).search_frame(
+        combined, query, nprobe=nprobe, topk=topk
     )
 
 
@@ -820,29 +780,17 @@ class IvfPqIndex:
         """Train coarse + PQ on ``df`` and write the codes lake at
         ``path`` partitioned by coarse cluster: one directory per
         centroid, each holding (id, code_0..code_{m-1}) rows."""
-        cents_q, asg, model, combined = _train_pair(
+        cents_q, _, model, combined = _ivfpq_train(
             df, n_centroids, m, k, iters, id_col, vec_col
         )
-        # fused trainer: codes and cluster live in ONE materialized
-        # frame — write it directly (the former codes⋈assignment join
-        # is gone); split tier keeps the join. Written rows identical.
-        codes_clustered = (
-            combined
-            if combined is not None
-            else model.codes.join(asg.select(id_col, "cluster"), id_col)
-        )
-        (
-            codes_clustered
-            .write.mode("overwrite")
-            .partitionBy("cluster")
-            .parquet(path)
-        )
+        # codes and cluster live in ONE materialized frame
+        combined.write.mode("overwrite").partitionBy("cluster").parquet(path)
         return cls(cents_q, model)
 
     def rank_clusters(self, query: list[float]) -> list[tuple[float, int]]:
-        """(dist, cid) over the coarse centroids — the same
-        quantized-grid left-to-right fold as ``ivfpq_topk``; bounded
-        driver math over n_centroids rows."""
+        """(dist, cid) over the coarse centroids — the quantized-grid
+        left-to-right fold of ``adc_tables``; bounded driver math over
+        n_centroids rows."""
         qq = [float(math.floor(float(x) * MU)) for x in query]
         ranked = []
         for cid in range(len(self.coarse)):
@@ -884,40 +832,15 @@ class IvfPqIndex:
         scan, so the pruning contract is unchanged."""
         probe_ids = [cid for _, cid in self.rank_clusters(query)[: max(1, nprobe)]]
         scan = codes.filter(F.col("cluster").isin(probe_ids))
-        tables = adc_tables(self.pq, query)
-        expr = None
-        for j, tab in enumerate(tables):
-            dj = F.element_at(
-                F.array(*[F.lit(x) for x in tab]), F.col(f"code_{j}") + 1
-            )
-            expr = dj if expr is None else expr + dj
         return (
             scan.select(
                 self.pq.id_col,
                 F.col("cluster").cast("int").alias("cluster"),
-                expr.alias("adc_dist"),
+                _adc_sum(self.pq, query).alias("adc_dist"),
             )
             .orderBy("adc_dist", self.pq.id_col)
             .limit(topk)
         )
-
-
-def _train_pair(
-    df: DataFrame,
-    n_centroids: int,
-    m: int,
-    k: int,
-    iters: int,
-    id_col: str,
-    vec_col: str,
-):
-    """Coarse + PQ training for the IVF-PQ compositions: the fused
-    single-working-set trainer (``_ivfpq_train``), which itself falls
-    back to the two independent trainers above kmeans_fit's Arrow
-    bound (where the corpus passes vectorize separately). The
-    fused/split outputs are bit-identical (pytest-pinned); the split
-    is purely an execution-tier choice."""
-    return _ivfpq_train(df, n_centroids, m, k, iters, id_col, vec_col)
 
 
 def pq_adc_topk(
@@ -929,18 +852,11 @@ def pq_adc_topk(
     vectors — that is the point of PQ."""
     if topk < 1:
         raise ValueError(f"topk must be >= 1, got {topk}")
-    tables = adc_tables(model, query)
-    expr = None
-    for j, tab in enumerate(tables):
-        dj = F.element_at(
-            F.array(*[F.lit(x) for x in tab]), F.col(f"code_{j}") + 1
-        )
-        expr = dj if expr is None else expr + dj
     return (
         model.codes.select(
             model.id_col,
             *[F.col(f"code_{j}").cast("int").alias(f"code_{j}") for j in range(model.m)],
-            expr.alias("adc_dist"),
+            _adc_sum(model, query).alias("adc_dist"),
         )
         .orderBy("adc_dist", model.id_col)
         .limit(topk)

@@ -111,8 +111,6 @@ def temperature_mix(
     alpha: float = 0.5,
     id_col: str = "doc_id",
     strata_col: str = "source",
-    tier: str = "window",
-    shards: int = 16,
 ) -> DataFrame:
     """α-temperature domain mixture: derive per-domain quotas from the
     CORPUS ITSELF — quota_d = ⌊budget · n_d^α / Σ n^α⌋ — then keep the
@@ -131,24 +129,11 @@ def temperature_mix(
     domain by (md5(id), id): reproducible, content-independent.
 
     Scale: one O(domains) count shuffle, a single-row normalizer
-    broadcast back, and one per-domain ranking window. Under
-    pathological domain skew (one domain = half the corpus, common in
-    crawl data) pass ``tier="sharded"``: phase 1 ranks per (domain,
-    md5-prefix shard) and keeps per-shard top-quota — every window
-    partition bounded by ~1/``shards`` of the worst domain — phase 2
-    re-ranks the ≤ shards·quota survivors with the SAME order. A
-    globally top-quota row is top-quota within its shard, so the
-    selected set and pick_ranks are IDENTICAL to the window tier
-    (equivalence pytest) — the ``domain_cap`` sharded discipline with
-    a data-derived per-domain cap. Output is one row per selected doc
-    with the domain bookkeeping (domain_n, quota) carried for
-    downstream audits."""
+    broadcast back, and one per-domain ranking window. Output is one
+    row per selected doc with the domain bookkeeping (domain_n, quota)
+    carried for downstream audits."""
     if budget < 0:
         raise ValueError(f"budget must be >= 0, got {budget}")
-    if tier not in ("window", "sharded"):
-        raise ValueError(f"unknown tier {tier!r}")
-    if tier == "sharded" and shards < 2:
-        raise ValueError(f"shards must be >= 2, got {shards}")
     counts = df.groupBy(strata_col).agg(F.count("*").alias("domain_n"))
     w = (
         F.sqrt(F.col("domain_n").cast("double"))
@@ -174,24 +159,8 @@ def temperature_mix(
         .select(strata_col, "domain_n", "quota")
     )
     order = [F.md5(F.col(id_col).cast("string")), F.col(id_col)]
-    base = df.select(strata_col, id_col)
-    if tier == "sharded":
-        shard = F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col(id_col).cast("string")), 1, 4), 16, 10
-            ).cast("long"),
-            F.lit(shards),
-        )
-        w1 = Window.partitionBy(strata_col, "_shard").orderBy(*order)
-        base = (
-            base.join(F.broadcast(quotas.select(strata_col, "quota")), strata_col)
-            .withColumn("_shard", shard)
-            .withColumn("_r1", F.row_number().over(w1))
-            .filter(F.col("_r1") <= F.col("quota"))
-            .drop("_r1", "_shard", "quota")
-        )
     rank_w = Window.partitionBy(strata_col).orderBy(*order)
-    ranked = base.withColumn(
+    ranked = df.select(strata_col, id_col).withColumn(
         "pick_rank", F.row_number().over(rank_w).cast("long")
     )
     return (

@@ -176,7 +176,6 @@ def start_semantic_dedup_stream(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     available_now: bool = True,
-    verify: str = "arrow",
 ):
     """Start the semantic ingest-dedup stream. Requires
     ``seed_semantic_store`` to have been run under ``store_root`` —
@@ -214,7 +213,6 @@ def start_semantic_dedup_stream(
             threshold=threshold,
             id_col=id_col,
             vec_col=vec_col,
-            verify=verify,
         )
         out.write.mode("overwrite").parquet(f"{store_root}/out/src={me}")
         # BATCH-ID REUSE SAFETY (ingest.py contract): a fresh-checkpoint

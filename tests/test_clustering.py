@@ -464,32 +464,6 @@ def test_ivf_build_exact_matches_lloyds_and_keeps_index_surface(spark):
     assert got_top == want_top
 
 
-def test_semantic_dedup_verify_tiers_identical(spark):
-    """The vectorized (arrow) and pure-DataFrame (expr) pair-verify
-    tiers produce the SAME rows — hard and soft (nprobe=2), including
-    the multi-probe candidate rule. IEEE div/sqrt are correctly
-    rounded, so NumPy and the JVM agree bit-for-bit on the cosine."""
-    from ark_invest_api_rust_data_spark.operators.clustering import (
-        semantic_dedup_scaled,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    for nprobe in (1, 2):
-        rows = {}
-        for tier in ("arrow", "expr"):
-            rows[tier] = sorted(
-                (r["vec_id"], r["cluster"], r["kept"])
-                for r in semantic_dedup_scaled(
-                    emb, target_cluster_size=16, iters=2,
-                    threshold=0.45, nprobe=nprobe, verify=tier,
-                ).collect()
-            )
-        assert rows["arrow"] == rows["expr"], f"nprobe={nprobe}"
-    # the soft widening actually recovers extra near-dups on this data
-    hard_kept = {t[0] for t in rows["arrow"] if t[2]}
-    assert hard_kept  # sanity: something survives
-
-
 def test_semantic_dedup_soft_skips_mutual_secondary_pairs(spark):
     """Multi-probe candidate rule: a pair meeting ONLY through both
     docs' secondary cells is not compared. Construct it directly with

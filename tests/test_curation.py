@@ -308,37 +308,6 @@ def test_temperature_mix_rejects_negative_budget(spark):
         temperature_mix(df, budget=-1)
 
 
-def test_temperature_mix_sharded_equals_window(spark):
-    """The skew-safe sharded tier must select the IDENTICAL set with
-    identical pick_ranks as the single-window tier on a pathological
-    mix (one domain = ~90% of the corpus), including a domain whose
-    quota exceeds its size."""
-    from ark_invest_api_rust_data_spark.operators.sampling import temperature_mix
-
-    rows = [(i, "big") for i in range(900)] + [(900 + i, f"t{i % 3}") for i in range(100)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    for budget in (0, 7, 50, 2000):
-        a = sorted(
-            map(tuple, temperature_mix(df, budget=budget, alpha=0.5).collect())
-        )
-        b = sorted(
-            map(
-                tuple,
-                temperature_mix(
-                    df, budget=budget, alpha=0.5, tier="sharded", shards=8
-                ).collect(),
-            )
-        )
-        assert a == b, f"budget={budget}"
-
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError):
-        temperature_mix(df, budget=1, tier="nope")
-    with _pytest.raises(ValueError):
-        temperature_mix(df, budget=1, tier="sharded", shards=1)
-
-
 def test_group_sample_matches_hash_order_reference(spark):
     """group_sample equals the sequential per-group hash-order top-k,
     including hash ties broken on id; every group with >= k rows

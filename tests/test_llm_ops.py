@@ -543,11 +543,13 @@ def test_dedup_ops_release_executor_storage(spark):
     """Long-lived-session hygiene: minhash_lsh_pairs and dedup_clusters
     must not accumulate cached partitions — after each call the only
     surviving storage is the (small) materialized result, releasable
-    via _release_checkpoint."""
+    via Materializer.release."""
     from ark_invest_api_rust_data_spark.operators.dedup import (
-        _release_checkpoint,
         dedup_clusters,
         minhash_lsh_pairs,
+    )
+    from ark_invest_api_rust_data_spark.operators.persistence import (
+        Materializer,
     )
 
     import gc
@@ -576,8 +578,8 @@ def test_dedup_ops_release_executor_storage(spark):
         assert clusters.count() >= 0
         # edges + per-iteration labels released; final labels remain
         assert n_persistent() <= base + 2
-        _release_checkpoint(clusters)
-        _release_checkpoint(pairs)
+        Materializer(spark).release(clusters)
+        Materializer(spark).release(pairs)
         # <=, not ==: the async cleaner may ALSO have reclaimed RDDs
         # that predate this test's baseline
         assert n_persistent() <= base
@@ -1499,12 +1501,12 @@ def test_pair_ngram_overlap_releases_shingle_storage(spark):
     """r8 advisor regression: repeated calls in a long-lived session
     must not accumulate block-manager storage for the shingled frame.
     After the operator returns, only the O(pairs) result checkpoint
-    may remain — and _release_checkpoint frees that too."""
+    may remain — and Materializer.release frees that too."""
     from ark_invest_api_rust_data_spark.operators.contamination import (
         pair_ngram_overlap,
     )
-    from ark_invest_api_rust_data_spark.operators.dedup import (
-        _release_checkpoint,
+    from ark_invest_api_rust_data_spark.operators.persistence import (
+        Materializer,
     )
 
     jsc = spark.sparkContext._jsc.sc()
@@ -1520,7 +1522,7 @@ def test_pair_ngram_overlap_releases_shingle_storage(spark):
     # at most the 3 tiny result checkpoints remain
     assert jsc.getPersistentRDDs().size() <= base + 3
     for r in results:
-        _release_checkpoint(r)
+        Materializer(spark).release(r)
     assert jsc.getPersistentRDDs().size() <= base
 
 

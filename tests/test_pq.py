@@ -144,21 +144,25 @@ def test_ivfpq_prunes_to_probe_clusters_and_matches_restricted_adc(spark):
     assert [(r["adc_dist"], r["vec_id"]) for r in got] == ref
 
 
-def test_fused_ivfpq_trainer_equals_split_trainers(spark):
+@pytest.mark.parametrize("nc", [8, 300])
+def test_fused_ivfpq_trainer_equals_split_trainers(spark, nc):
     """The round-11 fused coarse+PQ trainer (_ivfpq_train: one cached
     working set, one combined update aggregation per iteration) is a
     perf shape, not a semantic change: coarse centroids, assignments,
     codebooks and codes must all be bit-identical to the independent
-    kmeans_fit + pq_train pair it replaces."""
+    kmeans_fit + pq_train pair it replaces. nc=8 (8·64 + 4·8·16
+    coordinates) runs the expression tier; nc=300 (19,200 coarse
+    coordinates, above _PQ_ARROW_BOUND) the NumPy tier — the large-k
+    regime a corpus-scaled coarse k lands in."""
     from ark_invest_api_rust_data_spark.operators.clustering import kmeans_fit
     from ark_invest_api_rust_data_spark.operators.pq import _ivfpq_train
 
     emb = _emb(spark)
-    nc, m, k, iters = 8, 4, 8, 2
+    m, k, iters = 4, 8, 2
     cents_f, asg_f, model_f, combined = _ivfpq_train(
         emb, nc, m, k, iters, "vec_id", "embedding"
     )
-    assert combined is not None  # tiny k·dim: fused tier must engage
+    assert combined is not None
 
     cents_s, asg_s = kmeans_fit(emb, k=nc, iters=iters)
     model_s = pq_train(emb, m=m, k=k, iters=iters)
@@ -185,31 +189,6 @@ def test_fused_ivfpq_trainer_equals_split_trainers(spark):
     assert comb == {
         vid: (want_asg[vid], want_codes[vid]) for vid in want_asg
     }
-
-
-def test_fused_trainer_falls_back_above_arrow_bound(spark):
-    """Above _FUSED_TRAIN_BOUND the fused expression tier would
-    interpret a corpus-sized fold — the trainer must delegate to the
-    split trainers (combined is None) and still return their outputs."""
-    from ark_invest_api_rust_data_spark.operators import pq as pq_mod
-    from ark_invest_api_rust_data_spark.operators.pq import _ivfpq_train
-
-    emb = _emb(spark)
-    import ark_invest_api_rust_data_spark.operators.clustering as cl
-
-    old = pq_mod._FUSED_TRAIN_BOUND
-    pq_mod._FUSED_TRAIN_BOUND = 1  # force the fallback branch
-    try:
-        cents, asg, model, combined = _ivfpq_train(
-            emb, 4, 4, 4, 1, "vec_id", "embedding"
-        )
-    finally:
-        pq_mod._FUSED_TRAIN_BOUND = old
-    assert combined is None
-    cents_s, _ = cl.kmeans_fit(emb, k=4, iters=1)
-    assert cents == cents_s
-    model_s = pq_mod.pq_train(emb, m=4, k=4, iters=1)
-    assert model.codebooks == model_s.codebooks
 
 
 def test_pq_validates(spark):

@@ -126,23 +126,30 @@ def _company_chain_python(x: str | None) -> str | None:
 @given(strings=st.lists(_C7_STRINGS, min_size=1, max_size=24))
 def test_c7_chain_tiers_match_python_reference(strings):
     """C7 first-occurrence chain, property-tested on adversarial
-    inputs (verdict r2 item 8): the expression tier (replace/
-    regexp_replace built-ins) and the fused pandas-UDF tier must both equal
-    the independent Python reference — chain ORDER and first-vs-all
+    inputs (verdict r2 item 8): ``clean_company_df`` (replace/
+    regexp_replace built-ins) and ``company_chain_fused`` (the pandas-UDF
+    twin behind parity_company_bulk_fused) must both equal the
+    independent Python reference — chain ORDER and first-vs-all
     flavor are load-bearing, and patterns overlapping their own
     replacements are exactly where a wrong fold shows."""
-    from ark_invest_api_rust_data_spark.functions.strings import clean_company_df
+    from ark_invest_api_rust_data_spark.functions.strings import (
+        clean_company_df,
+        company_chain_fused,
+    )
 
     spark = _get_spark()
     rows = [(i, s) for i, s in enumerate(strings)] + [(len(strings), None)]
     df = spark.createDataFrame(rows, "id long, company string")
     expected = {i: _company_chain_python(s) for i, s in rows}
-    for tier in ("expr", "fused"):
-        got = {
-            r["id"]: r["company"]
-            for r in clean_company_df(df, tier=tier).collect()
-        }
-        assert got == expected, f"tier={tier} diverges from Python reference"
+    frames = {
+        "clean_company_df": clean_company_df(df),
+        "company_chain_fused": df.select(
+            "id", company_chain_fused(F.col("company")).alias("company")
+        ),
+    }
+    for name, out in frames.items():
+        got = {r["id"]: r["company"] for r in out.collect()}
+        assert got == expected, f"{name} diverges from Python reference"
 
 
 # ------------------------------------------------------------- B32 codecs

@@ -1,9 +1,10 @@
 """DuckDB-oracle pins for the operators that run a single execution
-tier (k-means / IVF assignment, SimHash, quality filter, k-mins
-sketch, DSIR): each probe's Spark result must equal its committed
-``oracle_sql`` row for row, compared the way the correctness gate
-compares (columns sorted by name, rows order-insensitive, floats at
-full precision)."""
+tier (k-means / IVF assignment, semantic dedup's Arrow pair verify,
+SimHash, quality filter, k-mins sketch, DSIR, temperature mix, PQ and
+the fused IVF-PQ trainer with its search): each probe's Spark result
+must equal its committed ``oracle_sql`` row for row, compared the way
+the correctness gate compares (columns sorted by name, rows
+order-insensitive, floats at full precision)."""
 
 from __future__ import annotations
 
@@ -35,6 +36,10 @@ PROBES = [
     "llm_kmins_distinct",
     "llm_dsir_weights",
     "llm_dsir_incremental",
+    "llm_temperature_mix",
+    "llm_pq_topk",
+    "llm_ivfpq_topk",
+    "llm_ivfpq_persisted",
 ]
 
 
