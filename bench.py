@@ -3,6 +3,8 @@
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS].
 
+Usage: python bench.py [--compare PREV.json] [--only Q1,Q2,...]
+
 Output contract (round 5, revised round 12): the driver captures only
 the LAST ~2000 chars of stdout and parses one JSON object from them, so
 stdout ends with a summary line that always fits that window:
@@ -12,32 +14,42 @@ stdout ends with a summary line that always fits that window:
 The queries map is filled in descending wall-time order up to the
 window budget ("queries_omitted" counts any cheap tail that was cut;
 the full map is always in the detail line and BENCH_DETAIL.json).
-The full detail (per-query timings + per-query shuffle read/write
-bytes) is printed FIRST as its own JSON line and also written to
-BENCH_DETAIL.json next to this script, for round-over-round plan
-regression diffs.
+The full detail (per-query timings + per-query ledger) is printed FIRST
+as its own JSON line and also written to BENCH_DETAIL.json next to this
+script, for round-over-round plan regression diffs.
+
+``--only`` times just the named probes (any probe name; an unknown one
+is an error) through the same path and prints the same two lines, but
+leaves BENCH_DETAIL.json alone: a subset must not replace the committed
+full-headline baseline. tools/ab_cold.py runs it.
 
 Queries execute to a noop sink — full pipeline runs (scan→shuffle→agg),
 nothing materializes on the driver, so the number is engine time.
 
-Per-query shuffle read/write bytes come from the Spark status REST API
-(each query pass runs in its own job group; stage metrics are summed
-per group) — plan regressions show up round-over-round even when wall
-time is noisy.
+Each query pass runs in its own job group, and the steady pass's Spark
+ledger (perfbench.tracing.spark_ledger, read from the status REST API)
+goes into the detail: shuffle read/write bytes (gated against the
+committed baseline — plan regressions show up round-over-round even
+when wall time is noisy), jobs, stages, tasks, executor run, CPU and GC
+seconds, Python-worker bytes, and the driver gap (the pass's wall time
+outside the union of its jobs' intervals).
 """
 
 from __future__ import annotations
 
 import json
 import os
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from ark_invest_api_rust_data_spark.catalog import ALL_TABLES
 from ark_invest_api_rust_data_spark.plans import all_probes
 from ark_invest_api_rust_data_spark.session import get_spark
+from perfbench.tracing import clip, spark_ledger, union_length
 
 
 def input_layout(sf_dir: str) -> dict[str, dict[str, int]]:
@@ -219,47 +231,100 @@ SIDE = [
 ]
 
 
-def _rest_json(base: str, path: str):
-    import urllib.request
-
-    with urllib.request.urlopen(f"{base}{path}", timeout=10) as r:
-        return json.load(r)
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
 
 
-def shuffle_bytes_by_group(spark) -> dict[str, dict[str, int]]:
-    """Sum shuffle read/write bytes of every stage, keyed by the job
-    group its job ran under (stages counted once per group)."""
-    base = spark.sparkContext.uiWebUrl
-    if not base:
-        return {}
-    app_id = spark.sparkContext.applicationId
-    try:
-        jobs = _rest_json(base, f"/api/v1/applications/{app_id}/jobs?status=succeeded")
-        stages = _rest_json(base, f"/api/v1/applications/{app_id}/stages?status=complete")
-    except Exception:
-        return {}
-    per_stage = {
-        s["stageId"]: (
-            int(s.get("shuffleReadBytes", 0)),
-            int(s.get("shuffleWriteBytes", 0)),
-        )
-        for s in stages
+def warm_up(spark, probes, sf_dir: str) -> None:
+    """Untimed b01 and b07 passes: parquet footers, codegen, executor
+    spin-up — so per-query numbers measure the query, not session cold
+    start."""
+    for name in ("b01_join_broadcast", "b07_agg_q1"):
+        _noop(probes[name].spark(spark, sf_dir))
+
+
+def time_passes(
+    spark,
+    name: str,
+    plan,
+    sf_dir: str,
+    windows: dict[str, tuple[float, float]],
+    passes=range(2),
+    settle_s: float = 0.3,
+) -> float:
+    """Seconds of the fastest pass of ``plan(spark, sf_dir)`` to the noop
+    sink.
+
+    Settle first: a synchronous System.gc, a ``settle_s`` drain and
+    another System.gc — the previous query's async cleanup and deferred
+    GC otherwise steal CPU from this one. Then one pass per index ``i``
+    in ``passes``, back to back, under job group ``f"{name}@p{i}"``.
+    The first pass pays one-time whole-stage-codegen compilation, the
+    next runs warm from a quiesced JVM, so the min measures the query
+    itself, matching a dedicated session's steady state instead of
+    whoever ran before it. Each pass's (start, end) wall clock goes into
+    ``windows`` by job group, for the ledger's driver gap."""
+    sc = spark.sparkContext
+    sc._jvm.System.gc()
+    time.sleep(settle_s)
+    sc._jvm.System.gc()
+    best = None
+    for i in passes:
+        group = f"{name}@p{i}"
+        sc.setJobGroup(group, name)
+        t0 = time.time()
+        _noop(plan(spark, sf_dir))
+        t1 = time.time()
+        sc.setJobGroup(None, None)
+        windows[group] = (t0, t1)
+        elapsed = round(t1 - t0, 3)
+        best = elapsed if best is None else min(best, elapsed)
+    return best
+
+
+def ledger_row(group: dict, window: tuple[float, float]) -> dict:
+    """One pass's ledger entry: Spark work counts and times, plus the
+    driver gap — wall time outside the union of the pass's jobs."""
+    t0, t1 = window
+    return {
+        "wall_s": round(t1 - t0, 3),
+        "driver_gap_s": round(
+            t1 - t0 - union_length(clip(group["intervals"], t0, t1)), 3
+        ),
+        "jobs": group["jobs"],
+        "stages": group["stages"],
+        "tasks": group["tasks"],
+        "executor_run_s": round(group["executor_run_s"], 3),
+        "executor_cpu_s": round(group["executor_cpu_s"], 3),
+        "jvm_gc_s": round(group["jvm_gc_s"], 3),
+        "python_bytes_sent": int(group["python_bytes_sent"]),
+        "python_bytes_returned": int(group["python_bytes_returned"]),
     }
-    out: dict[str, dict[str, int]] = {}
-    seen: set[tuple[str, int]] = set()
-    for j in jobs:
-        group = j.get("jobGroup")
-        if not group:
-            continue
-        acc = out.setdefault(group, {"read": 0, "write": 0})
-        for sid in j.get("stageIds", []):
-            if (group, sid) in seen or sid not in per_stage:
-                continue
-            seen.add((group, sid))
-            r, w = per_stage[sid]
-            acc["read"] += r
-            acc["write"] += w
-    return out
+
+
+def committed_detail(detail_path: str) -> tuple[str, dict] | None:
+    """The committed BENCH_DETAIL.json and where it came from. git pins
+    HEAD's copy: this run overwrites the file on disk, so a second
+    same-round run against the disk copy would compare run-vs-run
+    variance, not round-vs-round plans (r9 advisor finding). The disk
+    copy serves only where git is unavailable (checkouts without
+    history); None when neither reads."""
+    try:
+        raw = subprocess.run(
+            ["git", "show", "HEAD:BENCH_DETAIL.json"],
+            capture_output=True,
+            cwd=HERE,
+            timeout=30,
+            check=True,
+        )
+        return "git:HEAD", json.loads(raw.stdout)
+    except (OSError, ValueError, subprocess.SubprocessError):
+        pass
+    try:
+        with open(detail_path) as f:
+            return "disk", json.load(f)
+    except (OSError, ValueError):
+        return None
 
 
 def _load_prev_bench(compare_path: str | None) -> tuple[str, dict] | None:
@@ -271,12 +336,11 @@ def _load_prev_bench(compare_path: str | None) -> tuple[str, dict] | None:
     import glob
     import re
 
-    here = os.path.dirname(os.path.abspath(__file__))
     candidates = (
         [compare_path]
         if compare_path
         else sorted(
-            glob.glob(os.path.join(here, "BENCH_r*.json")),
+            glob.glob(os.path.join(HERE, "BENCH_r*.json")),
             key=lambda p: -int(re.search(r"r(\d+)", os.path.basename(p)).group(1)),
         )
     )
@@ -301,11 +365,18 @@ def main() -> None:
     compare_path = None
     if "--compare" in sys.argv:
         compare_path = sys.argv[sys.argv.index("--compare") + 1]
+    probes = all_probes()
+    headline, side, only = HEADLINE, SIDE, "--only" in sys.argv
+    if only:
+        headline, side = sys.argv[sys.argv.index("--only") + 1].split(","), []
+        unknown = [n for n in headline if n not in probes]
+        if unknown:
+            raise SystemExit(f"bench.py --only: unknown probes {unknown}")
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(
         app_name="bench",
-        # status REST API for per-query shuffle metrics; keep plenty of
+        # status REST API for the per-query ledger; keep plenty of
         # stage history so nothing ages out mid-run
         extra_conf={
             "spark.ui.enabled": "true",
@@ -315,35 +386,14 @@ def main() -> None:
     )
     sc = spark.sparkContext
 
-    probes = all_probes()
-    # untimed warmup: parquet footers, codegen, executor spin-up — so
-    # per-query numbers measure the query, not session cold start
-    probes["b01_join_broadcast"].spark(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    probes["b07_agg_q1"].spark(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # Per query: settle (synchronous System.gc + drain — the previous
-    # query's async cleanup and deferred GC otherwise steal CPU from
-    # this one), then two timed passes BACK-TO-BACK, min kept.
-    # Probe-major ordering (round 4, same methodology fix as
-    # tools/scale_audit.py): pass 1 pays one-time whole-stage-codegen
-    # compilation, pass 2 runs warm from a quiesced JVM — min-of-2
-    # measures the query itself, matching dedicated-session
-    # steady state instead of whoever ran before it.
-    timings: dict[str, float] = {}
-    for name in HEADLINE + SIDE:
-        fn = probes[name].spark
-        sc._jvm.System.gc()
-        time.sleep(0.3)
-        for _pass in range(2):
-            sc.setJobGroup(f"{name}@p{_pass}", name)
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            elapsed = round(time.perf_counter() - t0, 3)
-            sc.setJobGroup(None, None)
-            if name not in timings or elapsed < timings[name]:
-                timings[name] = elapsed
+    warm_up(spark, probes, sf_dir)
+    # probe-major (round 4): settle, then a probe's two timed passes
+    # back to back — see time_passes
+    windows: dict[str, tuple[float, float]] = {}
+    timings = {
+        name: time_passes(spark, name, probes[name].spark, sf_dir, windows)
+        for name in headline + side
+    }
 
     # Phantom-regression killer (round-10, VERDICT r9 item 1): three
     # straight rounds a >1.3× wall delta recorded here was refuted by
@@ -355,6 +405,8 @@ def main() -> None:
     # both numbers, and report the min: a real plan regression
     # reproduces under the settle; a position artifact does not.
     prev = _load_prev_bench(compare_path)
+    detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
+    committed = committed_detail(detail_path)
     remeasured: dict[str, dict[str, float]] = {}
     # r12 (VERDICT r11 items 3/4): the flagging baseline used to be the
     # newest PARSED round artifact — BENCH_r07, whose map covers only
@@ -362,68 +414,61 @@ def main() -> None:
     # re-measure and their position-inflated first passes stood (run A
     # of the r12 bisect: llm_temperature_mix 10× with untouched code,
     # settled to 1× on re-measure). Flag against the committed
-    # BENCH_DETAIL (git:HEAD — full 94-query map, same source the
-    # shuffle-delta gate trusts) IN ADDITION to the round artifact;
-    # deltas_vs reporting below still uses the round artifact alone.
+    # BENCH_DETAIL (full 94-query map, same source the shuffle-delta
+    # gate trusts) IN ADDITION to the round artifact; deltas_vs
+    # reporting below still uses the round artifact alone.
     flag_base: dict[str, float] = {}
-    try:
-        import subprocess as _sp
-
-        _raw = _sp.run(
-            ["git", "show", "HEAD:BENCH_DETAIL.json"],
-            capture_output=True,
-            cwd=os.path.dirname(os.path.abspath(__file__)),
-            timeout=30,
-        )
-        if _raw.returncode == 0:
-            for k, v in (json.loads(_raw.stdout).get("queries") or {}).items():
-                flag_base[k] = float(v)
-    except Exception:
-        pass
+    if committed:
+        for k, v in (committed[1].get("queries") or {}).items():
+            flag_base[k] = float(v)
     if prev:
         _, prev_q = prev
         for k, v in prev_q.items():
             flag_base[k] = min(flag_base.get(k, v), v)
-    if flag_base:
-        flagged = [
-            n
-            for n in HEADLINE + SIDE
-            if n in flag_base
-            and flag_base[n] >= 0.3
-            and timings[n] > 1.3 * flag_base[n]
-        ]
-        for name in flagged:
-            fn = probes[name].spark
-            sc._jvm.System.gc()
-            time.sleep(1.0)
-            sc._jvm.System.gc()
-            best = None
-            for _pass in range(2, 4):
-                sc.setJobGroup(f"{name}@p{_pass}", name)
-                t0 = time.perf_counter()
-                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-                elapsed = round(time.perf_counter() - t0, 3)
-                sc.setJobGroup(None, None)
-                best = elapsed if best is None or elapsed < best else best
-            remeasured[name] = {"first": timings[name], "settled": best}
-            if best < timings[name]:
-                timings[name] = best
-        if flagged:
-            print(
-                f"re-measured {len(flagged)} flagged rows after settle: "
-                + json.dumps(remeasured),
-                file=sys.stderr,
-            )
+    flagged = [
+        n
+        for n in headline + side
+        if n in flag_base
+        and flag_base[n] >= 0.3
+        and timings[n] > 1.3 * flag_base[n]
+    ]
+    for name in flagged:
+        best = time_passes(
+            spark,
+            name,
+            probes[name].spark,
+            sf_dir,
+            windows,
+            passes=range(2, 4),
+            settle_s=1.0,
+        )
+        remeasured[name] = {"first": timings[name], "settled": best}
+        timings[name] = min(timings[name], best)
+    if flagged:
+        print(
+            f"re-measured {len(flagged)} flagged rows after settle: "
+            + json.dumps(remeasured),
+            file=sys.stderr,
+        )
 
-    by_group = shuffle_bytes_by_group(spark)
+    try:
+        by_group = spark_ledger(sc.uiWebUrl, sc.applicationId)
+    except (OSError, ValueError):
+        by_group = {}  # status API unavailable: an empty ledger
     shuffle: dict[str, dict[str, int]] = {}
-    for name in HEADLINE + SIDE:
+    ledger: dict[str, dict] = {}
+    for name in headline + side:
         # steady-state pass; fall back to pass 0 if pass 1 aged out
-        g = by_group.get(f"{name}@p1") or by_group.get(f"{name}@p0")
-        if g:
-            shuffle[name] = g
+        group = f"{name}@p1" if f"{name}@p1" in by_group else f"{name}@p0"
+        if group in by_group:
+            g = by_group[group]
+            shuffle[name] = {
+                "read": g["shuffle_read_bytes"],
+                "write": g["shuffle_write_bytes"],
+            }
+            ledger[name] = ledger_row(g, windows[group])
 
-    total = round(sum(timings[n] for n in HEADLINE), 3)
+    total = round(sum(timings[n] for n in headline), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
     layout = input_layout(sf_dir)
     # the headline SET has grown round over round (r01: 18 queries,
@@ -476,34 +521,11 @@ def main() -> None:
     # triangles' broadcast→SMJ regression late) — deliberate plan
     # changes should land with a SCALE.md note explaining their row.
     # WARN-only (rc stays 0): the driver's bench must keep parsing.
-    detail_path = os.path.join(
-        os.path.dirname(os.path.abspath(__file__)), "BENCH_DETAIL.json"
-    )
+    # The baseline is the committed detail (see committed_detail); no
+    # committed detail (first run), no gate.
     shuffle_deltas = None
-    try:
-        # Baseline = the COMMITTED detail (r9 advisor finding: this
-        # invocation overwrites BENCH_DETAIL.json below, so a second
-        # same-round run against the on-disk file would compare
-        # run-vs-run variance, not round-vs-round plans). git-show
-        # pins HEAD's copy; fall back to the disk file only when git
-        # is unavailable (driver sandboxes run from a checkout).
-        import subprocess
-
-        baseline_src = "git:HEAD"
-        try:
-            raw = subprocess.run(
-                ["git", "show", "HEAD:BENCH_DETAIL.json"],
-                capture_output=True,
-                cwd=os.path.dirname(os.path.abspath(__file__)),
-                timeout=30,
-            )
-            if raw.returncode != 0:
-                raise OSError(raw.stderr.decode(errors="replace")[:200])
-            prev_detail = json.loads(raw.stdout)
-        except Exception:
-            baseline_src = "disk"
-            with open(detail_path) as f:
-                prev_detail = json.load(f)
+    if committed:
+        baseline_src, prev_detail = committed
         prev_sh = prev_detail.get("shuffle_bytes") or {}
         # layout drift vs the committed baseline: wall deltas on
         # scan-bound probes are suspect whenever their input's physical
@@ -548,17 +570,16 @@ def main() -> None:
                 f"BENCH_DETAIL.json): {json.dumps(regressions)}",
                 file=sys.stderr,
             )
-    except (OSError, ValueError):
-        pass  # first run / unreadable previous detail: no gate
 
     detail = {
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "n_queries": len(HEADLINE),
-        "queries": {n: timings[n] for n in HEADLINE},
-        "side_experiments": {n: timings[n] for n in SIDE},
+        "n_queries": len(headline),
+        "queries": {n: timings[n] for n in headline},
+        "side_experiments": {n: timings[n] for n in side},
         "shuffle_bytes": shuffle,
+        "ledger": ledger,
         "input_layout": layout,
         "deltas_vs": deltas_vs,
         "delta_table": delta_table,
@@ -566,14 +587,15 @@ def main() -> None:
         "sf": sf_val,
     }
     # Detail first: one JSON line for humans/greppers, plus a sibling
-    # file for round-over-round shuffle-plan diffs.
+    # file for round-over-round shuffle-plan diffs (full runs only).
     print(json.dumps(detail))
-    try:
-        with open(detail_path, "w") as f:
-            json.dump(detail, f, indent=1)
-            f.write("\n")
-    except OSError:
-        pass  # read-only checkout: stdout detail line still has everything
+    if not only:
+        try:
+            with open(detail_path, "w") as f:
+                json.dump(detail, f, indent=1)
+                f.write("\n")
+        except OSError:
+            pass  # read-only checkout: stdout detail line still has everything
     # Summary LAST, guaranteed to fit the driver's ~2000-char tail
     # window (BENCH_r02..r04 all parsed null because the single detail
     # line outgrew it once shuffle_bytes was added; r08-r11 dropped the
@@ -589,7 +611,7 @@ def main() -> None:
         "metric": "headline_queries_total",
         "value": total,
         "unit": "sec",
-        "n_queries": len(HEADLINE),
+        "n_queries": len(headline),
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0),
         "queries": {},
         "queries_omitted": 0,
@@ -600,14 +622,14 @@ def main() -> None:
         "sf": sf_val,
     }
     budget = 1950  # driver tail window is 2000 chars incl. newline
-    by_cost = sorted(HEADLINE, key=lambda n: (-timings[n], n))
+    by_cost = sorted(headline, key=lambda n: (-timings[n], n))
     for name in by_cost:
         summary["queries"][name] = round(timings[name], 2)
-        summary["queries_omitted"] = len(HEADLINE) - len(summary["queries"])
+        summary["queries_omitted"] = len(headline) - len(summary["queries"])
         if len(json.dumps(summary, separators=(",", ":"))) > budget:
             del summary["queries"][name]
             break
-    summary["queries_omitted"] = len(HEADLINE) - len(summary["queries"])
+    summary["queries_omitted"] = len(headline) - len(summary["queries"])
     if not summary["queries_omitted"]:
         del summary["queries_omitted"]
     print(json.dumps(summary, separators=(",", ":")))

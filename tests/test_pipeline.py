@@ -100,6 +100,23 @@ def test_refresh_ticker_round_trip_budget(spark, tmp_path, py4j_commands):
     assert out.count() == 15
 
 
+# Spark jobs of a warm API-incremental refresh_ticker: the cache's
+# footer read for schema inference (1), the watermark max(date) (2),
+# JSON schema inference of the fetched body (1), the date-format budget
+# aggregate (2), dedupe and write (2).
+REFRESH_JOBS = 8
+
+
+def test_refresh_ticker_job_budget(spark, tmp_path, spark_jobs):
+    root = str(tmp_path)
+    write_ticker(normalize(csv_to_df(spark, ARK_CSV)), root, "ARKK")
+    refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
+    for _ in range(2):
+        with spark_jobs() as jobs:
+            refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
+        assert len(jobs) == REFRESH_JOBS, jobs
+
+
 def test_arkfundsio_explode_path(spark, tmp_path):
     """U6: nested holdings list-of-structs is exploded/unnested
     (util.rs:537-546)."""

@@ -6,10 +6,11 @@ same-session interleaved A/Bs systematically favored resident Python
 worker pools and amortized Arrow setup, and two of its kept changes
 regressed under the driver).
 
-Each rep runs tools/bench_subset.py (bench.py methodology: warmup,
-settle, two timed passes, min kept, noop sink) in its own subprocess
-with the variant's env vars applied; variants alternate A/B/A/B so
-ambient host drift cancels. Reports per-rep numbers and the min.
+Each rep runs ``bench.py --only`` (warm-up, settle, two timed passes,
+min kept, noop sink) in its own subprocess with the variant's env vars
+applied and reads its detail line's full-precision timings; variants
+alternate A/B/A/B so ambient host drift cancels. Reports per-rep
+numbers and the min.
 
 Usage:
   python tools/ab_cold.py --reps 3 \
@@ -31,9 +32,9 @@ import sys
 def run_subset(queries: list[str], env_over: dict[str, str]) -> dict[str, float]:
     env = dict(os.environ)
     env.update(env_over)
-    here = os.path.dirname(os.path.abspath(__file__))
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     proc = subprocess.run(
-        [sys.executable, os.path.join(here, "bench_subset.py"), *queries],
+        [sys.executable, os.path.join(repo, "bench.py"), "--only", ",".join(queries)],
         capture_output=True,
         text=True,
         env=env,
@@ -41,9 +42,10 @@ def run_subset(queries: list[str], env_over: dict[str, str]) -> dict[str, float]
     )
     if proc.returncode != 0:
         raise RuntimeError(
-            f"bench_subset rc={proc.returncode}: {proc.stderr[-2000:]}"
+            f"bench.py --only rc={proc.returncode}: {proc.stderr[-2000:]}"
         )
-    return json.loads(proc.stdout.strip().splitlines()[-1])
+    # stdout ends with the detail line, then the summary line
+    return json.loads(proc.stdout.strip().splitlines()[-2])["queries"]
 
 
 def main() -> None:

@@ -4,18 +4,28 @@ and measure how wall time and shuffle volume grow relative to input
 size — the empirical "would this survive 100×?" evidence behind
 SCALE.md. Usage:
 
-    python tools/scale_audit.py [out.json]
+    python tools/scale_audit.py [--sfs 0.01,0.1,1] [--only P1,P2,...] [out.json]
 
-Method: one session, untimed warmup per scale (parquet footers +
-codegen), two timed passes per (probe, sf), min kept (steady-state;
-see bench.py for why min-of-2 is honest now that operators release
-their caches). Shuffle bytes via the status REST API per job group.
+Method: one session; per scale bench.warm_up, then bench.time_passes
+per probe (settle, two timed passes, min kept — see bench.py for why
+min-of-2 is honest now that operators release their caches). Shuffle
+read bytes from the steady pass's job group in perfbench's Spark
+ledger.
 
-Scales: pass ``--sfs 0.01,0.1,1`` to select. Driver testdata covers
-0.001-0.1; sf1 resolves to /tmp/testdata/sf1, generated one decade up
-by tools/make_sf.py. The explicitly-quadratic tiers (the O(n^2)
+Only the shuffle column is scale evidence. Wall growth between the
+first and the second scale also holds the session's own warm-up
+(Python workers, codegen) that the first scale pays: with --sfs
+0.01,0.1 and a b07-only warm-up, 10 of 14 semantic-dedup/PQ probes
+read slower at sf0.01 than at sf0.1, on a 4x larger input.
+
+Scales: pass ``--sfs`` to select. Driver testdata covers 0.001-0.1;
+sf1 resolves to /tmp/testdata/sf1, generated one decade up by
+tools/make_sf.py. The explicitly-quadratic tiers (the O(n^2)
 exact-Jaccard oracle, the all-pairs knn-join probe) are skipped at
 sf1 — their scale path is LSH banding / ANN, already audited.
+
+``--only`` audits just the named probes, any name in the probe
+registry; an unknown name is an error.
 """
 
 from __future__ import annotations
@@ -23,11 +33,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench import HEADLINE, shuffle_bytes_by_group  # noqa: E402
+from bench import HEADLINE, spark_ledger, time_passes, warm_up  # noqa: E402
 from ark_invest_api_rust_data_spark.plans import all_probes  # noqa: E402
 from ark_invest_api_rust_data_spark.session import get_spark  # noqa: E402
 
@@ -77,6 +86,11 @@ def main() -> None:
         only = argv[i + 1].split(",")
         argv = argv[:i] + argv[i + 2 :]
     out_path = argv[0] if argv else "/tmp/scale_audit.json"
+    probes = all_probes()
+    names = only or HEADLINE + EXTRA
+    unknown = [n for n in names if n not in probes]
+    if unknown:
+        raise SystemExit(f"scale_audit.py: unknown probes {unknown}")
     spark = get_spark(
         app_name="scale_audit",
         extra_conf={
@@ -86,56 +100,30 @@ def main() -> None:
         },
     )
     sc = spark.sparkContext
-    probes = all_probes()
-    names = HEADLINE + EXTRA
-    if only:
-        names = [n for n in names if n in only]
 
     results: dict[str, dict[str, dict]] = {}
+    windows: dict[str, tuple[float, float]] = {}
     for sf in sfs:
         sf_dir = SF_DIRS.get(sf, f"/root/testdata/sf{sf}")
         if not os.path.isdir(sf_dir):
             print(f"skip sf{sf}: {sf_dir} missing (sf1: run tools/make_sf.py first)")
             continue
-        # warmup: footers + codegen for this scale's files
-        probes["b07_agg_q1"].spark(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
+        warm_up(spark, probes, sf_dir)  # footers + codegen for this scale's files
         for name in names:
             if float(sf) >= 1 and name in QUADRATIC:
                 continue
-            # settle before timing (r4, VERDICT r3 #6 — measured): the
-            # previous probe's async cleanup (unpersist /
-            # localCheckpoint release) plus deferred GC steal CPU from
-            # the NEXT probe, inflating CPU-bound probes 2-4x in long
-            # sessions (the old finding-15 "worker churn" hypothesis
-            # was wrong — worker counts stay flat). One synchronous
-            # System.gc + a short drain, THEN both timed passes
-            # back-to-back (probe-major, not pass-major): the second
-            # pass runs warm from a quiesced JVM, so min-of-2 measures
-            # the probe itself — in-audit ≈ dedicated-session, no
-            # min-across-sessions crutch.
-            sc._jvm.System.gc()
-            time.sleep(0.3)
-            for _pass in range(2):
-                sc.setJobGroup(f"{name}@sf{sf}@p{_pass}", name)
-                t0 = time.perf_counter()
-                probes[name].spark(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                elapsed = round(time.perf_counter() - t0, 3)
-                sc.setJobGroup(None, None)
-                cur = results.setdefault(name, {}).setdefault(sf, {"sec": elapsed})
-                cur["sec"] = min(cur["sec"], elapsed)
+            sec = time_passes(spark, f"{name}@sf{sf}", probes[name].spark, sf_dir, windows)
+            results.setdefault(name, {})[sf] = {"sec": sec}
 
-    by_group = shuffle_bytes_by_group(spark)
-    for name in names:
-        for sf in sfs:
-            if sf not in results.get(name, {}):
-                continue
+    try:
+        by_group = spark_ledger(sc.uiWebUrl, sc.applicationId)
+    except (OSError, ValueError):
+        by_group = {}  # status API unavailable: walls only
+    for name, by_sf in results.items():
+        for sf, row in by_sf.items():
             g = by_group.get(f"{name}@sf{sf}@p1") or by_group.get(f"{name}@sf{sf}@p0")
             if g:
-                results[name][sf]["shuffle_read"] = g["read"]
+                row["shuffle_read"] = g["shuffle_read_bytes"]
 
     with open(out_path, "w") as f:
         json.dump(results, f, indent=1)
