@@ -12,15 +12,22 @@ first → (backfill path only) sort → overwrite. On Spark:
                      extension surface lives in dedup.py (B28).
 * U3 sort          → date asc / weight desc with Polars' nulls-first
                      default pinned explicitly.
-* U4 watermark     → ``max(date)`` — tiny agg action, then pushed into
-                     the source fetch (query-param predicate pushdown).
+* U4 watermark     → ``max(date)``, pushed into the source fetch
+                     (query-param predicate pushdown). The refresh reads
+                     it from the cache's row-group statistics
+                     (parquet_store.footer_watermark); ``watermark``
+                     below is the aggregate it falls back to.
 * U5 merge         → composition below; idempotent because normalize is
                      idempotent and re-applied to both branches.
 
-At 100 TB the dedupe is the only shuffle; it hashes the full row which
-AQE handles fine, and the lake layout (ticker=/date= partitions,
-parquet_store.py) means each incremental merge touches only the
-affected date partitions rather than the whole history.
+``incremental_merge`` serves the per-ticker refresh, whose cache and
+fetched day are driver-sized and written as one file anyway: it dedupes
+in one partition, with no shuffle. ``concat_dedupe`` is the general
+path (the CSV backfill, the property tests); at 100 TB its dedupe is
+the only shuffle, hashing the full row, which AQE handles fine, and the
+lake layout (ticker=/date= partitions, parquet_store.py) means each
+incremental merge touches only the affected date partitions rather than
+the whole history.
 """
 
 from __future__ import annotations
@@ -60,11 +67,14 @@ def incremental_merge(
     source: DataSource | None = None,
 ) -> DataFrame:
     """U5 — normalize both branches, concat, dedupe. ``cache=None`` is
-    the bootstrap path (no merge, util.rs:76-78)."""
+    the bootstrap path (no merge, util.rs:76-78). Both branches are one
+    ticker's frames, so the union goes to one partition first: the
+    dedupe then plans no exchange, and the refresh's one-file write
+    needs no second job."""
     fresh = normalize(update, source)
     if cache is None:
         return fresh
-    return concat_dedupe([normalize(cache), fresh])
+    return normalize(cache).unionByName(fresh).coalesce(1).dropDuplicates()
 
 
 def scd2_apply(

@@ -3,8 +3,11 @@ scheduler re-expressed (SURVEY.md §3, O1–O7).
 
 Where the reference runs read→collect→format→collect→concat→collect→
 write per ticker (/root/reference/src/util.rs:43-108), here each ticker
-is ONE lazy Spark DAG: cache scan → (tiny watermark agg) → driver HTTP
-fetch → normalize both branches → union → dedupe → write. The triple
+is ONE lazy Spark DAG: cache scan (schema and watermark from the
+Parquet footer, no job) → driver HTTP fetch → normalize both branches →
+union → dedupe → write. A warm incremental refresh runs three Spark
+jobs: schema inference of the fetched JSON, the date-format budget
+aggregate, and one dedupe-and-write. The triple
 normalize application is KEPT (not collapsed): rule cascades reach
 their fixpoint only after up to 3 passes (see operators/normalize.py;
 property-tested) — but here they're lazy projections in one DAG, not
@@ -34,7 +37,7 @@ from .sources.data_reader import (
     http_fetch,
     json_to_df,
 )
-from .sources.parquet_store import read_ticker, write_ticker
+from .sources.parquet_store import footer_watermark, read_ticker, write_ticker
 from .tickers import SCHEDULED_EXCLUDED, Source, Ticker
 
 DEFAULT_ROOT = "data/parquet"
@@ -83,7 +86,11 @@ def refresh_ticker(
 
     last_day = None
     if source in (Source.API_INCREMENTAL, Source.ARKFUNDSIO_INCREMENTAL) and cache is not None:
-        last_day = watermark(normalize(cache))
+        # equal on a date-typed cache: normalize only drops null dates,
+        # which max ignores
+        known, last_day = footer_watermark(root, ticker.name)
+        if not known:
+            last_day = watermark(normalize(cache))
 
     update = fetch_update(spark, ticker, source, last_day, fetcher)
     merged = incremental_merge(cache, update)
@@ -102,9 +109,8 @@ def refresh_ticker(
         write_ticker(merged, root, ticker.name)
     # return the parquet-backed cache, not the in-memory plan: same rows,
     # but callers get a narrow scan with working predicate pushdown
-    # instead of re-running three composed normalizer passes. The
-    # written frame's schema spares the footer-inference job.
-    return read_ticker(spark, root, ticker.name, schema=merged.schema)
+    # instead of re-running three composed normalizer passes
+    return read_ticker(spark, root, ticker.name)
 
 
 def csv_backfill(
@@ -130,7 +136,7 @@ def csv_backfill(
     merged = canonical_sort(normalize(normalize(df)))
     write_ticker(merged, root, ticker.name)
     # parquet-backed return for the same reason as refresh_ticker
-    return read_ticker(spark, root, ticker.name, schema=merged.schema)
+    return read_ticker(spark, root, ticker.name)
 
 
 def scheduled_run(

@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import SparkSession
 
 # Conf that must be in place before certain reads/plans; all of these are
@@ -82,10 +83,11 @@ def tune(spark: SparkSession) -> SparkSession:
     for k, v in RUNTIME_CONF.items():
         try:
             spark.conf.set(k, v)
-        except Exception:
-            # Conf not recognized/settable on this build — leave the
-            # session's value in place rather than failing the query.
-            pass
+        except AnalysisException as e:
+            # a conf this session may not modify keeps the session's
+            # value; any other failure (a dead gateway, say) is real
+            if not (e.getCondition() or "").startswith("CANNOT_MODIFY_"):
+                raise
     return spark
 
 

@@ -109,7 +109,12 @@ def json_to_df(spark: SparkSession, text: str) -> DataFrame:
     in any job that scans the result. The records cross py4j as one
     newline-joined string split on the JVM (``json.dumps`` never emits
     a raw newline), which costs three round trips instead of one per
-    record."""
+    record.
+
+    The frame is one partition: it is a driver-held HTTP body, and a
+    global aggregate over one partition (the date-format budget in
+    functions/casts.py) plans no exchange, so it runs as one job, not
+    two."""
     parsed = json.loads(text)
     records = parsed if isinstance(parsed, list) else [parsed]
     jvm = spark._jvm
@@ -120,7 +125,7 @@ def json_to_df(spark: SparkSession, text: str) -> DataFrame:
         .toList()
     )
     jds = spark._jsparkSession.createDataset(lines, jvm.org.apache.spark.sql.Encoders.STRING())
-    return DataFrame(spark._jsparkSession.read().json(jds), spark)
+    return DataFrame(spark._jsparkSession.read().json(jds), spark).coalesce(1)
 
 
 def explode_holdings(df: DataFrame) -> DataFrame:

@@ -327,6 +327,66 @@ def committed_detail(detail_path: str) -> tuple[str, dict] | None:
         return None
 
 
+def same_cores(committed: tuple[str, dict] | None, cpus: int) -> tuple[str, dict] | None:
+    """``committed`` when it was measured on ``cpus`` cores, else None
+    and one WARN line. Shuffle partitions follow the core count, so
+    wall times and shuffle bytes from another core count are no
+    baseline for the settle re-measure flagging or the gates."""
+    if committed is None or committed[1].get("cpus") == cpus:
+        return committed
+    src, detail = committed
+    print(
+        f"WARN committed BENCH_DETAIL.json ({src}) was measured on "
+        f"cpus={detail.get('cpus')}, this run on {cpus}: no settle "
+        "re-measure flagging, shuffle gate or job gate against it",
+        file=sys.stderr,
+    )
+    return None
+
+
+def gate_regressions(
+    baseline: tuple[str, dict], shuffle: dict[str, dict], ledger: dict[str, dict]
+) -> tuple[dict, dict]:
+    """The WARN-only plan gates against the committed detail: queries
+    whose shuffle-read bytes grew >1.5x (1 MB floor: sub-MB exchanges
+    are scheduling noise), and queries that run 2 or more Spark jobs
+    more than their committed ledger row (a query with no committed
+    row is skipped). Returns the detail's ``shuffle_deltas`` and
+    ``job_deltas`` blocks."""
+    src, prev = baseline
+    prev_sh = prev.get("shuffle_bytes") or {}
+    shuffle_regs = {}
+    for q, cur in shuffle.items():
+        p = prev_sh.get(q)
+        if not isinstance(p, dict):
+            continue
+        pr, cr = p.get("read", 0), cur.get("read", 0)
+        if pr >= 1_000_000 and cr > 1.5 * pr:
+            shuffle_regs[q] = {"prev_read": pr, "cur_read": cr, "ratio": round(cr / pr, 2)}
+    prev_ledger = prev.get("ledger") or {}
+    job_regs = {}
+    for q, row in ledger.items():
+        p = (prev_ledger.get(q) or {}).get("jobs")
+        if p is not None and row["jobs"] - p >= 2:
+            job_regs[q] = {"prev_jobs": p, "cur_jobs": row["jobs"]}
+    if shuffle_regs:
+        print(
+            "WARN shuffle regression (>1.5x read bytes vs previous "
+            f"BENCH_DETAIL.json): {json.dumps(shuffle_regs)}",
+            file=sys.stderr,
+        )
+    if job_regs:
+        print(
+            "WARN job-count regression (+2 or more Spark jobs vs previous "
+            f"BENCH_DETAIL.json): {json.dumps(job_regs)}",
+            file=sys.stderr,
+        )
+    return (
+        {"threshold": 1.5, "baseline": src, "regressions": shuffle_regs},
+        {"threshold": 2, "baseline": src, "regressions": job_regs},
+    )
+
+
 def _load_prev_bench(compare_path: str | None) -> tuple[str, dict] | None:
     """Previous round's per-query timings for delta reporting.
     ``--compare PREV.json`` pins the baseline; otherwise the
@@ -385,6 +445,7 @@ def main() -> None:
         },
     )
     sc = spark.sparkContext
+    cpus = sc.defaultParallelism
 
     warm_up(spark, probes, sf_dir)
     # probe-major (round 4): settle, then a probe's two timed passes
@@ -407,6 +468,7 @@ def main() -> None:
     prev = _load_prev_bench(compare_path)
     detail_path = os.path.join(HERE, "BENCH_DETAIL.json")
     committed = committed_detail(detail_path)
+    baseline = same_cores(committed, cpus)
     remeasured: dict[str, dict[str, float]] = {}
     # r12 (VERDICT r11 items 3/4): the flagging baseline used to be the
     # newest PARSED round artifact — BENCH_r07, whose map covers only
@@ -418,8 +480,8 @@ def main() -> None:
     # gate trusts) IN ADDITION to the round artifact; deltas_vs
     # reporting below still uses the round artifact alone.
     flag_base: dict[str, float] = {}
-    if committed:
-        for k, v in (committed[1].get("queries") or {}).items():
+    if baseline:
+        for k, v in (baseline[1].get("queries") or {}).items():
             flag_base[k] = float(v)
     if prev:
         _, prev_q = prev
@@ -514,23 +576,22 @@ def main() -> None:
                 for n in common
             }
 
-    # Shuffle-delta gate (round-8 judge stretch item): compare this
-    # run's per-query shuffle-read bytes against the committed
-    # BENCH_DETAIL.json from the previous round. A query whose shuffle
-    # grew >1.5× signals a plan-shape flip (the class that caught
-    # triangles' broadcast→SMJ regression late) — deliberate plan
-    # changes should land with a SCALE.md note explaining their row.
-    # WARN-only (rc stays 0): the driver's bench must keep parsing.
-    # The baseline is the committed detail (see committed_detail); no
-    # committed detail (first run), no gate.
-    shuffle_deltas = None
+    # Plan gates (shuffle: round-8 judge stretch item; job count: the
+    # ledger's jobs): compare this run's per-query shuffle-read bytes
+    # and Spark job counts against the committed BENCH_DETAIL.json from
+    # the previous round. A query whose shuffle grew >1.5x signals a
+    # plan-shape flip (the class that caught triangles' broadcast→SMJ
+    # regression late); a query that grew by 2+ jobs gained an action
+    # or a stage boundary — deliberate plan changes should land with a
+    # SCALE.md note explaining their row. WARN-only (rc stays 0): the
+    # driver's bench must keep parsing. The baseline is the committed
+    # detail (see committed_detail) measured on this core count (see
+    # same_cores); without one, no gate.
     if committed:
-        baseline_src, prev_detail = committed
-        prev_sh = prev_detail.get("shuffle_bytes") or {}
         # layout drift vs the committed baseline: wall deltas on
         # scan-bound probes are suspect whenever their input's physical
         # layout moved underneath them (finding 38)
-        prev_layout = prev_detail.get("input_layout") or {}
+        prev_layout = committed[1].get("input_layout") or {}
         layout_changed = sorted(
             t
             for t in layout
@@ -546,30 +607,9 @@ def main() -> None:
                 f"baseline: {layout_changed}",
                 file=sys.stderr,
             )
-        regressions = {}
-        for q, cur in shuffle.items():
-            p = prev_sh.get(q)
-            if not isinstance(p, dict):
-                continue
-            pr, cr = p.get("read", 0), cur.get("read", 0)
-            # 1 MB floor: sub-MB exchanges are scheduling noise
-            if pr >= 1_000_000 and cr > 1.5 * pr:
-                regressions[q] = {
-                    "prev_read": pr,
-                    "cur_read": cr,
-                    "ratio": round(cr / pr, 2),
-                }
-        shuffle_deltas = {
-            "threshold": 1.5,
-            "baseline": baseline_src,
-            "regressions": regressions,
-        }
-        if regressions:
-            print(
-                "WARN shuffle regression (>1.5x read bytes vs previous "
-                f"BENCH_DETAIL.json): {json.dumps(regressions)}",
-                file=sys.stderr,
-            )
+    shuffle_deltas = job_deltas = None
+    if baseline:
+        shuffle_deltas, job_deltas = gate_regressions(baseline, shuffle, ledger)
 
     detail = {
         "metric": "headline_queries_total",
@@ -584,6 +624,8 @@ def main() -> None:
         "deltas_vs": deltas_vs,
         "delta_table": delta_table,
         "shuffle_deltas": shuffle_deltas,
+        "job_deltas": job_deltas,
+        "cpus": cpus,
         "sf": sf_val,
     }
     # Detail first: one JSON line for humans/greppers, plus a sibling
@@ -612,13 +654,14 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "n_queries": len(headline),
-        "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "0") or 0),
+        "cpus": cpus,
         "queries": {},
         "queries_omitted": 0,
         "deltas_vs": deltas_vs,
         "shuffle_regressions": (
             len(shuffle_deltas["regressions"]) if shuffle_deltas else None
         ),
+        "job_regressions": len(job_deltas["regressions"]) if job_deltas else None,
         "sf": sf_val,
     }
     budget = 1950  # driver tail window is 2000 chars incl. newline

@@ -73,3 +73,32 @@ def test_scale_audit_only_audits_probes_outside_the_headline(sf_dir, tmp_path):
     assert sorted(audit) == names
     for name in names:
         assert set(audit[name]["0.001"]) == {"sec", "shuffle_read"}
+
+
+def test_gates_skip_a_baseline_from_another_core_count(capsys):
+    """A committed detail measured on another core count, or with none
+    recorded, is no baseline: one WARN line says why. On the same core
+    count the job gate flags growth of 2+ jobs and skips queries that
+    have no committed ledger row, next to the shuffle gate."""
+    import bench
+
+    ledger = {"q_up2": {"jobs": 5}, "q_up1": {"jobs": 4}, "q_new": {"jobs": 9}}
+    shuffle = {"q_up2": {"read": 4_000_000}, "q_up1": {"read": 1_000_000}}
+    detail = {
+        "ledger": {"q_up2": {"jobs": 3}, "q_up1": {"jobs": 3}},
+        "shuffle_bytes": {"q_up2": {"read": 2_000_000}, "q_up1": {"read": 1_000_000}},
+    }
+    for cpus in (None, 32):
+        committed = ("git:HEAD", dict(detail, **({} if cpus is None else {"cpus": cpus})))
+        assert bench.same_cores(committed, 4) is None
+        warns = capsys.readouterr().err.splitlines()
+        assert len(warns) == 1 and warns[0].startswith("WARN") and f"cpus={cpus}" in warns[0]
+    assert bench.same_cores(None, 4) is None
+
+    committed = ("git:HEAD", dict(detail, cpus=4))
+    assert bench.same_cores(committed, 4) is committed
+    shuffle_deltas, job_deltas = bench.gate_regressions(committed, shuffle, ledger)
+    assert job_deltas["regressions"] == {"q_up2": {"prev_jobs": 3, "cur_jobs": 5}}
+    assert list(shuffle_deltas["regressions"]) == ["q_up2"]
+    err = capsys.readouterr().err
+    assert "WARN job-count regression" in err and "WARN shuffle regression" in err

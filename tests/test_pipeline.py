@@ -100,11 +100,12 @@ def test_refresh_ticker_round_trip_budget(spark, tmp_path, py4j_commands):
     assert out.count() == 15
 
 
-# Spark jobs of a warm API-incremental refresh_ticker: the cache's
-# footer read for schema inference (1), the watermark max(date) (2),
-# JSON schema inference of the fetched body (1), the date-format budget
-# aggregate (2), dedupe and write (2).
-REFRESH_JOBS = 8
+# Spark jobs of a warm API-incremental refresh_ticker: JSON schema
+# inference of the fetched body, the date-format budget aggregate, and
+# dedupe-and-write. The cache's schema and watermark come from its
+# Parquet footer (8 jobs when both were Spark actions and the driver-
+# sized frames kept their shuffles).
+REFRESH_JOBS = 3
 
 
 def test_refresh_ticker_job_budget(spark, tmp_path, spark_jobs):
@@ -115,6 +116,139 @@ def test_refresh_ticker_job_budget(spark, tmp_path, spark_jobs):
         with spark_jobs() as jobs:
             refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
         assert len(jobs) == REFRESH_JOBS, jobs
+
+
+def _canonical_table(dates, date_type=None, string_type=None):
+    """A canonical holdings table in pyarrow, one holding per date:
+    the shape the reference's Polars writer leaves, with ``ticker`` and
+    ``company`` as ``string_type`` (Polars stores large_string)."""
+    import pyarrow as pa
+
+    n = len(dates)
+    return pa.table({
+        "date": pa.array(dates, date_type or pa.date32()),
+        "ticker": pa.array(["TSLA"] * n, string_type or pa.string()),
+        "cusip": pa.array([f"C{i}" for i in range(n)], pa.string()),
+        "company": pa.array(["TESLA"] * n, string_type or pa.string()),
+        "market_value": pa.array(range(n), pa.int64()),
+        "shares": pa.array(range(n), pa.int64()),
+        "share_price": pa.array([1.5] * n, pa.float64()),
+        "weight": pa.array([0.5] * n, pa.float64()),
+    })
+
+
+def _days(*ds):
+    return [None if d is None else datetime.date(2024, 1, d) for d in ds]
+
+
+def test_footer_schema_equals_inferred_schema(spark, tmp_path):
+    """read_ticker takes a canonical cache's schema from its footer:
+    equal to Spark's inference, nullability included, for a Spark-
+    written cache and for a pyarrow-written one with string and
+    large_string columns. A string ``date`` is a string column like any
+    other (inference reads it as string too); a nanosecond timestamp
+    (bigint under nanosAsLong) is left to inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ark_invest_api_rust_data_spark.sources.parquet_store import footer_schema
+
+    root = str(tmp_path)
+    write_ticker(normalize(csv_to_df(spark, ARK_CSV)), root, "SPARK")
+    pq.write_table(_canonical_table(_days(1, 2), string_type=pa.large_string()), f"{root}/LARGE.parquet")
+    text_dates = _canonical_table(["2024-01-01", "2024-01-02"], date_type=pa.string())
+    pq.write_table(text_dates, f"{root}/TEXT.parquet")
+    stamps = pa.array([datetime.datetime(2024, 1, 1)], pa.timestamp("ns"))
+    pq.write_table(pa.table({"ts": stamps, "ticker": ["TSLA"]}), f"{root}/NANOS.parquet")
+    assert pq.read_schema(f"{root}/LARGE.parquet").field("ticker").type == pa.large_string()
+    for ticker in ("SPARK", "LARGE", "TEXT", "NANOS"):
+        path = f"{root}/{ticker}.parquet"
+        inferred = spark.read.parquet(path).schema
+        assert read_ticker(spark, root, ticker).schema == inferred, ticker
+        if ticker != "NANOS":
+            assert footer_schema(path) == inferred, ticker
+    assert footer_schema(f"{root}/NANOS.parquet") is None
+    assert spark.read.parquet(f"{root}/NANOS.parquet").schema["ts"].dataType.typeName() == "long"
+
+
+# name -> (dates, pyarrow write options, whether the statistics answer)
+_WATERMARK_CACHES = {
+    "row_groups": (_days(3, 9, 1, 7, 2, 8, 4, 5), {"row_group_size": 2}, True),
+    "all_null_row_group": (_days(5, 6, None, None, 2), {"row_group_size": 2}, True),
+    "no_rows": ([], {}, True),
+    "no_statistics": (_days(1, 2, 3), {"write_statistics": False}, False),
+    "text_dates": (["2024-01-01", "2024-01-03"], {}, False),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_WATERMARK_CACHES))
+def test_footer_watermark_equals_aggregate(spark, tmp_path, name):
+    """The refresh's watermark from the row-group statistics equals the
+    aggregate ``watermark(normalize(cache))``; where the statistics
+    cannot answer, footer_watermark says so and the refresh runs the
+    aggregate."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ark_invest_api_rust_data_spark.sources.parquet_store import footer_watermark
+
+    dates, kwargs, answers = _WATERMARK_CACHES[name]
+    date_type = pa.string() if name == "text_dates" else None
+    path = f"{tmp_path}/ARKK.parquet"
+    pq.write_table(_canonical_table(dates, date_type=date_type), path, **kwargs)
+    if name == "row_groups":
+        assert pq.read_metadata(path).num_row_groups == 4
+    known, last_day = footer_watermark(str(tmp_path), "ARKK")
+    assert known is answers
+    if known:
+        assert last_day == watermark(normalize(spark.read.parquet(path)))
+    else:
+        assert last_day is None
+
+
+def test_one_partition_only_on_driver_sized_frames(spark, tmp_path):
+    """The fetched day and the refresh's merge are one partition, so the
+    budget aggregate and the dedupe plan no exchange. The large-frame
+    paths keep theirs: concat_dedupe (the CSV backfill) still hashes
+    the rows across partitions, and normalize adds no repartitioning."""
+    from ark_invest_api_rust_data_spark.operators.merge import concat_dedupe, incremental_merge
+
+    def plan(df):
+        return df._jdf.queryExecution().executedPlan().toString()
+
+    update = json_to_df(spark, API_JSON_PAGE2)
+    assert update.rdd.getNumPartitions() == 1
+    root = str(tmp_path)
+    write_ticker(normalize(csv_to_df(spark, ARK_CSV)), root, "ARKK")
+    cache = read_ticker(spark, root, "ARKK")
+    assert "Exchange" not in plan(incremental_merge(cache, update))
+
+    rows = [(f"01/0{d}/2024", "TESLA INC", "TSLA UW", "88160R101", 9.5) for d in range(1, 8)]
+    wide = spark.createDataFrame(rows, "date string, company string, ticker string, cusip string, weight double")
+    assert wide.rdd.getNumPartitions() > 1
+    normalized = normalize(wide)
+    logical = normalized._jdf.queryExecution().optimizedPlan().toString()
+    assert "Repartition" not in logical and "Coalesce" not in logical, logical
+    assert normalized.rdd.getNumPartitions() == wide.rdd.getNumPartitions()
+    assert "Exchange hashpartitioning" in plan(concat_dedupe([normalize(cache), normalized]))
+
+
+def test_tune_raises_what_is_not_an_unmodifiable_conf(spark, monkeypatch):
+    """tune keeps the session's value of a conf it may not modify, and
+    lets any other failure of ``spark.conf.set`` through."""
+    from ark_invest_api_rust_data_spark import session
+
+    monkeypatch.setitem(session.RUNTIME_CONF, "spark.sql.warehouse.dir", "/nonexistent")
+    warehouse = spark.conf.get("spark.sql.warehouse.dir")
+    session.tune(spark)
+    assert spark.conf.get("spark.sql.warehouse.dir") == warehouse
+
+    def gateway_gone(key, value):
+        raise RuntimeError("gateway gone")
+
+    monkeypatch.setattr(spark.conf, "set", gateway_gone)
+    with pytest.raises(RuntimeError, match="gateway gone"):
+        session.tune(spark)
 
 
 def test_arkfundsio_explode_path(spark, tmp_path):
@@ -231,9 +365,10 @@ def test_json_to_df_runs_no_python_worker(spark):
 
 
 def test_read_back_with_written_schema_equals_inferred_read(spark, tmp_path):
-    """refresh_ticker and csv_backfill return the cache read with the
-    written frame's schema (no footer inference). Schema (nullability
-    included) and rows equal a plain inferring read of the file."""
+    """refresh_ticker and csv_backfill return the cache they wrote, read
+    with the schema from its footer (no inference job). Schema
+    (nullability included) and rows equal a plain inferring read of the
+    file."""
     root = str(tmp_path / "parquet")
     out = refresh_ticker(spark, Ticker.ARKK, Source.API_FULL, root, lambda url: API_JSON_PAGE2)
     csv_root = tmp_path / "csv"
