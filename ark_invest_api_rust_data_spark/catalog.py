@@ -75,7 +75,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every testdata table as a temp view for spark.sql probes."""
-    for name in ALL_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)

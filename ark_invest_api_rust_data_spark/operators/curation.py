@@ -325,28 +325,6 @@ def shard_assign(
     )
 
 
-def shard_export(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 16,
-    id_col: str = "doc_id",
-) -> None:
-    """Materialize the shard assignment as a hive-partitioned parquet
-    lake (shard=N directories, rows in shard-position order inside
-    each file): repartition ON the shard column so each shard is one
-    task's output, sortWithinPartitions on position so downstream
-    sequential readers see the deterministic order without re-sorting.
-    """
-    out = shard_assign(df, n_shards=n_shards, id_col=id_col).join(df, id_col)
-    (
-        out.repartition(n_shards, "shard")
-        .sortWithinPartitions("shard", "pos")
-        .write.mode("overwrite")
-        .partitionBy("shard")
-        .parquet(path)
-    )
-
-
 FUNNEL_STAGES = ("raw", "quality", "dedup", "train")
 
 

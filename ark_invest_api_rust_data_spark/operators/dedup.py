@@ -64,25 +64,6 @@ def exact_dedup(df: DataFrame, keys: list[str], order_cols: list[Column]) -> Dat
 # ------------------------------------------------------------------ shingles
 
 
-def word_shingles(text: Column, n: int = 3) -> Column:
-    """Distinct word n-grams (the Jaccard/MinHash unit).
-
-    Precondition: documents have >= n whitespace tokens (ANSI
-    element_at raises on shorter ones). Real pipelines hold this by
-    construction — the quality gate drops sub-n-token docs before any
-    shingle-based stage — and the oracle's NULL-gram semantics for
-    short docs would diverge from concat_ws anyway, so failing loudly
-    beats silently disagreeing.
-
-    PERF NOTE: ``toks`` inlines into every gram's lambda (HOF
-    transforms are CodegenFallback — the regex split runs ~3n times
-    per gram). Fine for one-shot frames; corpus-scale callers should
-    materialize the split in its own projection and use
-    ``shingles_from_tokens`` (measured 150 s → seconds on the sf10
-    shingle stage)."""
-    return shingles_from_tokens(F.split(F.trim(text), r"\s+"), n)
-
-
 def _gram_exprs(toks: Column, n: int) -> Column:
     """Raw word n-grams (with duplicates) from a token array."""
     return F.transform(
@@ -91,15 +72,6 @@ def _gram_exprs(toks: Column, n: int) -> Column:
             " ", *[F.element_at(toks, (i + j).cast("int")) for j in range(n)]
         ),
     )
-
-
-def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
-    """``word_shingles`` over an already-split token array — pass a
-    MATERIALIZED column (own projection; multi-referenced non-trivial
-    columns survive CollapseProject) so the split evaluates once per
-    row instead of once per element_at inside the interpreted gram
-    lambda."""
-    return F.array_distinct(_gram_exprs(toks, n))
 
 
 def hashed_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
@@ -121,7 +93,7 @@ def hashed_shingles_from_tokens(toks: Column, n: int = 3) -> Column:
     scale. First-occurrence order is preserved elementwise, so arrays
     stay aligned with the string tier. NOT for value-hashed sketch
     registers (kmins/simhash/Bloom mirror their fold in SQL — DuckDB
-    has no xxhash64); those stay on ``word_shingles``."""
+    has no xxhash64); those stay on raw gram strings."""
     # explicit 1-ary lambda: F.xxhash64 is *cols-variadic and PySpark's
     # HOF arity introspection would misread it
     return F.array_distinct(
@@ -155,19 +127,6 @@ def minhash_constants(num_hashes: int = 16) -> list[tuple[int, int]]:
         b = (40503 * (i * i + 7)) % MINHASH_MOD
         out.append((a, b))
     return out
-
-
-def shingle_base_hash(s: Column) -> Column:
-    """Base hash for MinHash: JVM-native xxhash64 folded into [0, 2^31).
-
-    Unlike simhash/fingerprints (whose VALUES are hash-compared against
-    the SQL oracle and therefore use the cross-engine 31-fold), minhash
-    is only a candidate generator — the probe's oracle is the exact
-    O(n²) Jaccard pair set, so the internal hash just needs to be
-    deterministic within Spark and uniform. xxhash64 runs inside
-    codegen; the interpreted per-character fold it replaces was the
-    single hottest expression in the LSH pipeline."""
-    return F.pmod(F.xxhash64(s), F.lit(MINHASH_MOD))
 
 
 def _affine(a: int, b: int):
@@ -276,7 +235,7 @@ def _signature_frame(
     hashed_shingles_from_tokens) + MinHash signature per doc — the
     shared front of the batch LSH, the band store builder, and the
     incremental path. The signature derives from pmod(_sh, 2³¹) —
-    exactly shingle_base_hash's value — so signatures, band keys, and
+    xxhash64 of the gram folded into [0, 2³¹) — so signatures, band keys, and
     any PERSISTED band store are bit-identical to the former
     string-shingle build; only the verify join-backs now ship 8-byte
     ints instead of gram strings."""
@@ -995,7 +954,7 @@ def jaccard_prefix_pairs(
     # whole fold re-runs per consumer (the same tier decision as
     # minhash_lsh_pairs' materialize=True; caches released before
     # returning, the tiny pair result checkpointed instead)
-    # NOTE no size filter: word_shingles always yields >= 1 gram, and
+    # NOTE no size filter: _gram_exprs always yields >= 1 gram, and
     # a filter on size(_sh) would be pushed BELOW the projection,
     # substituting the whole shingle fold into the predicate — the
     # fold then runs twice per row (measured: 8-10s -> 2s at sf0.1,
@@ -1116,12 +1075,6 @@ def simhash(
         term = F.when(bit_sum[b] > 0, F.lit(2**b)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
     return base.select(F.col("_id").alias(id_col), sim.cast("long").alias("simhash"))
-
-
-def hamming64(a: Column, b: Column) -> Column:
-    """Hamming distance between two int64 fingerprints (bit_count of
-    xor) — the SimHash pair-distance."""
-    return F.bit_count(a.bitwiseXOR(b))
 
 
 # ------------------------------------------------------------ clusters

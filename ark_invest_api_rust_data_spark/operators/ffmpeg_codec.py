@@ -167,41 +167,3 @@ def decode_video_gray_ffmpeg(
     return (w, h, gray)
 
 
-def encode_h264(width: int, height: int, frames: list[bytes], fps: int = 10) -> bytes | None:
-    """RGB frames → H.264-in-MP4 via ffmpeg, None when ffmpeg or a
-    H.264 encoder is unavailable. Test-fixture helper (the production
-    sink re-encodes to the pure-Python MJPEG tier, which every
-    container can read back); not part of any query plan."""
-    if not ffmpeg_available() or not frames or width < 1 or height < 1:
-        return None
-    raw = b"".join(frames)
-    if len(raw) != width * height * 3 * len(frames):
-        return None
-    with tempfile.NamedTemporaryFile(suffix=".raw", delete=False) as fi:
-        fi.write(raw)
-        in_path = fi.name
-    out_path = in_path + ".mp4"
-    try:
-        ok = _run(
-            [
-                _FFMPEG,
-                "-v", "error",
-                "-f", "rawvideo",
-                "-pix_fmt", "rgb24",
-                "-s", f"{width}x{height}",
-                "-r", str(fps),
-                "-i", in_path,
-                "-c:v", "libx264",
-                "-pix_fmt", "yuv420p",
-                "-movflags", "+faststart",
-                "-y", out_path,
-            ]
-        )
-        if ok is None or not os.path.exists(out_path):
-            return None
-        with open(out_path, "rb") as fo:
-            return fo.read()
-    finally:
-        os.unlink(in_path)
-        if os.path.exists(out_path):
-            os.unlink(out_path)

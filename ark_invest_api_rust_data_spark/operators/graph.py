@@ -267,8 +267,8 @@ def connected_components(
 def _degree_oriented(
     edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
 ) -> DataFrame:
-    """The (deg, id)-oriented simple edge list ``(u, v, kv)`` shared by
-    ``triangle_counts`` and ``triangle_wedge_bound``: canonicalize to
+    """The (deg, id)-oriented simple edge list ``(u, v, kv)`` of
+    ``triangle_counts``: canonicalize to
     undirected-simple, compute degrees, point every edge from the
     (degree, id)-smaller endpoint to the larger. ``kv`` is the head's
     degree (the wedge join's (deg, id) order key)."""
@@ -305,33 +305,6 @@ def _degree_oriented(
     )
 
 
-def triangle_wedge_bound(
-    edges: DataFrame, src_col: str = "src", dst_col: str = "dst"
-) -> DataFrame:
-    """The capacity-planning diagnostic for ``triangle_counts``: one
-    row ``(m, wedges, cap_m15)`` where ``wedges = Σ_u C(outdeg_u, 2)``
-    is the EXACT size of the wedge stream the closing join will
-    consume (outdeg under the same (deg, id) orientation), and
-    ``cap_m15 = m^1.5`` is its theoretical ceiling (degree orientation
-    caps effective out-degree at O(√m) — Schank & Wagner 2005 /
-    Suri & Vassilvitskii 2011). Cost: the same degree aggregation the
-    counting pass runs, plus an O(nodes) group — run it BEFORE
-    committing a cluster to the counting job on an unknown graph; a
-    wedge count far below the cap means the shuffle ratio observed on
-    a scale-up (e.g. the audited sf1→sf10 decade) is wedge-stream
-    growth, not a plan defect."""
-    o = _degree_oriented(edges, src_col, dst_col)
-    outdeg = o.groupBy("u").agg(F.count("*").alias("c"))
-    return outdeg.agg(
-        F.sum("c").cast("long").alias("m"),
-        F.sum(F.expr("c * (c - 1) / 2").cast("long")).cast("long").alias("wedges"),
-    ).select(
-        "m",
-        "wedges",
-        F.pow(F.col("m").cast("double"), F.lit(1.5)).alias("cap_m15"),
-    )
-
-
 def triangle_counts(
     edges: DataFrame,
     src_col: str = "src",
@@ -365,7 +338,7 @@ def triangle_counts(
     exactly the regime where AQE stops broadcasting the edge side and
     the wedge stream would otherwise pay the full shuffle (measured at
     the sf1→sf10 decade: the wedge stream is exactly linear — 10.0×
-    by ``triangle_wedge_bound`` — but the broadcast→SMJ switch turned
+    — but the broadcast→SMJ switch turned
     425 MB of shuffle into 11.75 GB and 127 s of wall, which the
     bloom brings back to 45 s / 7.8 GB — single-session A/B at sf10,
     output-equal). The probe is UNROLLED plain expressions

@@ -87,25 +87,6 @@ _C = [1 / math.sqrt(2)] + [1.0] * 7
 
 
 # ------------------------------------------------------------- color
-def rgb_to_ycbcr(r: int, g: int, b: int) -> tuple[int, int, int]:
-    """BT.601 full-range, exact integer floor-division (each term is
-    floor(x + 0.5) via (num + half) // den) — the SQL-replayable
-    transform the oracle uses."""
-    y = (299 * r + 587 * g + 114 * b + 500) // 1000
-    cb = 128 + (-168736 * r - 331264 * g + 500000 * b + 500000) // 1000000
-    cr = 128 + (500000 * r - 418688 * g - 81312 * b + 500000) // 1000000
-    clamp = lambda v: 0 if v < 0 else (255 if v > 255 else v)  # noqa: E731
-    return clamp(y), clamp(cb), clamp(cr)
-
-
-def ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
-    r = (1000 * y + 1402 * (cr - 128) + 500) // 1000
-    g = (100000 * y - 34414 * (cb - 128) - 71414 * (cr - 128) + 50000) // 100000
-    b = (1000 * y + 1772 * (cb - 128) + 500) // 1000
-    clamp = lambda v: 0 if v < 0 else (255 if v > 255 else v)  # noqa: E731
-    return clamp(r), clamp(g), clamp(b)
-
-
 # --------------------------------------------------------------- DCT
 def _fdct_quant(block: list[int]) -> list[int]:
     """Level-shifted forward DCT + quantization, zig-zag order.
@@ -302,18 +283,9 @@ def _encode_baseline(
     )
 
 
-def _pad_plane(width: int, height: int, get) -> list[int]:
-    bw, bh = (width + 7) // 8 * 8, (height + 7) // 8 * 8
-    return [
-        get(min(x, width - 1), min(y, height - 1))
-        for y in range(bh)
-        for x in range(bw)
-    ]
-
-
 def _pad_edge_np(plane, width: int, height: int):
     """Edge-replication padding to the 8×8 block grid, vectorized —
-    same values `_pad_plane`'s min-clamped indexing produces."""
+    each out-of-range index clamps to the last row/column."""
     import numpy as np
 
     bw, bh = (width + 7) // 8 * 8, (height + 7) // 8 * 8
@@ -330,10 +302,11 @@ def encode_jpeg(
     grid. See ``_encode_baseline`` for the table layout.
 
     r12 (guide §4.2): the color transform + padding run vectorized
-    over the whole image — the exact integer floor-division formulas
-    of ``rgb_to_ycbcr`` applied per-array (NumPy int64 ``//`` floors
-    exactly like Python's), so the planes are value-identical to the
-    former per-pixel loop (pinned by the codec roundtrip/fuzz tests)."""
+    over the whole image — BT.601 full-range with exact integer
+    floor division (NumPy int64 ``//`` floors exactly like Python's;
+    the SQL-replayable transform the oracle uses), so the planes are
+    value-identical to a per-pixel loop (pinned by the codec
+    roundtrip/fuzz tests)."""
     if width < 1 or height < 1:
         raise ValueError(f"bad dims {width}x{height}")
     if len(rgb) != width * height * 3:
@@ -353,27 +326,6 @@ def encode_jpeg(
             p = _pad_edge_np(p.reshape(height, width), width, height).ravel()
         planes.append(p.tolist())
     return _encode_baseline(width, height, planes, restart_interval)
-
-
-def encode_jpeg_gray(
-    width: int, height: int, gray: bytes, restart_interval: int = 0
-) -> bytes:
-    """Single-component baseline JPEG from a w·h gray byte stream —
-    exercises the 1-component decode path (Y plane replicated to
-    RGB)."""
-    if width < 1 or height < 1:
-        raise ValueError(f"bad dims {width}x{height}")
-    if len(gray) != width * height:
-        raise ValueError(f"need {width * height} gray bytes, got {len(gray)}")
-    if width % 8 == 0 and height % 8 == 0:
-        return _encode_baseline(width, height, [list(gray)], restart_interval)
-    import numpy as np
-
-    p = np.frombuffer(gray, dtype=np.uint8).astype(np.int64).reshape(
-        height, width
-    )
-    plane = _pad_edge_np(p, width, height).ravel().tolist()
-    return _encode_baseline(width, height, [plane], restart_interval)
 
 
 # ------------------------------------------------------------ decoder
@@ -758,11 +710,3 @@ def _decode_scan(data, pos, w, h, comps, quant, huff, dri):
     return (w, h, rgb.tobytes())
 
 
-def jpeg_constant_roundtrip(v: int) -> int:
-    """The closed-form a block-constant channel value takes through
-    encode→decode (quantized DC roundtrip; q0 = QUANT[0]) — the exact
-    formula the llm_multimodal_jpeg oracle replays in SQL."""
-    q0 = QUANT[0]
-    d = math.floor(8.0 * (v - 128) / q0 + 0.5) * q0
-    out = math.floor(d / 8 + 128.5)
-    return 0 if out < 0 else (255 if out > 255 else out)

@@ -64,118 +64,3 @@ def gram_matrix(
     )
 
 
-def dim_sums(
-    df: DataFrame, dim: int, scale: int = 10**6, vec_col: str = "embedding"
-) -> DataFrame:
-    """Exact int64 per-dimension sums Σ q over quantized embeddings
-    (the mean side of the covariance).  Same two-level reduce as
-    gram_matrix; d rows out."""
-    import numpy as np
-    import pandas as pd
-
-    def partials(batches):
-        acc = np.zeros(dim, dtype=np.int64)
-        n = 0
-        for b in batches:
-            if len(b) == 0:
-                continue
-            m = np.stack(b[vec_col].to_numpy())
-            acc += np.floor(m.astype(np.float64) * scale).astype(np.int64).sum(axis=0)
-            n += len(b)
-        if n:
-            yield pd.DataFrame({"cell": [acc.tolist()], "n": [n]})
-
-    part = df.select(vec_col).mapInPandas(partials, "cell array<long>, n long")
-    sums = (
-        part.select(F.posexplode("cell").alias("i", "v"))
-        .groupBy("i")
-        .agg(F.sum("v").alias("s"))
-        .select(F.col("i").cast("int").alias("i"), F.col("s").cast("long").alias("s"))
-    )
-    return sums
-
-
-class PcaModel:
-    """Driver-side PCA state: mean (quantized grid units) and top-k
-    components (rows of W, unit-norm, sign-fixed so each component's
-    largest-magnitude coordinate is positive — deterministic up to
-    eigenvalue ties)."""
-
-    def __init__(self, mean, components, explained_var, scale: int):
-        self.mean = mean
-        self.components = components
-        self.explained_var = explained_var
-        self.scale = scale
-
-
-def pca_fit(
-    df: DataFrame,
-    dim: int,
-    k: int,
-    scale: int = 10**6,
-    vec_col: str = "embedding",
-) -> PcaModel:
-    """Distributed PCA fit: ONE pass builds the exact int64 gram and
-    per-dim sums (both d²/d-row driver crossings — the same bounded
-    class as k-means centroids), then the d×d eigenproblem runs on the
-    driver in numpy (d is the embedding width — trivially small next
-    to the corpus).  The distributed aggregates are exact integers
-    (oracle-checked by llm_gram_matrix); the eigendecomposition is the
-    documented FLOAT tier, pinned by pytest against a numpy reference
-    (an irrational eigenbasis cannot hash-match across engines).
-
-    This is the whitening step SemDeDup-style pipelines apply before
-    cosine dedup."""
-    import numpy as np
-
-    n = df.count()
-    if n == 0 or k < 1 or k > dim:
-        raise ValueError("pca_fit: empty input or k out of range")
-    g = np.zeros((dim, dim), dtype=np.float64)
-    for r in gram_matrix(df, dim=dim, scale=scale, vec_col=vec_col).collect():
-        g[r["i"], r["j"]] = float(r["s"])
-    s = np.zeros(dim, dtype=np.float64)
-    for r in dim_sums(df, dim=dim, scale=scale, vec_col=vec_col).collect():
-        s[r["i"]] = float(r["s"])
-    mean = s / n
-    cov = (g - np.outer(mean, mean) * n) / n  # uncorrected (population)
-    evals, evecs = np.linalg.eigh(cov)  # ascending
-    order = np.argsort(evals)[::-1][:k]
-    comps = evecs[:, order].T  # k×d
-    # deterministic sign: largest-|coord| entry positive per component
-    for row in comps:
-        j = int(np.argmax(np.abs(row)))
-        if row[j] < 0:
-            row *= -1.0
-    return PcaModel(mean, comps, evals[order], scale)
-
-
-def pca_project(
-    df: DataFrame,
-    model: PcaModel,
-    vec_col: str = "embedding",
-    out_col: str = "proj",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Project embeddings onto the fitted components: centered matmul
-    per Arrow batch (numpy BLAS, components broadcast as a closure
-    constant — k·d floats).  Narrow map, zero shuffle."""
-    import numpy as np
-    import pandas as pd
-
-    mean, comps, scale = model.mean, model.components, model.scale
-
-    def proj(batches):
-        for b in batches:
-            if len(b) == 0:
-                continue
-            m = np.stack(b[vec_col].to_numpy())
-            q = np.floor(m.astype(np.float64) * scale)
-            y = (q - mean) @ comps.T
-            yield pd.DataFrame(
-                {id_col: b[id_col], out_col: [list(r) for r in y]}
-            )
-
-    return df.select(id_col, vec_col).mapInPandas(
-        proj, f"{id_col} long, {out_col} array<double>"
-    )

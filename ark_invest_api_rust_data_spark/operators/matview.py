@@ -6,7 +6,7 @@ warehouse answer is delta maintenance of distributive aggregates
 (SUM / COUNT — the self-maintainable class of Gupta & Mumick 1995):
 given the materialized aggregate at snapshot v and the row-level CDC
 delta v→v' (``op = 'insert' | 'delete'``, updates as delete+insert —
-exactly what sources/parquet_store.diff_lake_versions emits), the
+the multiset ``exceptAll`` of two snapshots in both directions), the
 refreshed view is
 
     n'      = n + Σ(inserts) − Σ(deletes)           per group

@@ -113,7 +113,7 @@ def scd2_apply(
     treated as no-ops: the open row already reflects a newer effective
     date, so the stale value lost the race by definition. Callers that
     need true bitemporal backfill must replay from a snapshot taken
-    before the stale date (streaming/scd2.py versions exist for that).
+    before the stale date.
     """
     if not tracked:
         raise ValueError("tracked must be non-empty")

@@ -95,35 +95,6 @@ def attach_media(
     )
 
 
-def ingest_binary_files(
-    spark, path: str, kind: str, glob: str | None = None
-) -> DataFrame:
-    """The real 100 TB ingest path: ``spark.read.format('binaryFile')``
-    over a directory of media files → MEDIA_SCHEMA. media_id is
-    xxhash64 of the file path — stable across runs and partitionings
-    (unlike monotonically_increasing_id). Parallelism comes from the
-    file listing; each file is one row, and Spark sizes partitions by
-    bytes, so giant media files don't skew tasks.
-
-    ``glob`` narrows the listing (e.g. '*.png') via pathGlobFilter —
-    pushed into the file index, never a post-scan filter."""
-    reader = spark.read.format("binaryFile")
-    if glob:
-        reader = reader.option("pathGlobFilter", glob)
-    raw = reader.load(path)
-    return raw.select(
-        F.xxhash64(F.col("path")).alias("media_id"),
-        F.lit(kind).alias("kind"),
-        F.col("content"),
-        F.struct(
-            F.lit(None).cast("int").alias("width"),  # real dims come from
-            F.lit(None).cast("int").alias("height"),  # extract_features
-            F.lit(None).cast("int").alias("sample_rate"),
-            F.lit(None).cast("int").alias("n_frames"),
-        ).alias("meta"),
-    )
-
-
 def parse_image_dims(b: bytes) -> tuple[int, int] | None:
     """REAL image metadata decode, pure Python over raw bytes — no
     media libs needed. Supports PNG (IHDR), JPEG (SOFn segment walk)
@@ -341,13 +312,6 @@ def _ppm_header_tokens(b: bytes) -> tuple[int, int, int, int] | None:
     if len(toks) < 3 or i >= n:
         return None
     return (toks[0], toks[1], toks[2], i + 1)  # single whitespace after maxval
-
-
-def encode_ppm(width: int, height: int, rgb: bytes) -> bytes:
-    """P6 binary PPM writer (top-down RGB — PPM's native layout)."""
-    if len(rgb) != width * height * 3:
-        raise ValueError(f"need {width * height * 3} rgb bytes, got {len(rgb)}")
-    return f"P6\n{width} {height}\n255\n".encode() + rgb
 
 
 def decode_ppm(b: bytes) -> tuple[int, int, bytes] | None:
@@ -1025,15 +989,6 @@ def decode_video_gray(b: bytes) -> tuple[int, int, list[bytes]] | None:
     return (w, h, gray)
 
 
-def parse_video_meta(b: bytes) -> tuple[int, int, int] | None:
-    """(width, height, n_frames) for GIF/AVI/MP4 video payloads, None else."""
-    decoded = decode_video_gray(b)
-    if decoded is None:
-        return None
-    w, h, frames = decoded
-    return (w, h, len(frames))
-
-
 def video_features(width: int, height: int, frames: list[bytes]) -> list[float]:
     """FEATURE_DIM vector from REAL decoded frames: dims, frame count,
     global/first/last frame means, peak value, and mean inter-frame
@@ -1058,16 +1013,6 @@ def video_features(width: int, height: int, frames: list[bytes]) -> list[float]:
         sum(frames[-1]) / n_px,
         motion,
     ]
-
-
-def parse_audio_meta(b: bytes) -> tuple[int, int, int] | None:
-    """Header-only audio metadata: (sample_rate, channels, n_frames)
-    for PCM16 WAV payloads, None otherwise."""
-    decoded = decode_wav(b)
-    if decoded is None:
-        return None
-    rate, channels, samples = decoded
-    return (rate, channels, len(samples) // channels)
 
 
 def audio_features(sample_rate: int, channels: int, samples: list[int]) -> list[float]:

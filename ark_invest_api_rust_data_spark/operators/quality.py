@@ -293,9 +293,7 @@ def drift_report(
     ca: DataFrame, cb: DataFrame, na: int, nb: int, shift: int = 20
 ) -> DataFrame:
     """The report half of ``distribution_drift``, over precomputed
-    (bucket, cnt_a)/(bucket, cnt_b) frames and totals — split out so a
-    streaming monitor can freeze the reference side's counts ONCE and
-    fold only each micro-batch's buckets (streaming/drift.py)."""
+    (bucket, cnt_a)/(bucket, cnt_b) frames and totals."""
     if na <= 0 or nb <= 0:
         raise ValueError(f"empty snapshot: n_a={na}, n_b={nb}")
     joined = ca.join(cb, "bucket", "full_outer").select(

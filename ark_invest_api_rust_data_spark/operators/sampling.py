@@ -67,21 +67,6 @@ def split_assign(
     return df.withColumn("bucket", bucket).withColumn("split", split)
 
 
-def stratified_sample(
-    df: DataFrame,
-    fraction_pct: int,
-    id_col: str = "doc_id",
-    strata_col: str = "source",
-) -> DataFrame:
-    """Deterministic ~fraction_pct% sample per stratum: keep rows whose
-    id bucket falls below the cutoff. Because the bucket depends only on
-    the id, the sample is reproducible and composes with split_assign
-    (the same doc keeps the same bucket in both). Salting the bucket
-    with the stratum (hash of strata_col + id) would decorrelate the
-    two — deliberately NOT done so sample ∩ split is predictable."""
-    return df.filter(hash_bucket(F.col(id_col)) < F.lit(fraction_pct))
-
-
 def mixture_sample(
     df: DataFrame,
     weights: dict[str, int],

@@ -141,70 +141,6 @@ def lsh_bucketed_topk(
 
 
 # ----------------------------------------------------- all-pairs tier
-def cosine_near_dup_pairs(
-    df: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """All-pairs cosine near-duplicates ≥ threshold, numpy-vectorized.
-
-    The μ-quantized matrix is broadcast to every task (int64; 1M
-    vectors × 64 dims ≈ 0.5 GB — fine); each partition scores its rows
-    against the full matrix with one integer matmul per Arrow batch and
-    emits only pairs (a < b) above threshold. Scoring math is identical
-    to the expression tier (int64 dot products are exact in numpy too;
-    final double divide + IEEE sqrt), so results hash-match the same
-    O(n²) SQL oracle — ~20× faster than per-pair expression evaluation.
-
-    Beyond broadcastable sizes: pre-bucket with srp_signature and run
-    this within buckets (the LSH tier above), or block the matrix and
-    pipeline block pairs.
-    """
-    import numpy as np
-    from pyspark.sql import types as T
-
-    quant = df.select(F.col(id_col).alias("_id"), _quantize(F.col(vec_col)).alias("_q"))
-    rows = quant.collect()  # driver holds ids + int matrix once to broadcast
-    ids = np.array([r["_id"] for r in rows], dtype=np.int64)
-    M = np.array([r["_q"] for r in rows], dtype=np.int64)
-    norms = np.sqrt((M * M).sum(axis=1).astype(np.float64))
-    sc = df.sparkSession.sparkContext
-    b_ids, b_M, b_norms = sc.broadcast(ids), sc.broadcast(M), sc.broadcast(norms)
-
-    out_schema = T.StructType(
-        [
-            T.StructField("vec_a", T.LongType()),
-            T.StructField("vec_b", T.LongType()),
-            T.StructField("cosine", T.DoubleType()),
-        ]
-    )
-
-    def score(batches):
-        import pandas as pd
-
-        all_ids, mat, nrm = b_ids.value, b_M.value, b_norms.value
-        order = {v: i for i, v in enumerate(all_ids)}
-        for pdf in batches:
-            idx = np.array([order[v] for v in pdf["_id"]], dtype=np.int64)
-            rows_q = mat[idx]  # (k, d) int64
-            dots = rows_q @ mat.T  # exact int64
-            cos = dots.astype(np.float64) / (nrm[idx][:, None] * nrm[None, :])
-            out_a, out_b, out_c = [], [], []
-            for r in range(len(idx)):
-                a_id = all_ids[idx[r]]
-                mask = (cos[r] >= threshold) & (all_ids > a_id)
-                for j in np.nonzero(mask)[0]:
-                    out_a.append(a_id)
-                    out_b.append(all_ids[j])
-                    out_c.append(cos[r][j])
-            yield pd.DataFrame({"vec_a": out_a, "vec_b": out_b, "cosine": out_c})
-
-    from .dedup import _spread
-
-    return _spread(quant).mapInPandas(score, out_schema)
-
-
 def cosine_near_dup_pairs_blocked(
     df: DataFrame,
     threshold: float,

@@ -7,7 +7,7 @@ Two sketches, both built from pure integer math so a SQL oracle can
 recompute them bit-for-bit:
 
 * **Bloom filter** (Bloom 1970) — ``bloom_build`` folds a key stream
-  into an m-bit bitmap (one ``array<long>`` row); ``bloom_contains``
+  into an m-bit bitmap (one ``array<long>`` row); ``bloom_contains_from_hash``
   probes it via a broadcast of that single row. The decontamination
   tier ``bloom_decontaminate`` replaces
   ``contamination_overlap``'s broadcast of the full benchmark shingle
@@ -206,24 +206,12 @@ def _bit_test(bitmap: Column, p: Column) -> Column:
     )
 
 
-def bloom_contains(key: Column, bitmap: Column, m_bits: int, k: int = 4) -> Column:
-    """True iff every one of the key's k bits is set in ``bitmap``
-    (an ``array<long>`` column, normally from a broadcast one-row
-    cross join of ``bloom_build``'s output). Unrolled plain-expression
-    ANDs — see ``_position_cols`` for why not an aggregate fold.
-
-    The per-character base fold is inlined into every position term
-    (k positions × 2 reads each), so prefer ``bloom_contains_from_hash``
-    over a ``token_hash32`` column PROJECTED BELOW the bitmap join when
-    the probe side is large — see ``bloom_decontaminate``."""
-    return bloom_contains_from_hash(token_hash32(key), bitmap, m_bits, k)
-
-
 def bloom_contains_from_hash(
     h: Column, bitmap: Column, m_bits: int, k: int = 4
 ) -> Column:
-    """``bloom_contains`` over an already-computed ``token_hash32``
-    base hash — the kmins_positions_from_hash discipline (round 11):
+    """Bloom membership of a key given its already-computed
+    ``token_hash32`` base hash — the kmins_positions_from_hash
+    discipline (round 11):
     the char fold is a CodegenFallback HOF evaluated interpreted, and
     inlining it into the k×2 position reads re-ran it up to 8× per
     probed key (measured at sf0.1: the decontaminate probe stage was
@@ -241,7 +229,7 @@ def bloom_contains_from_hash(
 def bloom_contains_i64(
     key: Column, bitmap: Column, m_bits: int, k: int = 4
 ) -> Column:
-    """``bloom_contains`` for the INT64 family (``hash_positions_i64``)
+    """Bloom membership for the INT64 family (``hash_positions_i64``)
     — probe with the same key expression the bloom was built with."""
     h = F.pmod(key.cast("long"), F.lit(4294967296))
     cond = F.lit(True)
@@ -309,8 +297,9 @@ def bloom_decontaminate(
 KMINS_M = 1 << 55
 
 
-def kmins_positions(key: Column, k: int) -> list[Column]:
-    """k independent hash values in [0, KMINS_M) for a string key.
+def kmins_positions_from_hash(h: Column, k: int) -> list[Column]:
+    """k independent hash values in [0, KMINS_M) from a key's
+    already-computed base hash ``h`` (``token_hash32``).
 
     TWO affine stages, unlike the Bloom/CMS single stage: the base
     token hash of a short key (a numeric id rendered as 2-3 digits) is
@@ -321,18 +310,13 @@ def kmins_positions(key: Column, k: int) -> list[Column]:
     independent coefficient pair (A'·h1 < 2^62, exact) so the mod-2^55
     image is well mixed even for consecutive short keys. Every step
     stays in int64 on any engine.
-    """
-    return kmins_positions_from_hash(token_hash32(key), k)
 
-
-def kmins_positions_from_hash(h: Column, k: int) -> list[Column]:
-    """The k affine stages over an already-computed base hash ``h``.
-    Split out so callers can materialize the char-fold ONCE in its own
-    projection (multi-referenced non-trivial columns are not inlined
-    by CollapseProject) — inlining ``token_hash32`` into all k
-    register expressions re-runs the interpreted char fold k times
-    per key (HOF folds are CodegenFallback; measured 10.7× wall on
-    the 64-register overlap sketch at sf1)."""
+    Callers materialize the char-fold ONCE in its own projection
+    (multi-referenced non-trivial columns are not inlined by
+    CollapseProject) — inlining ``token_hash32`` into all k register
+    expressions re-runs the interpreted char fold k times per key (HOF
+    folds are CodegenFallback; measured 10.7× wall on the 64-register
+    overlap sketch at sf1)."""
     out: list[Column] = []
     for i in range(k):
         a1, b1 = _coef(i)
@@ -344,33 +328,8 @@ def kmins_positions_from_hash(h: Column, k: int) -> list[Column]:
     return out
 
 
-def py_kmins_positions(key: str, k: int) -> list[int]:
-    """Pure-Python replica of ``kmins_positions`` (same constants, same
-    two-stage fold) — the streaming twin's per-row hash
-    (streaming/stateful.kmins_distinct_stateful) and the unit tests'
-    independent reference. Kept adjacent so the three engines (Spark
-    expression, DuckDB SQL, Python state updater) can never drift."""
-    h = 0
-    for ch in key:
-        h = (h * 31 + ord(ch)) % (1 << 32)
-    out: list[int] = []
-    for i in range(k):
-        a1, b1 = _coef(i)
-        a2, b2 = _coef(i + k)
-        h1 = (a1 * h + b1) % (1 << 31)
-        out.append(((a2 * h1 + b2) % MERSENNE61) % KMINS_M)
-    return out
-
-
-def py_kmins_estimate(mins: list[int]) -> int:
-    """The integer estimator over a register array — mirrors
-    ``kmins_distinct``'s expression."""
-    k = len(mins)
-    return max(0, ((k - 1) * KMINS_M) // max(sum(mins), 1) - 1)
-
-
 def sql_kmins_positions(k: int, hash_sql: str) -> list[str]:
-    """DuckDB fragments mirroring ``kmins_positions`` over a
+    """DuckDB fragments mirroring ``kmins_positions_from_hash`` over a
     precomputed base-hash expression ``hash_sql`` — kept adjacent so
     the two stages can never drift."""
     out: list[str] = []
@@ -406,7 +365,7 @@ def kmins_sketch(
     days — the streaming/backfill union costs nothing.
 
     Pure int64 (the two-stage variant of the Bloom/CMS hash family —
-    see ``kmins_positions`` for why one stage is not enough here), so
+    see ``kmins_positions_from_hash`` for why one stage is not enough here), so
     a SQL oracle recomputes every register bit-for-bit.
     """
     # base char-fold materialized ONCE per key in its own projection
@@ -587,46 +546,6 @@ def _kmins_est_from(col_name: str, k: int) -> Column:
     )
 
 
-def corpus_overlap_split(
-    keys: DataFrame,
-    key_col: str,
-    split_col: str,
-    k: int = 64,
-) -> DataFrame:
-    """``corpus_overlap`` when both corpora come from ONE frame split
-    by a boolean column (the common dashboard shape: new-crawl flag,
-    language flag, time cut): a SINGLE grouped sketch pass computes
-    both register arrays — one corpus scan and one interpreted
-    char-fold pass instead of ``corpus_overlap``'s two sketch scans
-    plus two emptiness-guard scans (measured 4.7 s → ~2 s at sf0.1 on
-    the shingle overlap probe; the fold is the cost, so halving the
-    passes halves the wall). Same registers, same estimates, same SQL
-    oracle — the split is a groupBy key, not different math. The
-    emptiness guard reads the SAME 2-row result: a missing side
-    raises exactly like corpus_overlap's per-side check.
-
-    Rows with a NULL ``split_col`` are dropped alongside NULL keys:
-    they belong to neither corpus, and letting them through would
-    create a third sketch group whose ``_side`` is None — and since
-    ``bool(None) == False``, the dict comprehension below would
-    silently overwrite the real False-side registers (r10 advisor)."""
-    flagged = keys.filter(
-        F.col(key_col).isNotNull() & F.col(split_col).isNotNull()
-    ).select(
-        F.col(key_col), F.col(split_col).cast("boolean").alias("_side")
-    )
-    rows = kmins_sketch(flagged, key_col, ["_side"], k).collect()
-    mins = {bool(r["_side"]): r["mins"] for r in rows}
-    for side, flag in (("keys_a", True), ("keys_b", False)):
-        if flag not in mins:
-            raise ValueError(f"corpus_overlap: {side} has no keys")
-    spark = keys.sparkSession
-    both = spark.createDataFrame(
-        [(mins[True], mins[False])], "_ma array<long>, _mb array<long>"
-    ).withColumn("_mu", kmins_merge(F.col("_ma"), F.col("_mb")))
-    return _overlap_estimates(both, k)
-
-
 def _overlap_estimates(both: DataFrame, k: int) -> DataFrame:
     """Shared estimator tail: (est_a, est_b, est_union,
     est_intersection, jaccard_ppm) from (_ma, _mb, _mu) registers."""
@@ -660,8 +579,17 @@ def corpus_overlap_docs(
     n: int = 3,
     k: int = 64,
 ) -> DataFrame:
-    """``corpus_overlap_split`` fused over RAW documents: one Arrow
-    pass tokenizes, shingles, hashes and min-reduces each batch to at
+    """Constant-size overlap estimate between the word n-shingle sets
+    of the two halves of ``docs`` split by the boolean ``side_col``:
+    one row with ``est_a``, ``est_b``, ``est_union``,
+    ``est_intersection``, ``jaccard_ppm``. Each side reduces to a
+    k-register k-mins sketch; the UNION sketch is the elementwise min
+    of the two (Cohen 1997 mergeability), so |A∩B| ≈ est(A) + est(B) −
+    est(A∪B) and J = |A∩B| / |A∪B| as integer ppm. Relative error
+    ~1/√(k−2) per estimate; small overlaps read as 0 (the clamp).
+
+    One Arrow pass tokenizes, shingles, hashes and min-reduces each
+    batch to at
     most two (side, k-register) partial rows, which a single tiny
     aggregation merges (elementwise min is associative/commutative).
 
@@ -680,7 +608,8 @@ def corpus_overlap_docs(
     the driver to chew on. Measured: llm_corpus_overlap probe pass
     4.1 s → well under 1 s at sf0.1.
 
-    BIT-IDENTITY with the split form (pytest-pinned): the per-gram
+    BIT-IDENTITY with the split form (the expression pipeline the
+    tests keep as the reference): the per-gram
     hash is the same 31-fold over the same gram strings — tokenization
     replicates Spark exactly (``trim`` strips 0x20 only; Java ``\\s``
     is ASCII ``[ \\t\\n\\x0B\\f\\r]`` = Python ``re.ASCII`` ``\\s``;
@@ -694,7 +623,8 @@ def corpus_overlap_docs(
     gram exactly like the expression tier (see inline comment); a
     sub-n-token document
     raises loudly (the split form's ANSI ``element_at`` contract); a
-    side with no keys raises exactly like ``corpus_overlap_split``.
+    side with no keys raises (NULL registers would read an empty crawl
+    as (k-1)·M distinct keys with ~total overlap).
 
     Scale shape: partial rows are 2 per Arrow batch, merged by a
     map-side-combinable fold aggregate — shuffle is O(batches), the
@@ -799,44 +729,3 @@ def corpus_overlap_docs(
     return _overlap_estimates(both, k)
 
 
-def corpus_overlap(
-    keys_a: DataFrame,
-    keys_b: DataFrame,
-    key_col: str,
-    k: int = 64,
-) -> DataFrame:
-    """Constant-size overlap estimate between two key sets (e.g. the
-    shingle sets of two corpora): one row with ``est_a``, ``est_b``,
-    ``est_union``, ``est_intersection``, ``jaccard_ppm``.
-
-    The question 'how much of this new crawl is already in the
-    training set?' at 100 TB cannot afford a shingle-level join — but
-    two k-register k-mins sketches answer it in one narrow pass per
-    corpus: the UNION sketch is the elementwise min of the two
-    registers (Cohen 1997 mergeability), so
-
-        |A∩B| ≈ est(A) + est(B) − est(A∪B)     (inclusion–exclusion)
-        J(A,B) = |A∩B| / |A∪B|                  (as integer ppm)
-
-    Relative error ~1/√(k−2) per estimate (k=64 → ~13%); the
-    intersection inherits the union's absolute error, so small
-    overlaps read as 0 (the clamp) — the right failure mode for a
-    contamination dashboard, with Bloom decontamination
-    (bloom_decontaminate) as the exact per-document follow-up.
-
-    Scale shape: each sketch is k plain min aggregates — map-side
-    combined to ONE row per corpus regardless of cardinality; the
-    combine is a 1×1 cross join. All-integer registers and estimates
-    (the kmins_positions int64 contract), replayed exactly by the SQL
-    oracle."""
-    # loud emptiness guard: a global min over zero rows yields NULL
-    # registers, and NULL-skipping greatest/least would then read an
-    # empty crawl as (k-1)·M distinct keys with ~total overlap — the
-    # worst possible silent answer for a contamination dashboard
-    for side, keys in (("keys_a", keys_a), ("keys_b", keys_b)):
-        if keys.filter(F.col(key_col).isNotNull()).limit(1).count() == 0:
-            raise ValueError(f"corpus_overlap: {side} has no keys")
-    sa = kmins_sketch(keys_a, key_col, [], k).select(F.col("mins").alias("_ma"))
-    sb = kmins_sketch(keys_b, key_col, [], k).select(F.col("mins").alias("_mb"))
-    both = sa.crossJoin(sb).withColumn("_mu", kmins_merge(F.col("_ma"), F.col("_mb")))
-    return _overlap_estimates(both, k)

@@ -15,7 +15,7 @@ Scale shape: computing z is a pure narrow expression (built-in
 shift/and ops, whole-stage codegen); the layout write is ONE
 repartitionByRange shuffle on z (range boundaries from Spark's
 reservoir sample) + an in-partition sort — the same cost as any sorted
-lake compaction (`parquet_store.compact_lake`), with pruning on d
+lake compaction, with pruning on d
 dimensions instead of 1 as the payoff. At 100 TB this is the layout
 job you run once per compaction window, amortized over every
 subsequent scan.
@@ -31,7 +31,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 
 import pyspark.sql.functions as F
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 
 
 def z_value(cols: Sequence[Column], bits: int = 16) -> Column:
@@ -57,22 +57,3 @@ def z_value(cols: Sequence[Column], bits: int = 16) -> Column:
     return z
 
 
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 16,
-    n_files: int = 8,
-) -> None:
-    """Write ``df`` as a z-ordered parquet lake: range-partition on the
-    Morton value (contiguous curve segment per file) and sort within
-    partitions so row groups inherit the locality too."""
-    zc = z_value([F.col(c) for c in cols], bits=bits)
-    (
-        df.withColumn("_z", zc)
-        .repartitionByRange(n_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-        .write.mode("overwrite")
-        .parquet(path)
-    )

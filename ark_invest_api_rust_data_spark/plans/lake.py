@@ -14,7 +14,9 @@ file listing in the scan).
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
 import tempfile
 
 import pyspark.sql.functions as F
@@ -35,6 +37,7 @@ def build_orders_lake(spark: SparkSession, sf: str) -> str:
     if path and os.path.isdir(f"{path}/holdings"):
         return path
     root = tempfile.mkdtemp(prefix="orders_lake_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
     orders = load_table(spark, sf, "orders").withColumns(
         {
             "ticker": F.col("o_orderstatus"),

@@ -183,7 +183,7 @@ _OVERLAP_K = 64
 
 def llm_corpus_overlap(spark: SparkSession, sf: str) -> DataFrame:
     """B9/B29 extension — cross-corpus contamination estimate
-    (operators/sketch.corpus_overlap): the 3-shingle sets of the
+    (operators/sketch.corpus_overlap_docs): the 3-shingle sets of the
     lang='en' and non-English corpus halves, each reduced to a
     64-register k-mins sketch (one narrow pass, ONE row per corpus),
     merged by elementwise min into the union sketch;

@@ -188,8 +188,7 @@ def w02_matview_refresh(spark: SparkSession, sf: str) -> DataFrame:
     view is refreshed from the row-level CDC delta alone — the base
     table is never rescanned. The oracle is the FULL RECOMPUTE over
     the new snapshot, so the gate proves refresh ≡ recompute exactly
-    (decimal measures; delete+insert update encoding, the
-    diff_lake_versions contract)."""
+    (decimal measures; delete+insert update encoding)."""
     from ..operators.matview import matview_build, matview_refresh
 
     orders = load_table(spark, sf, "orders")

@@ -14,9 +14,13 @@ Two entry points:
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import zipfile
 
-from pyspark.errors import AnalysisException
+from pyspark.errors import AnalysisException, PySparkAttributeError
 from pyspark.sql import SparkSession
 
 # Conf that must be in place before certain reads/plans; all of these are
@@ -55,13 +59,21 @@ def _ship_package(spark: SparkSession) -> None:
     code to a real cluster."""
     if getattr(spark, "_pkg_shipped", False):
         return
-    import tempfile
-    import zipfile
+    spark._pkg_shipped = True
+    try:
+        sc = spark.sparkContext
+    except PySparkAttributeError:
+        return  # a Connect session has no SparkContext: its workers
+        # rely on a shared filesystem PYTHONPATH instead
 
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     pkg_name = os.path.basename(pkg_dir)
-    fd, zpath = tempfile.mkstemp(suffix=".zip", prefix="ark_spark_pkg_")
-    os.close(fd)
+    # the SparkContext copies the zip when it is added (and local
+    # executors fetch it from here), so it only has to outlive this
+    # process
+    zdir = tempfile.mkdtemp(prefix="ark_spark_pkg_")
+    atexit.register(shutil.rmtree, zdir, ignore_errors=True)
+    zpath = os.path.join(zdir, f"{os.path.basename(zdir)}.zip")
     with zipfile.ZipFile(zpath, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for fn in files:
@@ -69,12 +81,7 @@ def _ship_package(spark: SparkSession) -> None:
                     full = os.path.join(root, fn)
                     rel = os.path.join(pkg_name, os.path.relpath(full, pkg_dir))
                     zf.write(full, rel)
-    try:
-        spark.sparkContext.addPyFile(zpath)
-    except Exception:
-        pass  # e.g. Connect-only session without an SC — workers then
-        # rely on a shared filesystem PYTHONPATH instead
-    spark._pkg_shipped = True
+    sc.addPyFile(zpath)
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -103,19 +110,20 @@ def get_spark(
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_SHUFFLE_PARTITIONS", cpus))
-    import tempfile
-
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
-        # managed-table warehouse (bucketed tables) out of the repo tree
+        # the catalog creates its warehouse directory on first use;
+        # without this conf that is ./spark-warehouse in the working
+        # directory. One fixed directory, reused by every session.
         .config(
             "spark.sql.warehouse.dir",
             os.environ.get(
-                "SPARK_WAREHOUSE_DIR", tempfile.mkdtemp(prefix="spark-warehouse-")
+                "SPARK_WAREHOUSE_DIR",
+                os.path.join(tempfile.gettempdir(), "ark-spark-warehouse"),
             ),
         )
     )

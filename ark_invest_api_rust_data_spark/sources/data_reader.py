@@ -136,32 +136,3 @@ def explode_holdings(df: DataFrame) -> DataFrame:
     return df.select(F.explode("holdings").alias("h")).select("h.*")
 
 
-def csv_scan_with_quarantine(
-    spark: SparkSession, path: str, schema: str
-) -> tuple[DataFrame, DataFrame]:
-    """S5 hardened for dirty 100 TB inputs: distributed CSV scan in
-    PERMISSIVE mode with a corrupt-record column — rows that fail the
-    schema land in a quarantine frame (with their raw text preserved
-    for replay/debugging) instead of failing the job or silently
-    nulling fields. Returns ``(good, quarantined)``.
-
-    The scan is cached before splitting: Spark computes the corrupt
-    column during parsing, and filtering on it from two separate
-    uncached scans is explicitly unsupported (each scan would re-parse
-    and could disagree); one cache keeps good/bad consistent views of
-    the same parse.
-    """
-    from pyspark.sql import functions as F
-
-    full_schema = schema + ", _corrupt_record STRING"
-    df = (
-        spark.read.option("header", True)
-        .option("mode", "PERMISSIVE")
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .schema(full_schema)
-        .csv(path)
-        .cache()
-    )
-    good = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
-    bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
-    return good, bad

@@ -9,23 +9,22 @@ on ``TaskContext.attemptNumber() == 0`` (every task of the wrapped
 stage fails once, then succeeds on retry — exactly the routine
 lost-executor retry at 1000-executor scale), spliced into:
 
-* the ingest-dedup stream's band/pairs stages (patched module globals
-  ``band_table`` / ``incremental_near_dup_pairs``), so the docs/bands
-  parquet WRITE jobs themselves run with retried upstream tasks,
-  followed by a band-store compaction;
-* the SCD2 merge (patched ``scd2_apply``), so every versioned dim
-  write runs with retried tasks.
+* a warm API-incremental ``refresh_ticker`` (patched ``pipeline``
+  module global ``incremental_merge``), so the cache write job runs
+  with retried tasks;
+* the ANN code lake's seed → ingest stream → compaction (patched
+  ``ann_ingest`` module global ``encode_batch_for_lake``), so every
+  ``src=`` partition write runs with retried tasks before the fold.
 
 Each scenario runs twice — clean and with injection — into separate
 store roots; the runner prints one JSON line with the comparison and
 the count of injected failures (proven > 0 via marker files written by
-the failing attempts). Exit 0 iff stores are identical and failures
-actually fired.
+the failing attempts). Exit 0 iff stores are identical, non-empty, and
+failures actually fired.
 """
 
 from __future__ import annotations
 
-import datetime
 import json
 import os
 import sys
@@ -34,16 +33,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 import pyspark.sql.functions as F  # noqa: E402
-from pyspark.sql import types as T  # noqa: E402
 
-import ark_invest_api_rust_data_spark.streaming.ingest as ing  # noqa: E402
-import ark_invest_api_rust_data_spark.streaming.scd2 as s2  # noqa: E402
-from ark_invest_api_rust_data_spark.operators.dedup import (  # noqa: E402
-    band_table,
-    incremental_near_dup_pairs,
-)
-from ark_invest_api_rust_data_spark.operators.merge import scd2_apply  # noqa: E402
+import ark_invest_api_rust_data_spark.pipeline as pipeline  # noqa: E402
+import ark_invest_api_rust_data_spark.streaming.ann_ingest as ann  # noqa: E402
+from ark_invest_api_rust_data_spark.operators.merge import incremental_merge  # noqa: E402
+from ark_invest_api_rust_data_spark.operators.pq import IvfPqIndex  # noqa: E402
 from ark_invest_api_rust_data_spark.session import get_spark  # noqa: E402
+from ark_invest_api_rust_data_spark.tickers import Source, Ticker  # noqa: E402
+from conftest import SF_SMOKE  # noqa: E402
+
+encode_batch_for_lake = ann.encode_batch_for_lake
 
 
 def make_flaky(marker_dir: str):
@@ -71,101 +70,69 @@ def make_flaky(marker_dir: str):
     return flaky
 
 
-def run_ingest(spark, docs, tmp: str, inject: bool, flaky):
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    streamed = sorted(
-        docs.filter(F.col("doc_id") % 10 >= 8).collect(), key=lambda r: r["doc_id"]
-    )
-    k = len(streamed) // 2
+ARK_CSV = "\n".join(
+    ['date,fund,company,ticker,cusip,shares,"market value ($)","weight (%)"']
+    + [f'01/0{d}/2024,ARKK,TESLA INC,TSLA UW,88160R101,"1,234","$1,234,567.89",9.87%'
+       for d in range(1, 8)]
+    + [f'01/0{d}/2024,ARKK,COINBASE GLOBAL,COIN UQ,19260Q107,567,"$89,012.50",1.23%'
+       for d in range(1, 8)]
+)
+# the API's next page: one day already cached (deduped by the merge)
+# and two new ones
+API_JSON = json.dumps(
+    [
+        {"company": c, "cusip": cusip, "date": day, "market_value": mv,
+         "share_price": 200.0, "shares": sh, "ticker": t, "weight": w,
+         "weight_rank": r}
+        for day in ("2024-01-07", "2024-01-08", "2024-01-09")
+        for c, cusip, t, sh, mv, w, r in (
+            ("TESLA", "88160R101", "TSLA", 5000.0, 999999.0, 9.99, 1),
+            ("COINBASE", "19260Q107", "COIN", 600.0, 90000.0, 1.25, 2),
+        )
+    ]
+)
+
+
+def run_refresh(spark, tmp: str, inject: bool, flaky):
+    """Bootstrap a cache from the CSV (no injection), then one warm
+    API-incremental refresh whose merge result runs through ``flaky``."""
+    root = f"{tmp}/holdings_{'chaos' if inject else 'clean'}"
+    pipeline.refresh_ticker(spark, Ticker.ARKK, Source.ARK, root, lambda url: ARK_CSV)
+    if inject:
+        pipeline.incremental_merge = lambda *a, **kw: flaky(incremental_merge(*a, **kw))
+    try:
+        pipeline.refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON)
+    finally:
+        pipeline.incremental_merge = incremental_merge
+    return sorted(map(str, spark.read.parquet(f"{root}/ARKK.parquet").collect()))
+
+
+def run_code_lake(spark, index, emb, tmp: str, inject: bool, flaky):
+    """Seed the lake with the even ids, stream the odd ids in as two
+    micro-batches, fold everything into one generation."""
     tag = "chaos" if inject else "clean"
+    lake = f"{tmp}/lake_{tag}"
     src = f"{tmp}/arrivals_{tag}"
-    os.makedirs(src)
-    for i, chunk in enumerate([streamed[:k], streamed[k:]]):
+    arriving = emb.filter(F.col("vec_id") % 2 == 1)
+    for i, cond in enumerate((F.col("vec_id") % 4 == 1, F.col("vec_id") % 4 == 3)):
         p = f"{src}/part{i}.parquet"
-        spark.createDataFrame(chunk, docs.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
+        arriving.filter(cond).coalesce(1).write.mode("overwrite").parquet(p)
         for f in os.listdir(p):
             os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-
-    store_root = f"{tmp}/store_{tag}"
-    orig_bt, orig_pairs = ing.band_table, ing.incremental_near_dup_pairs
     if inject:
-        ing.band_table = lambda *a, **kw: flaky(band_table(*a, **kw))
-        ing.incremental_near_dup_pairs = lambda *a, **kw: flaky(
-            incremental_near_dup_pairs(*a, **kw)
-        )
+        ann.encode_batch_for_lake = lambda *a, **kw: flaky(encode_batch_for_lake(*a, **kw))
     try:
-        ing.seed_band_store(corpus, store_root)
+        ann.seed_code_lake(index, emb.filter(F.col("vec_id") % 2 == 0), lake)
         stream_in = (
-            spark.readStream.schema(docs.schema)
+            spark.readStream.schema(arriving.schema)
             .option("maxFilesPerTrigger", 1)
             .parquet(f"{src}/part*.parquet")
         )
-        q = ing.start_incremental_dedup_stream(
-            spark, stream_in, corpus, store_root,
-            checkpoint=f"{tmp}/ckpt_{tag}", threshold=0.5,
-        )
-        q.awaitTermination()
-        ing.compact_band_store(spark, store_root)
+        ann.start_pq_ingest_stream(spark, stream_in, index, lake, checkpoint=f"{tmp}/ckpt_{tag}").awaitTermination()
+        ann.compact_code_lake(spark, lake)
     finally:
-        ing.band_table, ing.incremental_near_dup_pairs = orig_bt, orig_pairs
-
-    bands = sorted(
-        map(tuple, ing.read_band_store(spark, store_root).drop("src").collect())
-    )
-    docs_rows = sorted(
-        map(tuple, spark.read.parquet(f"{store_root}/docs").drop("src").collect())
-    )
-    return bands, docs_rows
-
-
-D = datetime.date
-UPD_SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.LongType()),
-        T.StructField("attr", T.StringType()),
-        T.StructField("effective", T.DateType()),
-    ]
-)
-DIM_SCHEMA = T.StructType(
-    [
-        T.StructField("k", T.LongType()),
-        T.StructField("attr", T.StringType()),
-        T.StructField("valid_from", T.DateType()),
-        T.StructField("valid_to", T.DateType()),
-    ]
-)
-SCD2_BATCHES = [
-    [(1, "a2", D(2024, 2, 1)), (2, "b", D(2024, 2, 1)), (9, "z", D(2024, 2, 1))],
-    [(1, "a3", D(2024, 2, 15)), (1, "a4", D(2024, 3, 1)), (9, "z2", D(2024, 3, 1))],
-]
-
-
-def run_scd2(spark, tmp: str, inject: bool, flaky):
-    tag = "chaos" if inject else "clean"
-    root = f"{tmp}/scd2_{tag}"
-    seed = spark.createDataFrame(
-        [
-            (1, "a", D(2024, 1, 1), None),
-            (2, "b", D(2024, 1, 1), None),
-            (3, "c", D(2024, 1, 1), None),
-        ],
-        DIM_SCHEMA,
-    )
-    orig = s2.scd2_apply
-    if inject:
-        s2.scd2_apply = lambda *a, **kw: flaky(scd2_apply(*a, **kw))
-    try:
-        s2.seed_dim(seed, root)
-        for i, rows in enumerate(SCD2_BATCHES):
-            s2.apply_scd2_batch(
-                spark, spark.createDataFrame(rows, UPD_SCHEMA), i, root,
-                "k", ["attr"],
-            )
-    finally:
-        s2.scd2_apply = orig
-    return sorted(map(tuple, s2.current_dim(spark, root).collect()))
+        ann.encode_batch_for_lake = encode_batch_for_lake
+    return sorted(map(tuple, ann.read_live_partitions(spark, lake).drop("src").collect()))
 
 
 def main() -> int:
@@ -177,35 +144,38 @@ def main() -> int:
     # way local mode executes task retries at all
     spark = get_spark(app_name="retry_chaos", master="local[4, 3]",
                       shuffle_partitions=8)
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
 
-    clean_bands, clean_docs = run_ingest(spark, docs, tmp, inject=False, flaky=flaky)
+    clean_cache = run_refresh(spark, tmp, inject=False, flaky=flaky)
     n_before = len(os.listdir(marker_dir))
-    chaos_bands, chaos_docs = run_ingest(spark, docs, tmp, inject=True, flaky=flaky)
-    n_ingest_failures = len(os.listdir(marker_dir)) - n_before
+    chaos_cache = run_refresh(spark, tmp, inject=True, flaky=flaky)
+    n_refresh_failures = len(os.listdir(marker_dir)) - n_before
 
-    clean_dim = run_scd2(spark, tmp, inject=False, flaky=flaky)
+    emb = spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
+    index = IvfPqIndex.build(
+        emb.filter(F.col("vec_id") % 2 == 0), f"{tmp}/train_codes",
+        n_centroids=8, m=4, k=8, iters=2,
+    )
+    clean_lake = run_code_lake(spark, index, emb, tmp, inject=False, flaky=flaky)
     n_before = len(os.listdir(marker_dir))
-    chaos_dim = run_scd2(spark, tmp, inject=True, flaky=flaky)
-    n_scd2_failures = len(os.listdir(marker_dir)) - n_before
+    chaos_lake = run_code_lake(spark, index, emb, tmp, inject=True, flaky=flaky)
+    n_lake_failures = len(os.listdir(marker_dir)) - n_before
 
     result = {
-        "ingest_bands_identical": clean_bands == chaos_bands,
-        "ingest_docs_identical": clean_docs == chaos_docs,
-        "scd2_dim_identical": clean_dim == chaos_dim,
-        "n_ingest_failures": n_ingest_failures,
-        "n_scd2_failures": n_scd2_failures,
-        "n_band_rows": len(clean_bands),
-        "n_doc_rows": len(clean_docs),
-        "n_dim_rows": len(clean_dim),
+        "refresh_cache_identical": clean_cache == chaos_cache,
+        "code_lake_identical": clean_lake == chaos_lake,
+        "n_refresh_failures": n_refresh_failures,
+        "n_lake_failures": n_lake_failures,
+        "n_cache_rows": len(clean_cache),
+        "n_lake_rows": len(clean_lake),
     }
     print(json.dumps(result))
     ok = (
-        result["ingest_bands_identical"]
-        and result["ingest_docs_identical"]
-        and result["scd2_dim_identical"]
-        and n_ingest_failures > 0
-        and n_scd2_failures > 0
+        result["refresh_cache_identical"]
+        and result["code_lake_identical"]
+        and n_refresh_failures > 0
+        and n_lake_failures > 0
+        and clean_cache
+        and clean_lake
     )
     return 0 if ok else 1
 

@@ -20,6 +20,7 @@ import time
 import tracemalloc
 
 import pytest
+from _oracles import encode_jpeg_gray, encode_ppm
 
 from ark_invest_api_rust_data_spark.operators import jpeg as J
 from ark_invest_api_rust_data_spark.operators import mp4 as M
@@ -37,8 +38,11 @@ DECODERS = [
     ("decode_gif_frames", MM.decode_gif_frames),
     ("decode_avi", MM.decode_avi),
     ("decode_video_gray", MM.decode_video_gray),
-    ("parse_video_meta", MM.parse_video_meta),
-    ("parse_audio_meta", MM.parse_audio_meta),
+    # the decoders' consumer: decode, then feature extraction over the
+    # decoded value (non-strict, so an unrecognized payload is the fake)
+    ("decode_features[image]", lambda b: MM.decode_features([b], "image", False)),
+    ("decode_features[audio]", lambda b: MM.decode_features([b], "audio", False)),
+    ("decode_features[video]", lambda b: MM.decode_features([b], "video", False)),
     ("decode_jpeg", J.decode_jpeg),
     ("is_mp4", M.is_mp4),
     ("mp4_fps", M.mp4_fps),
@@ -54,12 +58,12 @@ def _goldens() -> list[bytes]:
     rgb_frames = [bytes((i + k) % 256 for i in range(192)) for k in range(3)]
     return [
         MM.encode_bmp(4, 4, rgb44),
-        MM.encode_ppm(4, 4, rgb44),
+        encode_ppm(4, 4, rgb44),
         MM.encode_wav(8000, 1, [0, 100, -100, 32000, -32000, 7]),
         MM.encode_gif(4, 4, [gray44, gray44[::-1]]),
         MM.encode_avi(8, 8, rgb_frames, fps=10),
         jpeg_color,
-        J.encode_jpeg_gray(8, 8, gray88),
+        encode_jpeg_gray(8, 8, gray88),
         M.encode_mp4(8, 8, [jpeg_color, jpeg_color], fps=30),
     ]
 

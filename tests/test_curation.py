@@ -6,7 +6,6 @@ reference, domain caps, shard assignment + the sharded export layout.
 from __future__ import annotations
 
 import hashlib
-import os
 
 import pyspark.sql.functions as F
 import pytest
@@ -19,7 +18,6 @@ from ark_invest_api_rust_data_spark.operators.curation import (
     domain_cap,
     duplicated_spans,
     shard_assign,
-    shard_export,
 )
 
 DOCS = [
@@ -159,26 +157,6 @@ def test_shard_assign_matches_reference(spark):
         ids.sort(key=lambda i: ((i * _LCG_A + _LCG_C) % (1 << 31), i))
         for rank, i in enumerate(ids, 1):
             assert out[i] == (s, rank), f"id {i}"
-
-
-def test_shard_export_layout(spark, tmp_path):
-    import pyarrow.parquet as pq
-
-    df = spark.createDataFrame([(i, f"t{i}") for i in range(64)], ["doc_id", "text"])
-    path = str(tmp_path / "shards")
-    shard_export(df, path, n_shards=4)
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("shard="))
-    assert dirs == [f"shard={s}" for s in range(4)]
-    seen = 0
-    for d in dirs:
-        files = [f for f in os.listdir(os.path.join(path, d)) if f.endswith(".parquet")]
-        assert len(files) == 1  # one task's output per shard
-        t = pq.read_table(os.path.join(path, d, files[0]))
-        pos = t.column("pos").to_pylist()
-        assert pos == sorted(pos)  # reader sees shard-position order
-        assert "text" in t.column_names  # payload joined back
-        seen += len(pos)
-    assert seen == 64
 
 
 # -------------------------------------------- skew-safe tiers (r4)

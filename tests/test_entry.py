@@ -33,13 +33,3 @@ def test_each_query_runs_smoke(spark, sf_dir, name):
     df.limit(5).collect()  # plan executes
 
 
-def test_register_views_enables_sql(spark, sf_dir):
-    """catalog.register_views: every testdata table queryable via
-    spark.sql, including the nanos-shimmed events view."""
-    from ark_invest_api_rust_data_spark.catalog import ALL_TABLES, register_views
-
-    register_views(spark, sf_dir)
-    for t in ALL_TABLES:
-        assert spark.sql(f"SELECT count(*) AS c FROM {t}").first()["c"] > 0
-    ts_type = dict(spark.table("events").dtypes)["ts"]
-    assert ts_type == "timestamp"

@@ -2,7 +2,8 @@
 this container has no ffmpeg binary, so the three `needs_h264` tests
 in test_ffmpeg_tier.py skip. These twins execute the SAME code paths —
 probe_video's ffprobe-JSON parsing/validation, decode_video_rgb_ffmpeg's
-bounded rawvideo pipe handling, the gray fold, and encode_h264's output
+bounded rawvideo pipe handling, the gray fold, and the fixture encoder
+encode_h264's output
 collection — by replacing only the subprocess seam (`_run`) with a fake
 that replays outputs recorded from a real ffmpeg 6.x run (the ffprobe
 JSON shape below is the verbatim `-of json` stream block for a 16x12
@@ -21,12 +22,12 @@ import json
 import os
 
 import pytest
+from _oracles import encode_h264
 
 from ark_invest_api_rust_data_spark.operators import ffmpeg_codec
 from ark_invest_api_rust_data_spark.operators.ffmpeg_codec import (
     decode_video_gray_ffmpeg,
     decode_video_rgb_ffmpeg,
-    encode_h264,
     probe_video,
 )
 

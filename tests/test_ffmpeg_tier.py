@@ -6,12 +6,12 @@ ffmpeg + libx264 exist and skips cleanly otherwise."""
 from __future__ import annotations
 
 import pytest
+from _oracles import encode_h264
 
 from ark_invest_api_rust_data_spark.operators import ffmpeg_codec
 from ark_invest_api_rust_data_spark.operators.ffmpeg_codec import (
     decode_video_gray_ffmpeg,
     decode_video_rgb_ffmpeg,
-    encode_h264,
     ffmpeg_available,
     probe_video,
 )

@@ -194,32 +194,6 @@ def test_triangle_counts_random_graph(spark):
     assert got == _py_triangles(edges)
 
 
-def test_triangle_wedge_bound_exact_and_skew_free(spark):
-    """The wedge diagnostic: on K5 the oriented wedge stream is
-    exactly 10 (outdegs 4,3,2,1,0 under id orientation → ΣC(c,2) =
-    6+3+1), and on a 50-leaf star it is ZERO — degree orientation
-    sends every edge leaf→hub, so no node fans out twice and the
-    celebrity hub produces no wedges at all (the Suri–Vassilvitskii
-    skew argument, measured not asserted)."""
-    from ark_invest_api_rust_data_spark.operators.graph import (
-        triangle_wedge_bound,
-    )
-
-    k5 = spark.createDataFrame(
-        [(i, j) for i in range(5) for j in range(i + 1, 5)],
-        "src long, dst long",
-    )
-    row = triangle_wedge_bound(k5).first()
-    assert (row["m"], row["wedges"]) == (10, 10)
-    assert abs(row["cap_m15"] - 10**1.5) < 1e-9
-
-    star = spark.createDataFrame(
-        [(0, i) for i in range(1, 51)], "src long, dst long"
-    )
-    row = triangle_wedge_bound(star).first()
-    assert (row["m"], row["wedges"]) == (50, 0)
-
-
 def test_triangle_closing_bloom_is_output_invariant(spark):
     """The closing-join Bloom prefilter must be invisible in the
     output (false positives die in the exact join): forced-on vs

@@ -107,78 +107,3 @@ def _ref_pca(k):
     return mean, comps, evals[order]
 
 
-def test_pca_fit_matches_numpy(spark):
-    import numpy as np
-
-    from ark_invest_api_rust_data_spark.operators.linalg import pca_fit
-
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(PCA_VECS)],
-        "vec_id long, embedding array<float>",
-    )
-    m = pca_fit(df, dim=4, k=2)
-    mean, comps, evals = _ref_pca(2)
-    assert np.allclose(m.mean, mean)
-    assert np.allclose(m.components, comps, atol=1e-9)
-    assert np.allclose(m.explained_var, evals)
-    assert m.explained_var[0] >= m.explained_var[1] >= 0
-
-
-def test_pca_project_matches_numpy_and_reduces_error(spark):
-    import numpy as np
-
-    from ark_invest_api_rust_data_spark.operators.linalg import (
-        pca_fit,
-        pca_project,
-    )
-
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(PCA_VECS)],
-        "vec_id long, embedding array<float>",
-    )
-    q = np.floor(np.array(_f32(PCA_VECS), dtype=np.float64) * 10**6)
-
-    def recon_err(k):
-        m = pca_fit(df, dim=4, k=k)
-        got = {
-            r["vec_id"]: np.array(r["proj"])
-            for r in pca_project(df, m).collect()
-        }
-        ref = (q - m.mean) @ m.components.T
-        for i in range(len(PCA_VECS)):
-            assert np.allclose(got[i], ref[i])
-        back = ref @ m.components + m.mean
-        return float(((q - back) ** 2).sum())
-
-    e1, e2, e4 = recon_err(1), recon_err(2), recon_err(4)
-    assert e1 >= e2 >= e4
-    assert e4 < 1e-6 * (q**2).sum()  # full rank reconstructs
-
-
-def test_pca_fit_partitioning_invariant(spark):
-    import numpy as np
-
-    from ark_invest_api_rust_data_spark.operators.linalg import pca_fit
-
-    df = spark.createDataFrame(
-        [(i, v) for i, v in enumerate(PCA_VECS)],
-        "vec_id long, embedding array<float>",
-    )
-    a = pca_fit(df.coalesce(1), dim=4, k=3)
-    b = pca_fit(df.repartition(5), dim=4, k=3)
-    assert np.allclose(a.components, b.components)
-    assert np.allclose(a.mean, b.mean)
-
-
-def test_pca_fit_bad_k_raises(spark):
-    import pytest
-
-    from ark_invest_api_rust_data_spark.operators.linalg import pca_fit
-
-    df = spark.createDataFrame(
-        [(0, [0.1, 0.2])], "vec_id long, embedding array<float>"
-    )
-    with pytest.raises(ValueError):
-        pca_fit(df, dim=2, k=3)
-    with pytest.raises(ValueError):
-        pca_fit(df.filter("vec_id < 0"), dim=2, k=1)

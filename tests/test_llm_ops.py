@@ -5,11 +5,11 @@ round-trip + batch plumbing (SURVEY §2 B28–B32)."""
 from __future__ import annotations
 
 import pyspark.sql.functions as F
+from _oracles import encode_ppm, hamming64
 
 from ark_invest_api_rust_data_spark.catalog import load_table
 from ark_invest_api_rust_data_spark.operators.dedup import (
     exact_dedup,
-    hamming64,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash,
@@ -315,7 +315,6 @@ def test_bmp_ppm_pixel_codec_roundtrip():
         decode_image,
         decode_ppm,
         encode_bmp,
-        encode_ppm,
         parse_image_dims,
     )
 
@@ -373,10 +372,7 @@ def test_extract_features_real_pixels_and_strict(spark):
     when strict=False."""
     import pytest
 
-    from ark_invest_api_rust_data_spark.operators.multimodal import (
-        encode_bmp,
-        encode_ppm,
-    )
+    from ark_invest_api_rust_data_spark.operators.multimodal import encode_bmp
 
     # 2x1: left pixel pure red, right pure blue
     rgb = bytes([200, 0, 0, 0, 0, 100])
@@ -447,98 +443,6 @@ def test_multimodal_roundtrip_and_features(spark, tmp_path):
     assert sampled.select("meta.n_frames").first()[0] >= 1
 
 
-def test_binaryfile_ingest_path(spark, tmp_path):
-    """B32 ingest — the real media entry point: a directory of images read
-    via spark.read.format('binaryFile') → MEDIA_SCHEMA → feature stage
-    with REAL header-parsed dims. pathGlobFilter prunes non-matching
-    files at the listing, and media_id is stable across re-reads."""
-    from ark_invest_api_rust_data_spark.operators.multimodal import (
-        ingest_binary_files,
-    )
-
-    media_dir = tmp_path / "media"
-    media_dir.mkdir()
-    dims = {"a": (640, 480), "b": (32, 16), "c": (2000, 1000)}
-    for name, (w, h) in dims.items():
-        (media_dir / f"{name}.png").write_bytes(_make_png(w, h))
-    (media_dir / "notes.txt").write_bytes(b"not an image; must be pruned")
-
-    media = ingest_binary_files(spark, str(media_dir), "image", glob="*.png")
-    assert media.count() == 3  # .txt pruned at the file listing
-    assert [f.name for f in media.schema.fields] == [
-        "media_id",
-        "kind",
-        "content",
-        "meta",
-    ]
-
-    feats = extract_features(media, strict=False)  # PNG: no pixel codec in-container
-    got = sorted((r["width"], r["height"]) for r in feats.collect())
-    assert got == sorted(dims.values())
-
-    # media_id must be stable across independent reads (hash of path,
-    # not partition-dependent ids)
-    ids_a = {r["media_id"] for r in media.select("media_id").collect()}
-    ids_b = {
-        r["media_id"]
-        for r in ingest_binary_files(spark, str(media_dir), "image", glob="*.png")
-        .select("media_id")
-        .collect()
-    }
-    assert ids_a == ids_b and len(ids_a) == 3
-
-
-def test_salted_join_equals_plain_join(spark):
-    """Skew fallback (operators/skew.py): salted join must return
-    exactly the plain join's rows, including skewed keys."""
-    from ark_invest_api_rust_data_spark.operators.skew import salted_join
-
-    # one pathologically hot key (80% of rows) + normal keys
-    large = spark.createDataFrame(
-        [(1, i) for i in range(800)] + [(k, k * 1000) for k in range(2, 102)],
-        "k int, payload int",
-    )
-    small = spark.createDataFrame([(k, f"dim{k}") for k in range(1, 102)], "k int, name string")
-    plain = large.join(small, "k").select("k", "payload", "name")
-    salted = salted_join(large, small, "k").select("k", "payload", "name")
-    assert sorted(map(tuple, salted.collect())) == sorted(map(tuple, plain.collect()))
-
-
-def test_bucketed_join_elides_shuffle(spark):
-    """Co-located join (operators/bucketing.py): identically-bucketed
-    tables must SortMergeJoin with NO Exchange on either side, and the
-    result must equal the plain shuffled join."""
-    from ark_invest_api_rust_data_spark.operators.bucketing import (
-        bucketed_join,
-        write_bucketed,
-    )
-
-    orders = load_table(spark, SF, "orders")
-    lineitem = load_table(spark, SF, "lineitem")
-    write_bucketed(orders, "t_orders_b", ["o_orderkey"], 8)
-    write_bucketed(
-        lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "t_lineitem_b",
-        ["o_orderkey"], 8,
-    )
-    # model the fact-fact case: disable broadcast so the join planner
-    # must pick SMJ — bucketing then elides both shuffles
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, "t_orders_b", "t_lineitem_b", ["o_orderkey"])
-        joined.count()  # finalize the adaptive plan
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan  # no shuffle either side
-
-        plain = orders.join(
-            lineitem.withColumnRenamed("l_orderkey", "o_orderkey"), "o_orderkey"
-        )
-        assert joined.count() == plain.count()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
 def test_dedup_ops_release_executor_storage(spark):
     """Long-lived-session hygiene: minhash_lsh_pairs and dedup_clusters
     must not accumulate cached partitions — after each call the only
@@ -585,40 +489,19 @@ def test_dedup_ops_release_executor_storage(spark):
         assert n_persistent() <= base
 
 
-def test_blocked_near_dup_equals_broadcast_tier(spark):
-    """The block-matrix exact tier (no driver collect) must produce
-    BIT-identical pairs+cosines to the broadcast tier, for any block
-    count — every unordered pair must appear exactly once."""
-    from ark_invest_api_rust_data_spark.operators.similarity import (
-        cosine_near_dup_pairs,
-        cosine_near_dup_pairs_blocked,
-    )
-
-    emb = load_table(spark, SF, "embeddings")
-    want = sorted(map(tuple, cosine_near_dup_pairs(emb, threshold=0.40).collect()))
-    for n_blocks in (1, 3, 8):
-        got = sorted(
-            map(
-                tuple,
-                cosine_near_dup_pairs_blocked(emb, 0.40, n_blocks=n_blocks).collect(),
-            )
-        )
-        assert got == want, f"n_blocks={n_blocks}"
-
-
-def test_vectorized_near_dup_equals_expression_tier(spark):
-    """The numpy mapInPandas all-pairs tier must produce BIT-identical
-    pairs+cosines to the pure-expression formulation (same integer
-    grid, same IEEE ops)."""
+def test_blocked_near_dup_equals_expression_tier(spark):
+    """The block-matrix all-pairs tier (no driver collect) must produce
+    BIT-identical pairs+cosines to the pure-expression formulation
+    (same integer grid, same IEEE ops) for any block count — every
+    unordered pair exactly once."""
     from ark_invest_api_rust_data_spark.operators.similarity import (
         _dot,
         _norm2,
         _quantize,
-        cosine_near_dup_pairs,
+        cosine_near_dup_pairs_blocked,
     )
 
     emb = load_table(spark, SF, "embeddings")
-    vec = cosine_near_dup_pairs(emb, threshold=0.40)
     q = emb.select("vec_id", _quantize(F.col("embedding")).alias("_q")).withColumn(
         "_n2", _norm2(F.col("_q"))
     )
@@ -634,7 +517,11 @@ def test_vectorized_near_dup_equals_expression_tier(spark):
         .filter(F.col("cosine") >= 0.40)
         .select("vec_a", "vec_b", "cosine")
     )
-    assert sorted(map(tuple, vec.collect())) == sorted(map(tuple, expr.collect()))
+    want = sorted(map(tuple, expr.collect()))
+    assert want
+    for n_blocks in (1, 3, 8):
+        got = cosine_near_dup_pairs_blocked(emb, 0.40, n_blocks=n_blocks)
+        assert sorted(map(tuple, got.collect())) == want, f"n_blocks={n_blocks}"
 
 
 def test_ivf_index_recall_and_pruning(spark, tmp_path):
@@ -737,12 +624,10 @@ def test_aqe_splits_skewed_join_partitions(spark):
 def test_split_assign_deterministic_content_independent(spark):
     """Split routing must depend only on the id: same ids → same
     buckets on re-run and after text mutation; proportions near
-    80/10/10; the 20% sample is a subset of train by construction
-    (both are prefix ranges of the same bucket space)."""
+    80/10/10."""
     from ark_invest_api_rust_data_spark.operators.sampling import (
         hash_bucket,
         split_assign,
-        stratified_sample,
     )
 
     docs = load_table(spark, SF, "documents")
@@ -753,9 +638,6 @@ def test_split_assign_deterministic_content_independent(spark):
     n = len(a)
     frac_train = sum(1 for s in a.values() if s == "train") / n
     assert 0.7 < frac_train < 0.9
-    sampled = {r["doc_id"] for r in stratified_sample(docs, 20).collect()}
-    train_ids = {k for k, s in a.items() if s == "train"}
-    assert sampled <= train_ids
     # bucket stays in [0, 100)
     rows = docs.select(hash_bucket(F.col("doc_id")).alias("b")).collect()
     assert all(0 <= r["b"] < 100 for r in rows)

@@ -63,89 +63,6 @@ def test_refresh_multi_measure_and_duplicates(spark):
     assert got == _rows(matview_build(new, ["k"], measures)) == [("a", 2, 7, 25)]
 
 
-# ------------------------------------------------ streaming maintenance
-
-CDC_SCHEMA = "k string, v long, op string"
-
-CDC_BATCHES = [
-    # batch 0: insert into existing group a, birth group d
-    [("a", 7, "insert"), ("d", 1, "insert")],
-    # batch 1: update b 2->5 (delete+insert), kill group d
-    [("b", 2, "delete"), ("b", 5, "insert"), ("d", 1, "delete")],
-    # batch 2: drain group a entirely
-    [("a", 1, "delete"), ("a", 2, "delete"), ("a", 7, "delete")],
-]
-
-
-def _stream_setup(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.streaming.matview import seed_view
-
-    old = spark.createDataFrame([("a", 1), ("a", 2), ("b", 2)], SCHEMA)
-    measures = {"sv": F.col("v")}
-    store = str(tmp_path / "store")
-    seed_view(matview_build(old, ["k"], measures), store)
-    return old, measures, store
-
-
-def _final_state(spark):
-    # ground truth after all three batches: b updated to 5 only
-    return spark.createDataFrame([("b", 5)], SCHEMA)
-
-
-def test_matview_stream_equals_rebuild(spark, tmp_path):
-    import os
-
-    from ark_invest_api_rust_data_spark.streaming.matview import (
-        current_view,
-        start_matview_stream,
-    )
-
-    old, measures, store = _stream_setup(spark, tmp_path)
-    src = str(tmp_path / "cdc")
-    os.makedirs(src)
-    for i, rows in enumerate(CDC_BATCHES):
-        p = os.path.join(src, f"part{i}.parquet")
-        spark.createDataFrame(rows, CDC_SCHEMA).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-    stream_in = (
-        spark.readStream.schema(CDC_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-    q = start_matview_stream(
-        spark,
-        stream_in,
-        store,
-        checkpoint=str(tmp_path / "ckpt"),
-        group_cols=["k"],
-        measures=measures,
-    )
-    q.awaitTermination()
-    got = _rows(current_view(spark, store))
-    assert got == _rows(matview_build(_final_state(spark), ["k"], measures))
-    assert got == [("b", 1, 5)]
-
-
-def test_matview_batch_replay_is_idempotent(spark, tmp_path):
-    from ark_invest_api_rust_data_spark.streaming.matview import (
-        apply_matview_batch,
-        current_view,
-    )
-
-    old, measures, store = _stream_setup(spark, tmp_path)
-    b0 = spark.createDataFrame(CDC_BATCHES[0], CDC_SCHEMA)
-    apply_matview_batch(spark, b0, 0, store, ["k"], measures)
-    first = _rows(current_view(spark, store))
-    # crash-replay: same batch id re-applied overwrites v=1 identically
-    apply_matview_batch(spark, b0, 0, store, ["k"], measures)
-    assert _rows(current_view(spark, store)) == first
-
-
 def test_refresh_null_group_key_and_bad_op(spark):
     """Review findings: NULL group keys must merge null-safely (a
     delete against the NULL-keyed group lands on it, not on a

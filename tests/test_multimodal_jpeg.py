@@ -9,6 +9,13 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from _oracles import (
+    encode_jpeg_gray,
+    jpeg_constant_roundtrip,
+    rgb_to_ycbcr,
+    ycbcr_to_rgb,
+)
+
 from ark_invest_api_rust_data_spark.operators.jpeg import (
     QUANT,
     _BitReader,
@@ -17,10 +24,6 @@ from ark_invest_api_rust_data_spark.operators.jpeg import (
     _huff_lut,
     decode_jpeg,
     encode_jpeg,
-    encode_jpeg_gray,
-    jpeg_constant_roundtrip,
-    rgb_to_ycbcr,
-    ycbcr_to_rgb,
 )
 from ark_invest_api_rust_data_spark.operators.multimodal import (
     avi_fps,

@@ -16,11 +16,11 @@ from ark_invest_api_rust_data_spark.operators.multimodal import (
     _lzw_encode,
     decode_gif_frames,
     decode_image,
+    decode_video_gray,
     encode_bmp,
     encode_gif,
     extract_features,
     frame_sample,
-    parse_video_meta,
     resize_images,
     resize_nn,
     video_features,
@@ -85,7 +85,8 @@ def test_gif_roundtrip_multiframe():
     w, h, back = decoded
     assert (w, h) == (6, 4)
     assert back == frames
-    assert parse_video_meta(b) == (6, 4, 5)
+    gray = decode_video_gray(b)
+    assert gray is not None and gray[:2] == (6, 4) and len(gray[2]) == 5
 
 
 def test_gif_roundtrip_large_frame():
@@ -99,7 +100,7 @@ def test_gif_rejects_junk():
     assert decode_gif_frames(b"") is None
     assert decode_gif_frames(b"not a gif at all") is None
     assert decode_gif_frames(b"GIF89a\x00") is None
-    assert parse_video_meta(b"RIFF....WAVE") is None
+    assert decode_video_gray(b"RIFF....WAVE") is None
     # truncated mid-stream: valid header, sliced image data
     whole = encode_gif(4, 4, _frames(4, 4, 2))
     assert decode_gif_frames(whole[: len(whole) // 2]) is None
@@ -230,7 +231,6 @@ def test_avi_roundtrip_property(w, h, data):
     from ark_invest_api_rust_data_spark.operators.multimodal import (
         decode_avi,
         encode_avi,
-        parse_video_meta,
     )
 
     n_frames = data.draw(st.integers(min_value=1, max_value=5))
@@ -240,7 +240,8 @@ def test_avi_roundtrip_property(w, h, data):
     ]
     blob = encode_avi(w, h, frames)
     assert decode_avi(blob) == (w, h, frames)
-    assert parse_video_meta(blob) == (w, h, n_frames)
+    gray = decode_video_gray(blob)
+    assert gray is not None and gray[:2] == (w, h) and len(gray[2]) == n_frames
 
 
 @settings(max_examples=40, deadline=None)

@@ -251,6 +251,36 @@ def test_tune_raises_what_is_not_an_unmodifiable_conf(spark, monkeypatch):
         session.tune(spark)
 
 
+def test_session_leaves_no_temp_files(tmp_path):
+    """A process that starts a session, uses its catalog and exits
+    leaves neither the shipped package zip nor a warehouse directory of
+    its own in the temp directory, and no ./spark-warehouse in its
+    working directory."""
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    tmp, cwd = tmp_path / "tmp", tmp_path / "cwd"
+    tmp.mkdir()
+    cwd.mkdir()
+    code = (
+        "from ark_invest_api_rust_data_spark.session import get_spark\n"
+        "spark = get_spark(master='local[1]', shuffle_partitions=1)\n"
+        "assert [d.name for d in spark.catalog.listDatabases()] == ['default']\n"
+        "spark.stop()\n"
+    )
+    env = dict(os.environ, TMPDIR=str(tmp), PYTHONPATH=repo, SPARK_DRIVER_MEMORY="1g")
+    env.pop("SPARK_WAREHOUSE_DIR", None)
+    proc = subprocess.run(
+        [sys.executable, "-c", code], cwd=cwd, env=env, capture_output=True, text=True, timeout=300
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    left = sorted(os.listdir(tmp))
+    assert not [n for n in left if n.startswith(("ark_spark_pkg_", "spark-warehouse-"))], left
+    assert not (cwd / "spark-warehouse").exists()
+
+
 def test_arkfundsio_explode_path(spark, tmp_path):
     """U6: nested holdings list-of-structs is exploded/unnested
     (util.rs:537-546)."""
@@ -385,77 +415,31 @@ def test_lake_partitioned_roundtrip(spark, tmp_path):
     """Scale-layout sink: hive-partitioned (ticker, date) lake with
     dynamic partition overwrite — an incremental merge must rewrite
     only the partitions it touches."""
-    from ark_invest_api_rust_data_spark.sources.parquet_store import read_lake, write_lake
+    from ark_invest_api_rust_data_spark.sources.parquet_store import write_lake
 
     root = str(tmp_path)
     df = normalize(csv_to_df(spark, ARK_CSV))
-    write_lake(df, root)
-    back = read_lake(spark, root)
+    assert write_lake(df, root) == f"{root}/holdings"
+    back = spark.read.parquet(f"{root}/holdings")
     assert back.count() == df.count()
     # partition pruning: a ticker+date slice must read a narrow subset
     one = back.filter(
         (F.col("ticker") == "TSLA") & (F.col("date") == datetime.date(2024, 1, 3))
     )
     assert one.count() == 1
-    # dynamic overwrite: rewrite ONE date with changed shares; other
+    # dynamic overwrite (write_lake's per-write option, not the
+    # session conf): rewrite ONE date with changed shares; other
     # partitions must survive
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     patch = df.filter(F.col("date") == datetime.date(2024, 1, 3)).withColumn(
         "shares", F.col("shares") * 2
     )
     write_lake(patch, root, mode="overwrite")
-    back2 = read_lake(spark, root)
+    back2 = spark.read.parquet(f"{root}/holdings")
     assert back2.count() == df.count()  # other dates intact
     changed = back2.filter(
         (F.col("ticker") == "TSLA") & (F.col("date") == datetime.date(2024, 1, 3))
     ).first()
     assert changed["shares"] == 2468
-
-
-def test_lake_bucketed_by_cusip_security_joins(spark, tmp_path):
-    """Security-centric lake variant: cusip-bucketed holdings join a
-    same-bucketed securities dim with NO shuffle Exchange, and a
-    single-cusip lookup prunes buckets at the scan (the two query
-    families the ticker=/date= hive layout cannot serve)."""
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        security_history,
-        write_lake_bucketed_by_cusip,
-    )
-
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS t_cusip LOCATION '{tmp_path}/wh'")
-    df = normalize(csv_to_df(spark, ARK_CSV))
-    write_lake_bucketed_by_cusip(df, table="t_cusip.holdings_by_cusip", num_buckets=8)
-    dim = df.select("cusip").distinct().withColumn("sector", F.lit("tech"))
-    (
-        dim.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(8, "cusip")
-        .sortBy("cusip")
-        .saveAsTable("t_cusip.securities")
-    )
-
-    # model the fact-fact case: disable broadcast so the planner must
-    # pick SMJ — matched bucket specs then elide both shuffles
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = spark.table("t_cusip.holdings_by_cusip").join(
-            spark.table("t_cusip.securities"), "cusip"
-        )
-        assert joined.count() == df.count()  # finalizes the adaptive plan
-        plan = joined._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-    one_cusip = df.first()["cusip"]
-    hist = security_history(spark, one_cusip, table="t_cusip.holdings_by_cusip")
-    scan = hist._jdf.queryExecution().executedPlan().toString()
-    assert "SelectedBucketsCount: 1 out of 8" in scan, scan  # bucket pruning
-    assert hist.count() == df.filter(F.col("cusip") == one_cusip).count()
-
-    spark.sql("DROP DATABASE t_cusip CASCADE")
 
 
 def test_scheduled_run_fans_out_with_error_isolation(spark, tmp_path):
@@ -602,72 +586,6 @@ def test_daemon_fires_on_schedule(spark, tmp_path):
     assert len(runs) == 16
 
 
-def test_lake_compaction_reduces_files(spark, tmp_path):
-    """Roadmap #4: repeated incremental merges leave small files; the
-    compaction pass rewrites partitions to one file each with no data
-    change."""
-    import glob
-
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        compact_lake,
-        read_lake,
-        write_lake,
-    )
-
-    root = str(tmp_path)
-    df = normalize(csv_to_df(spark, ARK_CSV))
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    # simulate 3 merge rounds appending to the same partitions
-    write_lake(df, root)
-    write_lake(df.repartition(4), root, mode="append")
-    write_lake(df.repartition(4), root, mode="append")
-    before = len(glob.glob(f"{root}/holdings/*/*/*.parquet"))
-    rows_before = sorted(map(tuple, read_lake(spark, root).collect()))
-
-    after = compact_lake(spark, root)
-    assert after < before
-    rows_after = sorted(map(tuple, read_lake(spark, root).collect()))
-    assert rows_after == rows_before
-
-    # compacted files are cusip-sorted WITHIN each file (row-group
-    # min/max pruning + compression; SCALE.md finding 4)
-    import pyarrow.parquet as pq
-
-    for f in glob.glob(f"{root}/holdings/*/*/*.parquet"):
-        cusips = pq.read_table(f, columns=["cusip"])["cusip"].to_pylist()
-        assert cusips == sorted(cusips), f
-
-
-def test_holdings_http_datasource(spark, tmp_path):
-    """S3/S6 as a Spark 4 Python Data Source: per-ticker InputPartition
-    fan-out, provider-agnostic (ticker, row_idx, fields-map) rows,
-    recorded-fixture mode (no network)."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.sources.http_source import HoldingsDataSource
-
-    for t in ("ARKK", "ARKW"):
-        (tmp_path / f"{t}.csv").write_text(ARK_CSV)
-    spark.dataSource.register(HoldingsDataSource)
-    df = (
-        spark.read.format("ark_holdings")
-        .option("tickers", "ARKK,ARKW")
-        .option("fixture_dir", str(tmp_path))
-        .load()
-    )
-    rows = df.collect()
-    # 14 data rows per fixture x 2 tickers; one partition per ticker
-    assert len(rows) == 28
-    assert df.rdd.getNumPartitions() == 2
-    assert {r["ticker"] for r in rows} == {"ARKK", "ARKW"}
-    first = df.filter((F.col("ticker") == "ARKK") & (F.col("row_idx") == 0)).first()
-    assert first["fields"]["company"] == "TESLA INC"
-    assert first["fields"]["market value ($)"] == "$1,234,567.89"
-    # parse order preserved within a partition (row_idx contract)
-    arkk = df.filter(F.col("ticker") == "ARKK").orderBy("row_idx").collect()
-    assert [r["row_idx"] for r in arkk] == list(range(14))
-
-
 def test_observe_quality_counters_ride_the_write(spark, tmp_path):
     """Observation metrics accumulate on the existing action (no extra
     scan): normalize the ARK fixture, write it, read the counters."""
@@ -689,30 +607,6 @@ def test_observe_quality_counters_ride_the_write(spark, tmp_path):
     assert got["max_weight"] > 0
 
 
-def test_csv_quarantine_splits_good_and_bad(spark, tmp_path):
-    """PERMISSIVE CSV scan with corrupt-record quarantine: schema
-    violations are captured with their raw text, clean rows parse
-    fully, nothing is silently dropped."""
-    from ark_invest_api_rust_data_spark.sources.data_reader import (
-        csv_scan_with_quarantine,
-    )
-
-    p = tmp_path / "dirty.csv"
-    p.write_text(
-        "date,shares,weight\n"
-        "2024-01-02,100,9.5\n"
-        "2024-01-03,not_a_number,extra,columns,here\n"
-        "2024-01-04,200,1.25\n"
-    )
-    good, bad = csv_scan_with_quarantine(
-        spark, str(p), "date DATE, shares LONG, weight DOUBLE"
-    )
-    assert good.count() == 2
-    assert {r["shares"] for r in good.collect()} == {100, 200}
-    quarantined = [r["_corrupt_record"] for r in bad.collect()]
-    assert len(quarantined) == 1 and "not_a_number" in quarantined[0]
-
-
 def test_refresh_ticker_quality_metrics(spark, tmp_path):
     """quality_metrics rides the cache write: counters filled with no
     extra action."""
@@ -730,192 +624,3 @@ def test_refresh_ticker_quality_metrics(spark, tmp_path):
     assert metrics["unidentified_rows"] == 0
 
 
-def test_lake_concurrent_compaction_and_ingest_chaos(spark, tmp_path):
-    """VERDICT r3 #5: a compactor and an ingest loop over the SAME
-    holdings prefix never lose or duplicate rows. Ingest commits
-    through write_lake_committed (lock + manifest bump); compact_lake
-    swaps optimistically and retries when a batch landed mid-rewrite.
-    Every ingested row must be present exactly once at the end."""
-    import threading
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        compact_lake,
-        read_lake,
-        read_lake_version,
-        write_lake,
-        write_lake_committed,
-    )
-
-    root = str(tmp_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def batch(i):
-        # disjoint (ticker, date) partitions per batch -> the final lake
-        # must contain the union of all batches exactly once
-        rows = [(f"T{i}", f"2024-01-{d + 1:02d}", f"C{i}_{d}_{j}", float(j))
-                for d in range(3) for j in range(20)]
-        return (
-            spark.createDataFrame(rows, "ticker string, date string, cusip string, weight double")
-            .withColumn("date", F.to_date("date"))
-            .repartition(4)  # several small files per partition
-        )
-
-    write_lake(batch(0), root)  # seed (pre-protocol lake: version 0)
-    n_batches = 7
-    errors = []
-
-    def ingest_loop():
-        try:
-            for i in range(1, n_batches):
-                write_lake_committed(batch(i), root)
-        except Exception as e:  # pragma: no cover - surfaced below
-            errors.append(e)
-
-    t = threading.Thread(target=ingest_loop)
-    t.start()
-    compactions = 0
-    while t.is_alive():
-        compact_lake(spark, root, attempts=20)
-        compactions += 1
-    t.join()
-    compact_lake(spark, root, attempts=20)  # final fold, no contention
-    assert not errors, errors
-    assert compactions >= 1
-    assert read_lake_version(root) >= n_batches - 1  # every commit bumped
-
-    got = read_lake(spark, root).collect()
-    keys = sorted((r["ticker"], str(r["date"]), r["cusip"]) for r in got)
-    assert len(keys) == len(set(keys)), "duplicated rows after chaos"
-    assert len(keys) == n_batches * 3 * 20, (
-        f"lost rows: {len(keys)} != {n_batches * 3 * 20}"
-    )
-
-
-def test_lake_time_travel_and_reader_snapshot_isolation(spark, tmp_path):
-    """Compaction commits a NEW generation dir and retires the old one
-    untouched: a reader that resolved its file set before the commit
-    keeps a consistent snapshot, and read_lake(version=) time-travels
-    until vacuum."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        compact_lake,
-        read_lake,
-        read_lake_version,
-        vacuum_lake,
-        write_lake_committed,
-    )
-
-    root = str(tmp_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-
-    def frame(tick, n):
-        rows = [(tick, "2024-02-01", f"{tick}_{j}", float(j)) for j in range(n)]
-        return (
-            spark.createDataFrame(
-                rows, "ticker string, date string, cusip string, weight double"
-            ).withColumn("date", F.to_date("date"))
-        )
-
-    v1 = write_lake_committed(frame("A", 5), root)
-    assert v1 == 1
-    pinned = read_lake(spark, root)  # resolves the v1 generation dir
-
-    compact_lake(spark, root)  # -> generation holdings@v2, retires v1 dir
-    write_lake_committed(frame("B", 7), root)  # v3, same generation
-
-    # pinned pre-compaction reader still sees its consistent snapshot
-    assert sorted(r["cusip"] for r in pinned.collect()) == [
-        f"A_{j}" for j in range(5)
-    ]
-    # explicit time travel to v1; HEAD sees both batches
-    assert read_lake(spark, root, version=1).count() == 5
-    head = read_lake(spark, root)
-    assert head.count() == 12
-    assert read_lake_version(root) == 3
-
-    # vacuum keeps the current generation, reclaims the v1 dir
-    deleted = vacuum_lake(root, keep=1)
-    assert deleted and deleted[0].endswith("/holdings")
-    assert read_lake(spark, root).count() == 12  # HEAD unaffected
-    import pytest as _pytest
-
-    with _pytest.raises(FileNotFoundError):
-        read_lake(spark, root, version=1).count()
-    with _pytest.raises(ValueError):
-        read_lake(spark, root, version=99)
-
-
-def test_lake_vacuum_keeps_n_generations(spark, tmp_path):
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        compact_lake,
-        read_lake,
-        vacuum_lake,
-        write_lake_committed,
-    )
-
-    root = str(tmp_path)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    df = (
-        spark.createDataFrame(
-            [("A", "2024-02-01", "c1", 1.0)],
-            "ticker string, date string, cusip string, weight double",
-        ).withColumn("date", F.to_date("date"))
-    )
-    write_lake_committed(df, root)        # v1 in holdings
-    g2 = compact_lake(spark, root)        # v2 -> holdings@v2
-    write_lake_committed(df, root)        # v3 (rewrites same partition)
-    compact_lake(spark, root)             # v4 -> holdings@v4
-    assert g2 >= 1
-    # keep=2: holdings@v2 + holdings@v4 survive, original holdings goes
-    deleted = vacuum_lake(root, keep=2)
-    assert [d.rsplit("/", 1)[1] for d in deleted] == ["holdings"]
-    assert read_lake(spark, root, version=2).count() == 1  # retained gen
-    assert read_lake(spark, root).count() == 1
-    # a second vacuum is a no-op (idempotent)
-    assert vacuum_lake(root, keep=2) == []
-
-
-def test_lake_diff_versions_cdc(spark, tmp_path):
-    """diff_lake_versions: the row-level CDC between a retired
-    generation and HEAD — appended rows surface as inserts, a
-    partition overwrite as delete+insert pairs, and an empty diff when
-    nothing changed."""
-    from ark_invest_api_rust_data_spark.sources.parquet_store import (
-        compact_lake,
-        diff_lake_versions,
-        read_lake_version,
-        write_lake,
-        write_lake_committed,
-    )
-
-    root = str(tmp_path)
-    df = normalize(csv_to_df(spark, ARK_CSV))
-    write_lake_committed(df, root)
-    v1 = read_lake_version(root)
-    compact_lake(spark, root)  # retires generation v1, keeps it on disk
-
-    # nothing changed yet: empty diff across the compaction
-    assert diff_lake_versions(spark, root, v_from=v1).count() == 0
-
-    # append a modified copy of one row into HEAD's generation
-    extra = df.limit(1).withColumn("shares", F.col("shares") + F.lit(7))
-    write_lake_committed(extra, root, mode="append")
-
-    delta = diff_lake_versions(spark, root, v_from=v1)
-    rows = delta.collect()
-    assert {r["op"] for r in rows} == {"insert"}
-    assert len(rows) == 1 and rows[0]["shares"] == df.first()["shares"] + 7
-
-    # overwrite the touched partition with changed shares: the pinned
-    # generation still has the old rows -> delete+insert pairs
-    part = df.limit(1).withColumn("shares", F.col("shares") * 2)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    write_lake(part, root)  # dynamic overwrite of that (ticker, date)
-    delta2 = diff_lake_versions(spark, root, v_from=v1)
-    ops = sorted(r["op"] for r in delta2.collect())
-    assert "delete" in ops and "insert" in ops

@@ -461,8 +461,6 @@ def test_pq_stream_ingest_lake_exactly_once_and_pruned(spark, tmp_path):
     # dirs of ONE generation
     from ark_invest_api_rust_data_spark.streaming.ann_ingest import (
         compact_code_lake,
-    )
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
         read_live_partitions,
         retired_srcs,
     )

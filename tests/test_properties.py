@@ -163,10 +163,11 @@ def test_pixel_codecs_roundtrip_property(w, h, data):
     """BMP and PPM codecs invert on ANY pixel stream and dims (row
     padding at every width mod 4, single-row/column shapes); dims
     parse agrees. Pure Python — no Spark session needed."""
+    from _oracles import encode_ppm
+
     from ark_invest_api_rust_data_spark.operators.multimodal import (
         decode_image,
         encode_bmp,
-        encode_ppm,
         parse_image_dims,
     )
 
@@ -193,11 +194,10 @@ def test_pixel_codecs_roundtrip_property(w, h, data):
 )
 def test_wav_codec_roundtrip_property(rate, channels, data):
     """The PCM16 WAV codec inverts on ANY sample stream, rate, and
-    channel count; header-only metadata agrees. Pure Python."""
+    channel count. Pure Python."""
     from ark_invest_api_rust_data_spark.operators.multimodal import (
         decode_wav,
         encode_wav,
-        parse_audio_meta,
     )
 
     n_frames = data.draw(st.integers(min_value=1, max_value=16))
@@ -210,7 +210,6 @@ def test_wav_codec_roundtrip_property(rate, channels, data):
     )
     blob = encode_wav(rate, channels, samples)
     assert decode_wav(blob) == (rate, channels, samples)
-    assert parse_audio_meta(blob) == (rate, channels, n_frames)
 
 
 @settings(max_examples=40, deadline=None)
@@ -440,12 +439,9 @@ def test_components_star_property(edges):
 )
 def test_kmins_union_is_elementwise_min_property(a, b):
     """Pure-Python register law: sketch(a ∪ b) == elementwise
-    min(sketch(a), sketch(b)) — the mergeability the streaming twin
-    and batch unions rely on (py replica == JVM replica is pinned by
-    the stream==batch test)."""
-    from ark_invest_api_rust_data_spark.operators.sketch import (
-        py_kmins_positions,
-    )
+    min(sketch(a), sketch(b)) — the mergeability kmins_merge relies on
+    (py replica == JVM registers is pinned in test_sketch.py)."""
+    from _oracles import py_kmins_positions
 
     def registers(keys):
         mins = [(1 << 55)] * 8

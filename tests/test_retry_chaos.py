@@ -1,15 +1,15 @@
 """Task-retry idempotence (VERDICT r4 #4): at 1000 executors task
-retries are routine, not exceptional — the band-store ingest/compaction
-and the SCD2 versioned merge must produce IDENTICAL store contents
-whether or not tasks fail and re-execute.
+retries are routine, not exceptional — the holdings cache refresh and
+the ANN code lake's ingest/compaction must produce IDENTICAL store
+contents whether or not tasks fail and re-execute.
 
 The scenario needs real task re-execution, which local mode only does
 under a ``local[N, maxFailures]`` master — so it runs in a subprocess
 with its own session (tests/_retry_chaos_runner.py) rather than the
 shared fixture. The runner injects a mapInPandas stage that fails every
-task's first attempt (TaskContext.attemptNumber() == 0) inside the
-ingest band/pairs stages and the SCD2 merge, runs each pipeline clean
-and injected, and compares full row sets.
+task's first attempt (TaskContext.attemptNumber() == 0) after the
+refresh's incremental merge and the lake's batch encode, runs each
+pipeline clean and injected, and compares full row sets.
 """
 
 from __future__ import annotations
@@ -37,13 +37,11 @@ def test_stores_identical_under_injected_task_retries(tmp_path):
     result = json.loads(lines[-1])
     assert proc.returncode == 0, f"runner failed: {result}\n{proc.stderr[-3000:]}"
     # retries actually fired (marker files from failing first attempts)
-    assert result["n_ingest_failures"] > 0
-    assert result["n_scd2_failures"] > 0
+    assert result["n_refresh_failures"] > 0
+    assert result["n_lake_failures"] > 0
     # and changed nothing
-    assert result["ingest_bands_identical"]
-    assert result["ingest_docs_identical"]
-    assert result["scd2_dim_identical"]
+    assert result["refresh_cache_identical"]
+    assert result["code_lake_identical"]
     # sanity: the stores weren't trivially empty
-    assert result["n_band_rows"] > 0
-    assert result["n_doc_rows"] > 0
-    assert result["n_dim_rows"] > 0
+    assert result["n_cache_rows"] > 0
+    assert result["n_lake_rows"] > 0

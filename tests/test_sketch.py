@@ -12,17 +12,24 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 import pytest
+from _oracles import (
+    corpus_overlap_split,
+    py_kmins_estimate,
+    py_kmins_positions,
+    word_shingles,
+)
 
 from ark_invest_api_rust_data_spark.operators.contamination import (
     contamination_overlap,
 )
 from ark_invest_api_rust_data_spark.operators.sketch import (
     bloom_build,
-    bloom_contains,
+    bloom_contains_from_hash,
     bloom_decontaminate,
     cms_build,
     cms_heavy_hitters,
 )
+from ark_invest_api_rust_data_spark.operators.text import token_hash32
 
 
 @pytest.fixture(scope="module")
@@ -40,7 +47,7 @@ def test_bloom_no_false_negatives(spark):
     hits = (
         _keys_df(spark, inserted)
         .crossJoin(F.broadcast(bloom))
-        .filter(bloom_contains(F.col("key"), F.col("bitmap"), 1 << 12, 4))
+        .filter(bloom_contains_from_hash(token_hash32(F.col("key")), F.col("bitmap"), 1 << 12, 4))
         .count()
     )
     assert hits == len(inserted)  # every inserted key must be found
@@ -53,7 +60,7 @@ def test_bloom_rejects_most_absent_keys(spark):
     fp = (
         _keys_df(spark, absent)
         .crossJoin(F.broadcast(bloom))
-        .filter(bloom_contains(F.col("key"), F.col("bitmap"), 1 << 16, 4))
+        .filter(bloom_contains_from_hash(token_hash32(F.col("key")), F.col("bitmap"), 1 << 16, 4))
         .count()
     )
     # 200 keys in 2^16 bits at k=4: theoretical FPR ~ (1-e^{-kn/m})^4
@@ -232,37 +239,35 @@ def test_bloom_arrow_assembly_equals_expression_tier(spark, monkeypatch):
 
 
 
+def _split_keys(spark, a_keys, b_keys):
+    return spark.createDataFrame(
+        [(s, True) for s in a_keys] + [(s, False) for s in b_keys],
+        "sh string, _side boolean",
+    )
+
+
 def test_corpus_overlap_identical_corpora(spark):
     """A corpus sketched against itself: union register equals both
     inputs, inclusion-exclusion returns est_a exactly, jaccard = 1e6
-    ppm (pure integer path, no estimator noise in the ratio)."""
-    from ark_invest_api_rust_data_spark.operators.sketch import corpus_overlap
-
-    keys = spark.createDataFrame(
-        [(f"tok{i} tok{i+1} tok{i+2}",) for i in range(200)], "sh string"
-    )
-    row = corpus_overlap(keys, keys, "sh", k=32).collect()[0]
+    ppm (pure integer path, no estimator noise in the ratio) — the
+    estimator tail ``corpus_overlap_docs`` shares."""
+    keys = [f"tok{i} tok{i+1} tok{i+2}" for i in range(200)]
+    row = corpus_overlap_split(_split_keys(spark, keys, keys), "sh", "_side", k=32).collect()[0]
     assert row["est_a"] == row["est_b"] == row["est_union"]
     assert row["est_intersection"] == row["est_a"]
     assert row["jaccard_ppm"] == 1_000_000
 
 
 def test_corpus_overlap_matches_python_registers(spark):
-    """Registers and every derived estimate equal a sequential replay
-    of py_kmins_positions + py_kmins_estimate over two overlapping
-    key sets — including the inclusion-exclusion clamp."""
-    from ark_invest_api_rust_data_spark.operators.sketch import (
-        corpus_overlap,
-        py_kmins_estimate,
-        py_kmins_positions,
-    )
-
+    """Registers and every derived estimate of the expression sketch
+    (``kmins_sketch``, ``kmins_merge`` and the estimator tail
+    ``corpus_overlap_docs`` shares) equal a sequential replay of
+    py_kmins_positions + py_kmins_estimate over two overlapping key
+    sets — including the inclusion-exclusion clamp."""
     k = 16
     a_keys = [f"k{i}" for i in range(150)]
     b_keys = [f"k{i}" for i in range(100, 250)]  # 50-key overlap
-    dfa = spark.createDataFrame([(s,) for s in a_keys], "sh string")
-    dfb = spark.createDataFrame([(s,) for s in b_keys], "sh string")
-    row = corpus_overlap(dfa, dfb, "sh", k=k).collect()[0]
+    row = corpus_overlap_split(_split_keys(spark, a_keys, b_keys), "sh", "_side", k=k).collect()[0]
 
     def regs(keys):
         mins = [None] * k
@@ -283,29 +288,11 @@ def test_corpus_overlap_matches_python_registers(spark):
     assert abs(ea - 150) < 150 * 0.8 and abs(eu - 250) < 250 * 0.8
 
 
-def test_corpus_overlap_empty_side_raises(spark):
-    """Review finding: an empty corpus must raise loudly — NULL
-    registers would otherwise read as ~(k-1)*M distinct keys with
-    near-total overlap."""
-    import pytest
-
-    from ark_invest_api_rust_data_spark.operators.sketch import corpus_overlap
-
-    keys = spark.createDataFrame([("a",), ("b",)], "sh string")
-    empty = spark.createDataFrame([], "sh string")
-    with pytest.raises(ValueError, match="keys_b has no keys"):
-        corpus_overlap(keys, empty, "sh", k=8)
-
-
 def test_token_hash32_matches_python_reference(spark):
     """The expression char-fold equals h = (h·31 + ord(ch)) mod 2³² in
     Python on real corpus shingles plus crafted edges (empty string,
     null, multi-char unicode)."""
-    import pyspark.sql.functions as F
-
     from ark_invest_api_rust_data_spark.catalog import load_table
-    from ark_invest_api_rust_data_spark.operators.dedup import word_shingles
-    from ark_invest_api_rust_data_spark.operators.text import token_hash32
 
     def h32(tok):
         h = 0
@@ -339,14 +326,8 @@ def test_corpus_overlap_docs_equals_split_pipeline(spark):
     trailing whitespace (trim strips 0x20 only, split keeps the empty
     boundary tokens), repeated grams (distinctness can't change a
     min), BMP unicode, and a side with exactly one document."""
-    import pyspark.sql.functions as F
-
     from ark_invest_api_rust_data_spark.catalog import load_table
-    from ark_invest_api_rust_data_spark.operators.dedup import word_shingles
-    from ark_invest_api_rust_data_spark.operators.sketch import (
-        corpus_overlap_docs,
-        corpus_overlap_split,
-    )
+    from ark_invest_api_rust_data_spark.operators.sketch import corpus_overlap_docs
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents").select(
         (F.col("lang") == "en").alias("_en"), "text"

@@ -173,39 +173,6 @@ def test_b24_dedup_with_duplicated_files(spark, event_dir, tmp_path):
     assert got.count() == batch_ids.count()
 
 
-def test_custom_stateful_operator_matches_batch(spark, event_dir):
-    """applyInPandasWithState running totals: the LAST emitted state
-    per user (update mode over all micro-batches) must equal the batch
-    groupBy aggregation."""
-    from ark_invest_api_rust_data_spark.streaming.stateful import running_user_totals
-
-    stream = running_user_totals(stream_events(spark, event_dir))
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_stateful")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    # update mode emits one row per user per batch-with-data; keep the
-    # final emission (max n_events) per user
-    from pyspark.sql import Window
-
-    emitted = spark.table("t_stateful")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        emitted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    batch = running_user_totals(spark.read.parquet(event_dir))
-    assert _rows(final) == _rows(batch)
-    # sanity: some users crossed the alert threshold, some didn't
-    kinds = {r["alerted"] for r in batch.collect()}
-    assert kinds == {True} or kinds == {True, False}
-
-
 def test_stream_stream_interval_join_equals_batch(spark, event_dir):
     """Bounded-state stream-stream join: purchases ⋈ clicks within a
     30-minute lookback per user — streaming replay (shuffled arrival,
@@ -298,9 +265,14 @@ def test_chaos_rocksdb_state_survives_restart(spark, event_dir, tmp_path):
     suppressed by the operator's cross-restart state."""
     import glob as g
 
-    from ark_invest_api_rust_data_spark.streaming.reliability import (
-        rocksdb_state_store,
-    )
+    # the deployment setting (DEPLOY.md): RocksDB state store with
+    # changelog checkpointing, for queries started after the conf is set
+    rocksdb = {
+        "spark.sql.streaming.stateStore.providerClass": (
+            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+        ),
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled": "true",
+    }
 
     src, sink, ckpt = tmp_path / "src", str(tmp_path / "sink"), str(tmp_path / "ckpt")
     src.mkdir()
@@ -319,7 +291,10 @@ def test_chaos_rocksdb_state_survives_restart(spark, event_dir, tmp_path):
         )
         q.awaitTermination()
 
-    with rocksdb_state_store(spark):
+    prev = {k: spark.conf.get(k, None) for k in rocksdb}
+    for k, v in rocksdb.items():
+        spark.conf.set(k, v)
+    try:
         # phase 1: first half of the corpus
         for i, f in enumerate(files[:half]):
             shutil.copy(f, src / f"p1_{i}.parquet")
@@ -336,6 +311,12 @@ def test_chaos_rocksdb_state_survives_restart(spark, event_dir, tmp_path):
         for i, f in enumerate(files[half:]):
             shutil.copy(f, src / f"p2_new_{i}.parquet")
         run_phase()
+    finally:
+        for k, v in prev.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
 
     got = spark.read.schema(
         "event_id long, ts timestamp, user_id long, event_type string, "
@@ -344,267 +325,6 @@ def test_chaos_rocksdb_state_survives_restart(spark, event_dir, tmp_path):
     batch = spark.read.parquet(event_dir)
     assert got.count() == batch.select("event_id").distinct().count()
     assert got.select("event_id").distinct().count() == got.count()
-
-
-def test_idempotent_foreachbatch_sink_replay_safe(spark, event_dir, tmp_path):
-    """The idempotent foreachBatch pattern: delivering the same corpus
-    through two checkpoints (simulating a redelivered batch range) into
-    the same target directory must leave exactly one copy per batch id
-    — overwrite, not append."""
-    from ark_invest_api_rust_data_spark.streaming.reliability import (
-        start_idempotent_parquet_sink,
-    )
-
-    out = str(tmp_path / "out")
-
-    def deliver(ckpt_name):
-        q = start_idempotent_parquet_sink(
-            stream_events(spark, event_dir),
-            out,
-            str(tmp_path / ckpt_name),
-            f"t_idem_{ckpt_name}",
-        )
-        q.awaitTermination()
-
-    deliver("ckpt_a")
-    n_first = spark.read.parquet(out).count()
-    # fresh checkpoint ⇒ Spark re-delivers every batch id from 0 — the
-    # worst-case replay an external sink can see
-    deliver("ckpt_b")
-    got = spark.read.parquet(out)
-    assert got.count() == n_first
-    assert got.drop("batch_id").count() == spark.read.parquet(event_dir).count()
-
-
-def test_stateful_session_timeout_matches_native(spark, tmp_path):
-    """EventTimeTimeout expiry: the applyInPandasWithState session
-    operator must emit every session exactly once — mid-stream closes
-    when a later event opens a new session, end-of-stream closes via
-    the watermark-driven timeout — and the union must equal the batch
-    session_counts twin."""
-    import glob as g
-
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        user_sessions_stateful,
-    )
-
-    src = tmp_path / "src"
-    src.mkdir()
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    # chronological delivery (watermark tolerance is 0): 5 time-ordered
-    # files + a far-future sentinel to advance the watermark past every
-    # session's close edge
-    from pyspark.sql import Window
-
-    ev = ev.withColumn("_bucket", F.ntile(5).over(Window.orderBy("ts")))
-    for b in range(1, 6):
-        part = ev.filter(F.col("_bucket") == b).drop("_bucket")
-        part.coalesce(1).write.mode("overwrite").parquet(str(tmp_path / f"stage{b}"))
-        shutil.copy(
-            g.glob(str(tmp_path / f"stage{b}" / "part-*.parquet"))[0],
-            src / f"b{b}.parquet",
-        )
-    max_ts = ev.agg(F.max("ts")).first()[0]
-    sentinel_ts = max_ts + datetime.timedelta(hours=48)
-    spark.createDataFrame(
-        [(999_999, sentinel_ts, 999_999, "click", 0.0, "{}")], EVENT_SCHEMA
-    ).coalesce(1).write.mode("overwrite").parquet(str(tmp_path / "stage_s"))
-    shutil.copy(
-        g.glob(str(tmp_path / "stage_s" / "part-*.parquet"))[0],
-        src / "z_sentinel.parquet",
-    )
-
-    stream = user_sessions_stateful(
-        stream_events(spark, str(src), max_files_per_trigger=1), gap="30 minutes"
-    )
-    got = run_append_to_completion(stream, "t_session_timeout").filter(
-        F.col("user_id") != 999_999
-    )
-    batch = session_counts(spark.read.parquet(str(src))).filter(
-        F.col("user_id") != 999_999
-    )
-    assert _rows(got) == _rows(batch)
-    assert got.count() > 100  # non-trivial corpus
-
-
-def test_transform_with_state_matches_batch(spark, event_dir, tmp_path):
-    """Spark 4 transformWithState (StatefulProcessor + ValueState,
-    RocksDB-backed): final per-user emission must equal the batch
-    groupBy twin — same contract as the applyInPandasWithState
-    operator it modernizes. Skips where pyspark's protobuf dependency
-    is absent (see streaming/tws.py ENVIRONMENT GATE)."""
-    pytest.importorskip(
-        "google.protobuf.descriptor",
-        reason="transformWithState driver worker needs protobuf (not in this env)",
-    )
-    from ark_invest_api_rust_data_spark.streaming.reliability import (
-        rocksdb_state_store,
-    )
-    from ark_invest_api_rust_data_spark.streaming.tws import running_user_totals_tws
-
-    with rocksdb_state_store(spark):
-        stream = running_user_totals_tws(stream_events(spark, event_dir))
-        q = (
-            stream.writeStream.format("memory")
-            .queryName("t_tws")
-            .outputMode("update")
-            .option("checkpointLocation", str(tmp_path / "ckpt_tws"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    from pyspark.sql import Window
-
-    emitted = spark.table("t_tws")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        emitted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    batch = running_user_totals_tws(spark.read.parquet(event_dir))
-    assert _rows(final) == _rows(batch)
-
-
-def test_tws_batch_fallback_matches_stateful_twin(spark, event_dir):
-    """The TWS operator's batch branch must agree with the
-    applyInPandasWithState operator's batch branch (shared contract) —
-    executed coverage for streaming/tws.py in this environment."""
-    from ark_invest_api_rust_data_spark.streaming.stateful import running_user_totals
-    from ark_invest_api_rust_data_spark.streaming.tws import running_user_totals_tws
-
-    batch = spark.read.parquet(event_dir)
-    assert _rows(running_user_totals_tws(batch)) == _rows(running_user_totals(batch))
-
-
-def test_incremental_dedup_stream_equals_batch_policy(spark, tmp_path):
-    """B24×B29 — streaming ingest with incremental near-dup dedup
-    against a growing band store equals the batch first-seen-canonical
-    rule: a streamed doc is dropped iff it near-dups the seed corpus
-    or ANY smaller-id streamed doc (kept or dropped). Streams in three
-    id-ordered micro-batches; the store grows per batch."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.operators.dedup import minhash_lsh_pairs
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        seed_band_store,
-        start_incremental_dedup_stream,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    streamed = docs.filter(F.col("doc_id") % 10 >= 8).orderBy("doc_id")
-    corpus_ids = {r["doc_id"] for r in corpus.select("doc_id").collect()}
-    stream_rows = streamed.collect()
-    stream_ids = {r["doc_id"] for r in stream_rows}
-
-    # batch twin of the policy, from the full-corpus pair set
-    pairs = minhash_lsh_pairs(docs, threshold=0.5).collect()
-    dropped = set()
-    for r in pairs:
-        a, b = r["doc_a"], r["doc_b"]  # a < b
-        if b in stream_ids and (a in corpus_ids or a in stream_ids):
-            dropped.add(b)
-        if a in stream_ids and b in corpus_ids:
-            dropped.add(a)
-    expected_kept = stream_ids - dropped
-    assert dropped and expected_kept  # both outcomes must be exercised
-
-    # three id-ordered micro-batches (file mtimes force arrival order)
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    ordered = sorted(stream_rows, key=lambda r: r["doc_id"])
-    k = len(ordered) // 3
-    chunks = [ordered[:k], ordered[k : 2 * k], ordered[2 * k :]]
-    for i, chunk in enumerate(chunks):
-        p = str(src / f"part{i}.parquet")
-        spark.createDataFrame(chunk, docs.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    stream_in = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-    q = start_incremental_dedup_stream(
-        spark,
-        stream_in,
-        corpus,
-        store_root,
-        checkpoint=str(tmp_path / "ckpt"),
-        threshold=0.5,
-    )
-    q.awaitTermination()
-
-    out = spark.read.parquet(f"{store_root}/docs")
-    got_kept = {r["doc_id"] for r in out.filter(F.col("kept")).collect()}
-    got_all = {r["doc_id"] for r in out.collect()}
-    assert got_all == stream_ids  # every arrival archived exactly once
-    assert got_kept == expected_kept
-    # the band store grew: corpus seed + one partition per micro-batch
-    srcs = {r["src"] for r in spark.read.parquet(f"{store_root}/bands").select("src").distinct().collect()}
-    assert "corpus" in srcs and len(srcs) >= 3
-
-
-def test_incremental_dedup_stream_replay_over_stale_partitions(spark, tmp_path):
-    """Crash-replay safety (r3 review finding): when batch 0 re-runs
-    over partitions left by a crashed prior attempt (stale docs/src=b0
-    and bands/src=b0 on disk), the replay must OVERWRITE them — not
-    read them as its own lineage input (which would make the write
-    delete its own input files mid-scan) and not double-count them in
-    the seen set."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        seed_band_store,
-        start_incremental_dedup_stream,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    streamed = docs.filter(F.col("doc_id") % 10 >= 8)
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    streamed.coalesce(1).write.mode("overwrite").parquet(str(src / "part0.parquet"))
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    # simulate the crashed attempt: stale (and WRONG — all-kept) batch-0
-    # partitions already on disk before the stream starts
-    streamed.withColumn("kept", F.lit(True)).write.mode("overwrite").parquet(
-        f"{store_root}/docs/src=b0"
-    )
-    from ark_invest_api_rust_data_spark.operators.dedup import band_table
-
-    band_table(streamed).write.mode("overwrite").parquet(f"{store_root}/bands/src=b0")
-
-    stream_in = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-    q = start_incremental_dedup_stream(
-        spark, stream_in, corpus, store_root,
-        checkpoint=str(tmp_path / "ckpt"), threshold=0.5,
-    )
-    q.awaitTermination()
-
-    out = spark.read.parquet(f"{store_root}/docs")
-    stream_ids = {r["doc_id"] for r in streamed.select("doc_id").collect()}
-    # exactly-once: the stale all-kept rows were replaced, not appended
-    assert out.count() == len(stream_ids)
-    # and the replay actually deduped (the stale attempt kept everything)
-    assert out.filter(~F.col("kept")).count() > 0
 
 
 def test_corpus_prep_narrow_ops_stream(spark, tmp_path):
@@ -647,841 +367,90 @@ def test_corpus_prep_narrow_ops_stream(spark, tmp_path):
     )
 
 
-def test_stream_static_lm_scoring_equals_batch(spark, tmp_path):
-    """B23×B31 — stream-static join scoring: documents streamed in two
-    micro-batches against a STATIC corpus-trained vocab. (a) The direct
-    stream-static inner join (stateless, no watermark) emits exactly
-    the batch explode-join rows; (b) the foreachBatch scoring loop
-    produces exactly score_batch's per-doc rows, with OOV tokens
-    exercised (a streamed-only token the corpus never saw)."""
+def _code_lake_src(spark, lake, src, ids):
+    """One ``src=`` generation of a code lake: (vec_id, code_0) rows
+    hive-partitioned by ``cluster`` — the layout ann_ingest writes."""
+    (
+        spark.createDataFrame([(i, i % 7, i % 3) for i in ids], "vec_id long, code_0 int, cluster int")
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "static")  # commits _SUCCESS
+        .partitionBy("cluster")
+        .parquet(f"{lake}/src={src}")
+    )
+
+
+def _live_ids(spark, lake):
+    from ark_invest_api_rust_data_spark.streaming.ann_ingest import read_live_partitions
+
+    return sorted(r["vec_id"] for r in read_live_partitions(spark, lake).select("vec_id").collect())
+
+
+def test_code_lake_compaction_skips_inflight_partition(spark, tmp_path):
+    """Concurrent-writer safety for the code lake: a partition mid-write
+    (no _SUCCESS marker — exactly what an in-flight ingest batch looks
+    like) is neither folded into the compacted generation nor deleted;
+    committed partitions fold normally, duplicate rows across folded
+    srcs collapse, and the generation keeps the cluster= layout."""
     import os
 
-    from ark_invest_api_rust_data_spark.streaming.scoring import (
-        enrich_stream,
-        score_batch,
-        start_scored_stream,
-        train_vocab,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    streamed = docs.filter(F.col("doc_id") % 10 >= 8).withColumn(
-        "text", F.concat(F.col("text"), F.lit(" zzqunseen"))  # force OOV
-    )
-    vocab = train_vocab(corpus)
-
-    # two id-ordered micro-batches on disk
-    rows = sorted(streamed.collect(), key=lambda r: r["doc_id"])
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    half = len(rows) // 2
-    for i, chunk in enumerate([rows[:half], rows[half:]]):
-        p = str(src / f"part{i}.parquet")
-        spark.createDataFrame(chunk, docs.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-
-    stream_in = (
-        spark.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-
-    # (a) direct stream-static join — stateless append
-    got = run_append_to_completion(
-        enrich_stream(stream_in, vocab), "lm_enrich"
-    ).collect()
-    want = enrich_stream(streamed, vocab).collect()  # same fn, batch frame
-    as_set = lambda rs: {(r["doc_id"], r["tok"], r["cnt"], r["total"]) for r in rs}
-    assert as_set(got) == as_set(want)
-    assert len(got) == len(want)  # multiset equality (dup tokens per doc)
-
-    # (b) foreachBatch per-doc exact scores, idempotent layout
-    out_root = str(tmp_path / "scored")
-    q = start_scored_stream(
-        spark, stream_in, vocab, out_root, checkpoint=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-    got_scores = {
-        r["doc_id"]: r for r in spark.read.parquet(f"{out_root}/scores").collect()
-    }
-    want_scores = {r["doc_id"]: r for r in score_batch(streamed, vocab).collect()}
-    assert set(got_scores) == set(want_scores)
-    for doc_id, w in want_scores.items():
-        g = got_scores[doc_id]
-        assert (
-            g["n_tokens"], g["n_oov"], g["sum_token_df"],
-            g["min_token_df"], g["mean_token_df"],
-        ) == (
-            w["n_tokens"], w["n_oov"], w["sum_token_df"],
-            w["min_token_df"], w["mean_token_df"],
-        )
-    assert all(r["n_oov"] >= 1 for r in want_scores.values())  # OOV real
-    assert all(r["min_token_df"] == 0 for r in want_scores.values())
-
-
-def test_band_store_compaction_replay_equivalence(spark, tmp_path):
-    """Band-store lifecycle (VERDICT r3 #2): compaction folds the
-    per-batch src= partitions into one band_key-sorted generation
-    without changing ANY dedup decision — the pair set is identical
-    before/after, a full stream replay ACROSS the compaction boundary
-    (stale per-batch partitions re-created next to the compacted
-    generation, i.e. duplicate band rows visible) still yields the
-    same kept set, and retired docs' bands are dropped."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.operators.dedup import (
-        incremental_near_dup_pairs,
-    )
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        band_store_srcs,
-        compact_band_store,
-        read_band_store,
-        retired_band_srcs,
-        seed_band_store,
-        start_incremental_dedup_stream,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    streamed = docs.filter(F.col("doc_id") % 10 >= 8)
-    stream_rows = sorted(streamed.collect(), key=lambda r: r["doc_id"])
-    k = len(stream_rows) // 2
-    chunks = [stream_rows[:k], stream_rows[k:]]
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    for i, chunk in enumerate(chunks):
-        p = str(src / f"part{i}.parquet")
-        spark.createDataFrame(chunk, docs.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-
-    def run_stream(ckpt):
-        stream_in = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(f"{src}/part*.parquet")
-        )
-        q = start_incremental_dedup_stream(
-            spark, stream_in, corpus, store_root,
-            checkpoint=str(tmp_path / ckpt), threshold=0.5,
-        )
-        q.awaitTermination()
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    run_stream("ckpt1")
-
-    def band_rows():
-        # the LIVE view (retired tombstones pruned) — what probes see
-        return {
-            (r["doc_id"], r["band"], r["band_key"])
-            for r in read_band_store(spark, store_root).collect()
-        }
-
-    def kept_ids():
-        return {
-            r["doc_id"]
-            for r in spark.read.parquet(f"{store_root}/docs")
-            .filter(F.col("kept"))
-            .collect()
-        }
-
-    def probe_pairs():
-        # the registered probe shape: next batch probes the live store
-        probe_batch = docs.filter(F.col("doc_id") % 10 == 7)
-        store = read_band_store(spark, store_root)
-        return {
-            (r["doc_a"], r["doc_b"])
-            for r in incremental_near_dup_pairs(
-                docs, probe_batch, band_store=store, threshold=0.5
-            ).collect()
-        }
-
-    before_bands, before_kept, before_pairs = band_rows(), kept_ids(), probe_pairs()
-    assert len(band_store_srcs(store_root)) == 3  # corpus + b0 + b1
-
-    info = compact_band_store(spark, store_root)
-    # DEFERRED DELETION (ADVICE r4): the folded partitions stay on disk
-    # as tombstones — a batch that listed them pre-fold can still open
-    # their files — but the live view prunes them immediately
-    assert set(info["folded"]) == {"corpus", "b0", "b1"}
-    assert info["deleted"] == []
-    assert sorted(band_store_srcs(store_root)) == [
-        "b0", "b1", "compact_g1", "corpus",
-    ]
-    assert sorted(retired_band_srcs(store_root)) == ["b0", "b1", "corpus"]
-    assert {
-        r["src"] for r in read_band_store(spark, store_root).select("src").distinct().collect()
-    } == {"compact_g1"}
-    # same rows, same probe decisions — just fewer, sorted files
-    assert band_rows() == before_bands
-    assert probe_pairs() == before_pairs
-    # the flat-probe-cost mechanism: every compacted file is
-    # band_key-sorted and the files' key ranges are disjoint (range
-    # partitioning), so a probe for one band key touches ONE file
-    import glob as _glob
-
-    import pyarrow.parquet as pq
-
-    ranges = []
-    for f in _glob.glob(f"{store_root}/bands/src=compact_g1/*.parquet"):
-        keys = pq.read_table(f, columns=["band_key"]).column("band_key").to_pylist()
-        assert keys == sorted(keys), f"unsorted compacted file {f}"
-        if keys:
-            ranges.append((keys[0], keys[-1]))
-    ranges.sort()
-    for (a_lo, a_hi), (b_lo, b_hi) in zip(ranges, ranges[1:]):
-        assert a_hi <= b_lo, "compacted file key ranges overlap"
-
-    # replay ACROSS the boundary: rerun the whole stream with a fresh
-    # checkpoint — b0/b1 partitions reappear NEXT TO the compacted
-    # generation (duplicate band rows), decisions must not change.
-    # ADVICE r5: the re-created srcs UN-TOMBSTONE themselves (fresh-
-    # checkpoint restarts reuse batch ids; a still-retired re-created
-    # partition would be invisible then destroyed), so only corpus
-    # stays retired and the duplicates are live until the next fold.
-    run_stream("ckpt2")
-    assert kept_ids() == before_kept
-    assert probe_pairs() == before_pairs
-    assert spark.read.parquet(f"{store_root}/docs").count() == len(stream_rows)
-    assert retired_band_srcs(store_root) == ["corpus"]
-    assert band_rows() == before_bands  # dup band rows collapse in the set
-
-    # second compaction: the deferred delete fires for round 1's
-    # corpus tombstone; the replayed (now-live) b0/b1 fold together
-    # with compact_g1 into generation 2 — dropDuplicates collapses the
-    # duplicate rows, nothing is lost
-    info2 = compact_band_store(spark, store_root)
-    assert info2["generation"] == 2
-    assert info2["deleted"] == ["corpus"]
-    assert sorted(info2["folded"]) == ["b0", "b1", "compact_g1"]
-    assert sorted(band_store_srcs(store_root)) == [
-        "b0", "b1", "compact_g1", "compact_g2",
-    ]
-    assert band_rows() == before_bands
-
-    # retirement: drop a corpus doc's bands
-    victim = corpus.select("doc_id").orderBy("doc_id").limit(1)
-    vid = victim.first()["doc_id"]
-    info3 = compact_band_store(spark, store_root, retired_ids=victim)
-    assert sorted(info3["deleted"]) == ["b0", "b1", "compact_g1"]
-    assert {t for t in band_rows() if t[0] == vid} == set()
-    assert {t[0] for t in before_bands} - {t[0] for t in band_rows()} == {vid}
-
-
-def test_band_store_compaction_skips_inflight_partition(spark, tmp_path):
-    """Concurrent-writer safety for the band store (VERDICT r3 #5): a
-    partition mid-write (no _SUCCESS marker — exactly what an in-flight
-    ingest batch looks like) is neither folded into the compacted
-    generation nor deleted; committed partitions fold normally."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.operators.dedup import band_table
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        band_store_srcs,
-        compact_band_store,
-        read_band_store,
-        seed_band_store,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    inflight = docs.filter(F.col("doc_id") % 10 >= 8)
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    # simulate the in-flight batch: real parquet files, no _SUCCESS
-    p = f"{store_root}/bands/src=b7"
-    band_table(inflight).write.mode("overwrite").parquet(p)
-    os.remove(f"{p}/_SUCCESS")
-    inflight_rows = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in spark.read.parquet(p).collect()
-    }
-
-    info = compact_band_store(spark, store_root)
-    assert info["folded"] == ["corpus"]  # only the committed partition
-    # deferred deletion: the folded corpus partition is tombstoned, not
-    # deleted; the live view shows the new generation + the in-flight
-    # batch only
-    assert sorted(band_store_srcs(store_root)) == ["b7", "compact_g1", "corpus"]
-    assert {
-        r["src"]
-        for r in read_band_store(spark, store_root).select("src").distinct().collect()
-    } == {"b7", "compact_g1"}
-    # the in-flight partition is byte-untouched and still visible
-    assert {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in spark.read.parquet(p).collect()
-    } == inflight_rows
-    # and the compacted generation does NOT contain its rows
-    comp = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in spark.read.parquet(f"{store_root}/bands/src=compact_g1").collect()
-    }
-    assert not (comp & inflight_rows)
-
-
-def test_band_store_batch_id_reuse_after_fresh_checkpoint(spark, tmp_path):
-    """ADVICE r5: a stream restarted with a FRESH checkpoint restarts
-    batch ids at b0. If a past compaction tombstoned src=b0, the new
-    run's overwrite of that src must become LIVE again (un-tombstoned)
-    — otherwise its brand-new band rows are pruned by every reader and
-    destroyed by the next compaction, with no error."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        compact_band_store,
-        read_band_store,
-        retired_band_srcs,
-        seed_band_store,
-        start_incremental_dedup_stream,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 6)
-    wave1 = docs.filter(F.col("doc_id") % 10 == 6)
-    wave2 = docs.filter(F.col("doc_id") % 10 == 7)
-
-    def run_wave(wave, dirname, ckpt):
-        p = str(tmp_path / dirname)
-        wave.coalesce(1).write.mode("overwrite").parquet(p)
-        stream_in = spark.readStream.schema(docs.schema).parquet(p)
-        q = start_incremental_dedup_stream(
-            spark, stream_in, corpus, store_root,
-            checkpoint=str(tmp_path / ckpt), threshold=0.5,
-        )
-        q.awaitTermination()
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    run_wave(wave1, "arr1", "ckpt1")  # writes src=b0
-    compact_band_store(spark, store_root)
-    assert sorted(retired_band_srcs(store_root)) == ["b0", "corpus"]
-
-    # fresh checkpoint + NEW data → batch ids restart at 0 → src=b0 is
-    # overwritten with wave2's bands while still tombstoned
-    run_wave(wave2, "arr2", "ckpt2")
-    assert retired_band_srcs(store_root) == ["corpus"]  # un-tombstoned
-    wave2_ids = {r["doc_id"] for r in wave2.select("doc_id").collect()}
-    live_ids = {
-        r["doc_id"]
-        for r in read_band_store(spark, store_root).select("doc_id").collect()
-    }
-    assert wave2_ids <= live_ids  # new data visible, not pruned
-
-    # the next compaction folds (not deletes) the re-created b0: wave2
-    # band rows survive into generation 2
-    info = compact_band_store(spark, store_root)
-    assert "b0" in info["folded"] and info["deleted"] == ["corpus"]
-    live_ids2 = {
-        r["doc_id"]
-        for r in read_band_store(spark, store_root).select("doc_id").collect()
-    }
-    assert wave2_ids <= live_ids2
-
-
-@pytest.fixture(scope="module")
-def ordered_event_dir(spark, tmp_path_factory):
-    """sf0.001 events as 5 parquet files in EVENT-TIME order (file k
-    holds the k-th ts-range slice; mtimes ascend so the file source
-    replays them in order) — the delivery the ordered-fold operators
-    (streaming EWMA) contract on."""
-    import os
-    import time
-
-    from pyspark.sql import Window
-
-    root = tmp_path_factory.mktemp("events_ordered")
-    ev = load_table(spark, "/root/testdata/sf0.001", "events")
-    n = ev.count()
-    ranked = ev.withColumn(
-        "_rk", F.row_number().over(Window.orderBy("ts", "event_id"))
-    )
-    out = root / "files"
-    out.mkdir()
-    per = (n + 4) // 5
-    now = time.time()
-    for b in range(5):
-        part = ranked.filter(
-            (F.col("_rk") > b * per) & (F.col("_rk") <= (b + 1) * per)
-        ).drop("_rk")
-        part.coalesce(1).write.mode("overwrite").parquet(f"{root}/o{b}_tmp")
-        for i, f in enumerate(sorted(glob.glob(f"{root}/o{b}_tmp/part-*.parquet"))):
-            dst = out / f"batch_{b}_{i}.parquet"
-            shutil.copy(f, dst)
-            os.utime(dst, (now + b, now + b))  # ascending mtimes
-        shutil.rmtree(f"{root}/o{b}_tmp")
-    return str(out)
-
-
-def test_streaming_ewma_matches_batch_on_ordered_delivery(
-    spark, ordered_event_dir
-):
-    from ark_invest_api_rust_data_spark.operators.events import ewma
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        user_ewma_stateful,
-    )
-
-    stream = user_ewma_stateful(
-        stream_events(spark, ordered_event_dir, max_files_per_trigger=1)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_ewma")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    from pyspark.sql import Window
-
-    emitted = spark.table("t_ewma")
-    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
-    final = (
-        emitted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    batch = ewma(spark.read.parquet(ordered_event_dir))
-    assert _rows(final) == _rows(batch)
-    # the stream really ran as multiple micro-batches (update rows
-    # accumulate), not one big fold
-    assert emitted.count() > final.count()
-
-
-def test_streaming_ewma_rejects_out_of_order_delivery(spark, event_dir):
-    """The shuffled-order fixture violates the ordered-fold contract —
-    the stream must fail loudly, not fold a different sequence."""
-    from pyspark.errors.exceptions.captured import StreamingQueryException
-
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        user_ewma_stateful,
-    )
-
-    stream = user_ewma_stateful(
-        stream_events(spark, event_dir, max_files_per_trigger=1)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_ewma_ooo")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(StreamingQueryException, match="out-of-order"):
-        q.awaitTermination()
-
-
-def test_ewma_stateful_batch_fallback_matches_operator(spark, event_dir):
-    from ark_invest_api_rust_data_spark.operators.events import ewma
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        user_ewma_stateful,
-    )
-
-    df = spark.read.parquet(event_dir)
-    assert _rows(user_ewma_stateful(df)) == _rows(ewma(df))
-
-
-# ------------------------------------------------------------ k-mins twin
-def test_streaming_kmins_matches_batch_sketch(spark, event_dir):
-    """Register-identical to the batch sketch after full replay — and
-    order-INSENSITIVE, so the shuffled fixture is fine (min commutes);
-    intermediate updates accumulate (really micro-batched)."""
-    from ark_invest_api_rust_data_spark.operators.sketch import kmins_distinct
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        kmins_distinct_stateful,
-    )
-    from pyspark.sql import Window
-
-    stream = kmins_distinct_stateful(
-        stream_events(spark, event_dir, max_files_per_trigger=1)
-    )
-    q = (
-        stream.writeStream.format("memory")
-        .queryName("t_kmins")
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    emitted = spark.table("t_kmins")
-    w = Window.partitionBy("event_type").orderBy(F.desc("n_rows_seen"))
-    final = (
-        emitted.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("event_type", "mins", "est_distinct")
-    )
-    batch = kmins_distinct(
-        spark.read.parquet(event_dir), "user_id", ["event_type"]
-    ).select("event_type", "mins", "est_distinct")
-    assert _rows(final) == _rows(batch)
-    assert emitted.count() > final.count()
-
-
-def test_kmins_stateful_batch_fallback(spark, event_dir):
-    from ark_invest_api_rust_data_spark.operators.sketch import kmins_distinct
-    from ark_invest_api_rust_data_spark.streaming.stateful import (
-        kmins_distinct_stateful,
-    )
-
-    df = spark.read.parquet(event_dir)
-    assert _rows(kmins_distinct_stateful(df)) == _rows(
-        kmins_distinct(df, "user_id", ["event_type"])
-    )
-
-
-def test_semantic_dedup_stream_equals_frozen_batch_policy(spark, tmp_path):
-    """B24×B29 — streaming semantic dedup against a frozen quantizer
-    with a growing assignment store equals the batch first-seen-
-    canonical rule: a streamed vector is dropped iff some smaller-id
-    vector (seed corpus or any earlier/kept-or-dropped streamed one)
-    shares its frozen cluster at cosine >= threshold. Streams in two
-    id-ordered micro-batches; forces the TWO-LEVEL model tier
-    (two_level_bound=1) so the streaming loop exercises the
-    corpus-scaled-k path; also proves model-reload restartability
-    (the stream starts from the persisted model.json)."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.operators.clustering import (
-        semantic_dedup,
-    )
-    from ark_invest_api_rust_data_spark.streaming.semantic import (
-        _assign_frozen,
-        load_model,
-        seed_semantic_store,
-        start_semantic_dedup_stream,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") % 10 < 8)
-    streamed = emb.filter(F.col("vec_id") % 10 >= 8)
-    stream_rows = sorted(streamed.collect(), key=lambda r: r["vec_id"])
-    stream_ids = {r["vec_id"] for r in stream_rows}
-
-    store_root = str(tmp_path / "store")
-    seed_semantic_store(corpus, store_root, two_level_bound=1)
-    model = load_model(store_root)
-
-    # batch twin: frozen assignments over EVERYTHING, keep-first dedup,
-    # restricted to streamed ids
-    frozen_union = spark.read.parquet(f"{store_root}/asg").select(
-        "vec_id", "cluster"
-    ).unionByName(_assign_frozen(streamed, model, "vec_id", "embedding"))
-    full = semantic_dedup(emb, assignments=frozen_union).collect()
-    expected = {
-        r["vec_id"]: (r["cluster"], r["kept"])
-        for r in full
-        if r["vec_id"] in stream_ids
-    }
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    half = len(stream_rows) // 2
-    for i, chunk in enumerate((stream_rows[:half], stream_rows[half:])):
-        p = str(src / f"part{i}.parquet")
-        spark.createDataFrame(chunk, streamed.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p)
-        for f in os.listdir(p):
-            os.utime(os.path.join(p, f), (1_000_000 + i, 1_000_000 + i))
-
-    stream_in = (
-        spark.readStream.schema(streamed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-    q = start_semantic_dedup_stream(
-        spark, stream_in, store_root, checkpoint=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-
-    out = spark.read.parquet(f"{store_root}/out")
-    got = {
-        r["vec_id"]: (r["cluster"], r["kept"]) for r in out.collect()
-    }
-    assert got == expected
-    # the store grew: corpus + one asg/vecs partition per micro-batch
-    srcs = {
-        r["src"]
-        for r in spark.read.parquet(f"{store_root}/asg")
-        .select("src").distinct().collect()
-    }
-    assert srcs == {"corpus", "b0", "b1"}
-
-
-def test_semantic_dedup_stream_replay_overwrites_stale_attempt(spark, tmp_path):
-    """Crash-replay: stale (and wrong — all-kept) src=b0 partitions
-    from a crashed attempt are OVERWRITTEN by the replay, never read
-    as the replay's own input."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.streaming.semantic import (
-        _assign_frozen,
-        load_model,
-        seed_semantic_store,
-        start_semantic_dedup_stream,
-    )
-
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") % 10 < 8)
-    streamed = emb.filter(F.col("vec_id") % 10 >= 8)
-
-    store_root = str(tmp_path / "store")
-    seed_semantic_store(corpus, store_root, two_level_bound=1)
-    model = load_model(store_root)
-    # stale crashed attempt: every row marked kept, assignments present
-    _assign_frozen(streamed, model, "vec_id", "embedding").withColumn(
-        "kept", F.lit(True)
-    ).write.mode("overwrite").parquet(f"{store_root}/out/src=b0")
-    _assign_frozen(streamed, model, "vec_id", "embedding").write.mode(
-        "overwrite"
-    ).parquet(f"{store_root}/asg/src=b0")
-    streamed.write.mode("overwrite").parquet(f"{store_root}/vecs/src=b0")
-
-    src = tmp_path / "arrivals"
-    src.mkdir()
-    streamed.coalesce(1).write.mode("overwrite").parquet(
-        str(src / "part0.parquet")
-    )
-    stream_in = (
-        spark.readStream.schema(streamed.schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/part*.parquet")
-    )
-    q = start_semantic_dedup_stream(
-        spark, stream_in, store_root, checkpoint=str(tmp_path / "ckpt")
-    )
-    q.awaitTermination()
-
-    out = spark.read.parquet(f"{store_root}/out")
-    assert out.count() == streamed.count()  # replaced, not appended
-
-
-def test_semantic_store_compaction_preserves_stream_results(spark, tmp_path):
-    """compact_semantic_store between micro-batches: the folded
-    asg/vecs generations replace the per-batch partitions (tombstoned,
-    deferred-deleted by a second compaction) and the next batch's
-    dedup decisions are unchanged vs the uncompacted run; retired ids
-    drop out of both stores."""
-    import os
-
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
+    from ark_invest_api_rust_data_spark.streaming.ann_ingest import (
+        compact_code_lake,
         partition_srcs,
         retired_srcs,
     )
-    from ark_invest_api_rust_data_spark.streaming.semantic import (
-        compact_semantic_store,
-        seed_semantic_store,
-        start_semantic_dedup_stream,
-    )
 
-    emb = load_table(spark, "/root/testdata/sf0.001", "embeddings").select(
-        "vec_id", "embedding"
-    )
-    corpus = emb.filter(F.col("vec_id") % 10 < 8)
-    streamed = sorted(
-        emb.filter(F.col("vec_id") % 10 >= 8).collect(),
-        key=lambda r: r["vec_id"],
-    )
-    half = len(streamed) // 2
-    schema = "vec_id long, embedding array<double>"
+    lake = str(tmp_path / "lake")
+    _code_lake_src(spark, lake, "corpus", range(80))
+    _code_lake_src(spark, lake, "b1", range(10))  # rows the corpus already holds
+    _code_lake_src(spark, lake, "b7", range(80, 100))
+    os.remove(f"{lake}/src=b7/_SUCCESS")
+    inflight = sorted(os.path.relpath(os.path.join(d, f), lake) for d, _, fs in os.walk(f"{lake}/src=b7") for f in fs)
 
-    def run(root, compact_between):
-        src = tmp_path / f"arr_{compact_between}"
-        src.mkdir()
-        seed_semantic_store(corpus, root, two_level_bound=1)
-        # ONE checkpoint across both runs: the resumed file source
-        # assigns batch 1 to the second file — batch ids must never
-        # collide across restarts or src=b0 would be overwritten
-        ckpt = str(tmp_path / f"ck_{compact_between}")
-        for i, chunk in enumerate((streamed[:half], streamed[half:])):
-            p = str(src / f"part{i}.parquet")
-            spark.createDataFrame(chunk, schema).coalesce(1).write.mode(
-                "overwrite"
-            ).parquet(p)
-            stream_in = (
-                spark.readStream.schema(schema)
-                .option("maxFilesPerTrigger", 1)
-                .parquet(f"{src}/part*.parquet")
-            )
-            q = start_semantic_dedup_stream(
-                spark, stream_in, root, checkpoint=ckpt
-            )
-            q.awaitTermination()
-            if compact_between and i == 0:
-                compact_semantic_store(spark, root)
-        got = {
-            r["vec_id"]: (r["cluster"], r["kept"])
-            for r in spark.read.parquet(f"{root}/out").collect()
-        }
-        assert set(got) == {r["vec_id"] for r in streamed}  # both batches
-        srcs = {
-            r["src"]
-            for r in spark.read.parquet(f"{root}/asg")
-            .select("src").distinct().collect()
-        }
-        assert "b1" in srcs  # batch ids advanced across the restart
-        return got
-
-    plain = run(str(tmp_path / "s_plain"), False)
-    compacted = run(str(tmp_path / "s_comp"), True)
-    assert plain == compacted and plain
-    # generation landed, folded srcs tombstoned; second compaction
-    # physically deletes them
-    root = str(tmp_path / "s_comp")
-    asg_base = f"{root}/asg"
-    assert any(s.startswith("compact_g") for s in partition_srcs(asg_base))
-    assert retired_srcs(asg_base)
-    compact_semantic_store(spark, root)
-    # the first generation folded src=corpus and tombstoned it; the
-    # second compaction physically deletes the tombstoned partitions
-    assert not os.path.isdir(f"{asg_base}/src=corpus")
-    assert "corpus" not in partition_srcs(asg_base)
+    info = compact_code_lake(spark, lake)
+    assert info["folded"] == ["b1", "corpus"]  # only the committed partitions
+    assert info["rows"] == 80 and info["deleted"] == []
+    # deferred deletion: the folded partitions are tombstoned, not
+    # deleted; the live view shows the new generation + the in-flight
+    # batch only
+    assert partition_srcs(lake) == ["b1", "b7", "compact_g1", "corpus"]
+    assert retired_srcs(lake) == ["b1", "corpus"]
+    assert _live_ids(spark, lake) == list(range(100))
+    # the in-flight partition is untouched and still visible
+    assert sorted(os.path.relpath(os.path.join(d, f), lake) for d, _, fs in os.walk(f"{lake}/src=b7") for f in fs) == inflight
+    gen = spark.read.parquet(f"{lake}/src=compact_g1")
+    assert sorted(r["vec_id"] for r in gen.select("vec_id").collect()) == list(range(80))
+    assert sorted(d for d in os.listdir(f"{lake}/src=compact_g1") if d.startswith("cluster=")) == [
+        "cluster=0", "cluster=1", "cluster=2",
+    ]
 
 
 def test_compaction_spares_retired_src_rewritten_after_tombstone(spark, tmp_path):
-    """r9 advisor: a batch-id-reuse replay can rewrite a RETIRED src
-    after it was tombstoned but before its unretire lands (the
-    writers now unretire first, but a compaction that listed the
-    tombstones earlier can still race). The rewritten partition's dir
-    mtime is newer than the tombstone file — compaction must spare it
-    (skip the deferred delete, leave it out of the fold) and the fresh
-    tombstone set makes it live again."""
+    """A batch-id-reuse replay (fresh checkpoint) can rewrite a RETIRED
+    src after it was tombstoned. The rewritten partition's dir mtime is
+    newer than the tombstone file — compaction must spare it (skip the
+    deferred delete, leave it out of the fold) and the fresh tombstone
+    set makes it live again."""
     import time as _time
 
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        compact_partition_dir,
-        read_live_partitions,
+    from ark_invest_api_rust_data_spark.streaming.ann_ingest import (
+        compact_code_lake,
         retired_srcs,
     )
 
-    base = str(tmp_path / "store")
-    spark.range(10).select(F.col("id").alias("k")).write.parquet(
-        f"{base}/src=b0"
-    )
-    info = compact_partition_dir(spark, base, "k")
-    assert info["folded"] == ["b0"] and retired_srcs(base) == ["b0"]
+    lake = str(tmp_path / "lake")
+    _code_lake_src(spark, lake, "b0", range(10))
+    info = compact_code_lake(spark, lake)
+    assert info["folded"] == ["b0"] and retired_srcs(lake) == ["b0"]
     _time.sleep(0.05)
-    # the race: a replay rewrites retired src=b0 with NEW rows; its
-    # unretire has not landed when the next compaction starts
-    spark.range(100, 110).select(F.col("id").alias("k")).write.mode(
-        "overwrite"
-    ).parquet(f"{base}/src=b0")
-    info2 = compact_partition_dir(spark, base, "k")
+    # the race: a replay rewrites retired src=b0 with NEW rows
+    _code_lake_src(spark, lake, "b0", range(100, 110))
+    info2 = compact_code_lake(spark, lake)
     assert info2["deleted"] == [], "rewritten partition must not be deleted"
     assert "b0" not in info2["folded"]
-    live = {
-        r["k"] for r in read_live_partitions(spark, base).select("k").collect()
-    }
+    live = set(_live_ids(spark, lake))
     assert set(range(100, 110)) <= live, "replayed rows must be live"
     assert set(range(10)) <= live, "folded generation rows intact"
     # the NEXT compaction folds the now-live partition normally
-    info3 = compact_partition_dir(spark, base, "k")
+    info3 = compact_code_lake(spark, lake)
     assert "b0" in info3["folded"]
-    live3 = {
-        r["k"] for r in read_live_partitions(spark, base).select("k").collect()
-    }
-    assert live3 == set(range(10)) | set(range(100, 110))
-
-
-def test_band_store_crash_between_unretire_and_overwrite_heals(spark, tmp_path):
-    """ADVICE r10 — the unretire-before-overwrite CRASH WINDOW, now
-    replay-tested instead of just documented: a fresh-checkpoint
-    stream un-tombstones its own src=b0 and the driver dies BEFORE the
-    overwrite lands. The already-folded b0 partition is resurrected as
-    live, so its rows appear TWICE in the live view (once via the
-    compact generation, once via the tombstone-lifted partition) —
-    duplicates, never losses: the row SET is unchanged, every probe
-    decision is unchanged (band candidates collapse in the set), and
-    the next compaction's dropDuplicates heals the store back to
-    unique rows."""
-    import pyspark.sql.functions as F
-
-    from ark_invest_api_rust_data_spark.operators.dedup import (
-        band_table,
-        incremental_near_dup_pairs,
-    )
-    from ark_invest_api_rust_data_spark.streaming.ingest import (
-        _unretire,
-        compact_band_store,
-        read_band_store,
-        retired_band_srcs,
-        seed_band_store,
-    )
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    corpus = docs.filter(F.col("doc_id") % 10 < 8)
-    batch0 = docs.filter(F.col("doc_id") % 10 >= 8)
-
-    store_root = str(tmp_path / "store")
-    seed_band_store(corpus, store_root)
-    band_table(batch0).write.mode("overwrite").parquet(
-        f"{store_root}/bands/src=b0"
-    )
-
-    def live_rows():
-        return [
-            (r["doc_id"], r["band"], r["band_key"])
-            for r in read_band_store(spark, store_root).collect()
-        ]
-
-    def probe_pairs():
-        probe_batch = docs.filter(F.col("doc_id") % 10 == 7)
-        return {
-            (r["doc_a"], r["doc_b"])
-            for r in incremental_near_dup_pairs(
-                docs, probe_batch,
-                band_store=read_band_store(spark, store_root),
-                threshold=0.5,
-            ).collect()
-        }
-
-    before = live_rows()
-    before_pairs = probe_pairs()
-    assert len(before) == len(set(before))  # unique pre-crash
-
-    info = compact_band_store(spark, store_root)
-    assert set(info["folded"]) == {"corpus", "b0"}
-    b0_rows = {
-        (r["doc_id"], r["band"], r["band_key"])
-        for r in spark.read.parquet(f"{store_root}/bands/src=b0").collect()
-    }
-
-    # THE CRASH: the stream's first action on a reused batch id is
-    # _unretire (ingest.py process_batch) — and then the driver dies,
-    # so the overwrite of src=b0 never happens
-    _unretire(store_root, "b0")
-
-    assert retired_band_srcs(store_root) == ["corpus"]
-    after = live_rows()
-    assert set(after) == set(before), "no row may be lost or invented"
-    # the resurrected partition's rows are exactly the duplicates
-    assert len(after) == len(before) + len(b0_rows)
-    assert probe_pairs() == before_pairs  # decisions unaffected
-
-    # heal: the next fold dropDuplicates the store back to unique
-    info2 = compact_band_store(spark, store_root)
-    assert "b0" in info2["folded"]
-    healed = live_rows()
-    assert len(healed) == len(set(healed)) == len(before)
-    assert set(healed) == set(before)
-    assert probe_pairs() == before_pairs
+    assert _live_ids(spark, lake) == list(range(10)) + list(range(100, 110))

@@ -1,16 +1,12 @@
 """Z-order layout (operators/zorder.py): Morton math vs a Python
-reference, and the actual pruning property — per-file min/max ranges
-stay tight on BOTH clustered columns, unlike a linear sort."""
+reference."""
 
 from __future__ import annotations
 
-import os
-
-import pyarrow.parquet as pq
 import pyspark.sql.functions as F
 import pytest
 
-from ark_invest_api_rust_data_spark.operators.zorder import z_value, zorder_write
+from ark_invest_api_rust_data_spark.operators.zorder import z_value
 
 
 def _py_morton(vals, bits):
@@ -55,44 +51,3 @@ def _files_hit(minmax, lo, hi):
     return sum(1 for mn, mx in minmax if not (mx < lo or mn > hi))
 
 
-def test_zorder_layout_prunes_both_dimensions(spark, tmp_path):
-    # two independent uniform keys in [0, 1024); 4096 rows, 8 files
-    rows = [((i * 37) % 1024, (i * 101) % 1024) for i in range(4096)]
-    df = spark.createDataFrame(rows, ["a", "b"])
-
-    zpath = str(tmp_path / "zorder")
-    zorder_write(df, zpath, ["a", "b"], bits=10, n_files=32)
-    lpath = str(tmp_path / "linear")
-    (
-        df.repartitionByRange(32, "a")
-        .sortWithinPartitions("a")
-        .write.mode("overwrite")
-        .parquet(lpath)
-    )
-
-    # ~10%-of-domain filters at several positions (one straddling the
-    # domain midline — the Morton worst case); count files whose
-    # min/max stats force a read (what parquet skipping actually does)
-    bands = [(100, 200), (450, 550), (700, 800)]
-    lin_a, lin_b = _file_minmax(lpath, "a"), _file_minmax(lpath, "b")
-    z_a, z_b = _file_minmax(zpath, "a"), _file_minmax(zpath, "b")
-    n = len(z_a)
-    assert n >= 16
-
-    for q in bands:
-        # linear sort: perfect on the sort column, USELESS on b —
-        # every file spans b's domain, the filter reads the whole lake
-        assert _files_hit(lin_a, *q) <= 5
-        assert _files_hit(lin_b, *q) == len(lin_b)
-        # z-order: BOTH dimensions prune — even the midline-straddling
-        # band skips at least half the files (curve segments crossing
-        # a quadrant boundary legitimately span one dim)
-        assert _files_hit(z_a, *q) <= n // 2, (q, z_a)
-        assert _files_hit(z_b, *q) <= n // 2, (q, z_b)
-
-    # same rows, either layout
-    assert (
-        spark.read.parquet(zpath).count()
-        == spark.read.parquet(lpath).count()
-        == 4096
-    )
