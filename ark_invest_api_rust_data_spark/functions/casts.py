@@ -36,24 +36,44 @@ def _budget_aggs(colname: str) -> list[Column]:
     ]
 
 
+@per_jvm
+def _ok_flags(colname: str) -> list[Column]:
+    """Per row, whether each candidate format parses the value."""
+    return [_try_parse(colname, fmt).isNotNull().alias(f"ok_{i}") for i, fmt in enumerate(DATE_FORMATS)]
+
+
+def _format_counts(df: DataFrame, colname: str) -> tuple[int, list[int]]:
+    """Height and the parsed count under every candidate format. A
+    frame whose flags the optimizer folds into a ``LocalRelation`` (a
+    fetched body: rows held in the plan, which ``collect`` reads with no
+    Spark job) is counted on the driver; any other frame runs one
+    aggregate. Both count Spark's own ``try_to_date``."""
+    flags = df.select(*_ok_flags(colname))
+    plan = flags._jdf.queryExecution().optimizedPlan()
+    if plan.getClass().getSimpleName() == "LocalRelation":
+        rows = flags.collect()
+        return len(rows), [sum(r[i] for r in rows) for i in range(len(DATE_FORMATS))]
+    stats = df.agg(*_budget_aggs(colname)).first()
+    return stats["h"], [stats[f"ok_{i}"] for i in range(len(DATE_FORMATS))]
+
+
 def parse_date_with_budget(df: DataFrame, colname: str = "date") -> DataFrame:
     """C1 — multi-format date parse with a 10%-null rejection budget.
 
     The reference tries each format and REJECTS it if more than
     height/10 rows fail to parse (/root/reference/src/util.rs:224-226),
     falling through to the next; if all candidates fail the column is
-    left as-is. One small aggregate action computes the null count of
-    every candidate in a single pass (the reference materializes per
-    try; we don't need to).
+    left as-is. One pass counts the parsed rows of every candidate (the
+    reference materializes per try; we don't need to): on the driver
+    for a driver-held frame, else one small aggregate action.
     """
     if not isinstance(df.schema[colname].dataType, T.StringType):
         return df
-    stats = df.agg(*_budget_aggs(colname)).first()
-    h = stats["h"]
+    h, oks = _format_counts(df, colname)
     if h == 0:
         return df
-    for i, fmt in enumerate(DATE_FORMATS):
-        nulls = h - stats[f"ok_{i}"]
+    for fmt, ok in zip(DATE_FORMATS, oks):
+        nulls = h - ok
         if not nulls > h // 10:  # reference: reject iff null_count > height/10
             return df.withColumn(colname, _try_parse(colname, fmt))
     return df  # all formats rejected → column stays string (parity)

@@ -325,9 +325,6 @@ def shard_assign(
     )
 
 
-FUNNEL_STAGES = ("raw", "quality", "dedup", "train")
-
-
 def corpus_funnel(
     docs: DataFrame,
     id_col: str = "doc_id",

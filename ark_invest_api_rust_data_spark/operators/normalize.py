@@ -2,9 +2,9 @@
 ``df_format`` (/root/reference/src/util.rs:153-497).
 
 One lazy projection pipeline; every step is guarded by resolved-schema
-checks (free in Spark — no action). The only action inside is the tiny
-date-format-budget aggregate (C1), and only when ``date`` arrives as a
-string.
+checks (free in Spark — no action). The only action inside is the
+date-format budget (C1), and only when ``date`` arrives as a string:
+a local collect on a driver-held frame, else one tiny aggregate.
 
 The plan stays flat: the security rules compile to one projection (one
 CASE per target column, functions/rules.py), and the casts plus both

@@ -190,7 +190,10 @@ def cosine_near_dup_pairs_blocked(
         ]
     )
 
-    def score_block_pair(key, pdf: "pd.DataFrame") -> "pd.DataFrame":
+    # no type hints: applyInPandas infers its eval type only from hints
+    # on every parameter, and warns on partial ones; unhinted is the
+    # grouped map
+    def score_block_pair(key, pdf):
         bi, bj = key
         left = pdf[pdf["_blk"] == bi]
         right = pdf[pdf["_blk"] == bj] if bi != bj else left

@@ -5,9 +5,10 @@ Where the reference runs read→collect→format→collect→concat→collect→
 write per ticker (/root/reference/src/util.rs:43-108), here each ticker
 is ONE lazy Spark DAG: cache scan (schema and watermark from the
 Parquet footer, no job) → driver HTTP fetch → normalize both branches →
-union → dedupe → write. A warm incremental refresh runs three Spark
-jobs: schema inference of the fetched JSON, the date-format budget
-aggregate, and one dedupe-and-write. The triple
+union → dedupe → write. A warm incremental refresh runs one Spark job,
+the dedupe-and-write: the fetched JSON is a driver-held
+``LocalRelation`` (sources/data_reader.py), so its schema inference and
+date-format budget run on the driver. The triple
 normalize application is KEPT (not collapsed): rule cascades reach
 their fixpoint only after up to 3 passes (see operators/normalize.py;
 property-tested) — but here they're lazy projections in one DAG, not

@@ -103,16 +103,6 @@ _COMPANY_ROWS = [
     (5, "DISCOVERY"),
     (6, "UIPATH INC - CLASS A"),
 ]
-# Expected outputs derived by executing the reference chain by hand —
-# pinned literally so BOTH engines simply agree on the mapping.
-_COMPANY_EXPECT = {
-    1: "TESLA",
-    2: "COINBASE",
-    3: "SpaceX",
-    4: "ROCKET LAB USA",
-    5: "Dassault Systemes",
-    6: "UIPATH",
-}
 
 
 def parity_company_clean(spark: SparkSession, sf: str) -> DataFrame:

@@ -27,7 +27,8 @@ Queries execute to a noop sink — full pipeline runs (scan→shuffle→agg),
 nothing materializes on the driver, so the number is engine time.
 
 Each query pass runs in its own job group, and the steady pass's Spark
-ledger (perfbench.tracing.spark_ledger, read from the status REST API)
+ledger (perfbench.tracing.spark_ledger, read from the status REST API;
+a streaming query's own job group counts for the pass that ran it)
 goes into the detail: shuffle read/write bytes (gated against the
 committed baseline — plan regressions show up round-over-round even
 when wall time is noisy), jobs, stages, tasks, executor run, CPU and GC
@@ -282,6 +283,30 @@ def time_passes(
     return best
 
 
+def fold_unlabelled_groups(
+    by_group: dict[str, dict], windows: dict[str, tuple[float, float]]
+) -> dict[str, dict]:
+    """``by_group`` with every job group that is not a pass's
+    ``name@p<i>`` folded into the pass whose window holds its first
+    job's submission. A Structured Streaming query runs its micro-batch
+    jobs under its own run id, not under the group of the pass that
+    started it; a query lives inside that pass, so its jobs all fall in
+    one window. A group whose first job started outside every window is
+    left out."""
+    out = {g: dict(acc, intervals=list(acc["intervals"])) for g, acc in by_group.items() if g in windows}
+    for g, acc in by_group.items():
+        starts = [start for start, _ in acc["intervals"]]
+        if g in windows or not starts:
+            continue
+        held = next((p for p, (t0, t1) in windows.items() if t0 <= min(starts) <= t1), None)
+        if held is None:
+            continue
+        into = out.setdefault(held, {k: [] if k == "intervals" else 0 for k in acc})
+        for k, v in acc.items():
+            into[k] += v
+    return out
+
+
 def ledger_row(group: dict, window: tuple[float, float]) -> dict:
     """One pass's ledger entry: Spark work counts and times, plus the
     driver gap — wall time outside the union of the pass's jobs."""
@@ -514,7 +539,7 @@ def main() -> None:
         )
 
     try:
-        by_group = spark_ledger(sc.uiWebUrl, sc.applicationId)
+        by_group = fold_unlabelled_groups(spark_ledger(sc.uiWebUrl, sc.applicationId), windows)
     except (OSError, ValueError):
         by_group = {}  # status API unavailable: an empty ledger
     shuffle: dict[str, dict[str, int]] = {}

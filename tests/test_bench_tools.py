@@ -102,3 +102,35 @@ def test_gates_skip_a_baseline_from_another_core_count(capsys):
     assert list(shuffle_deltas["regressions"]) == ["q_up2"]
     err = capsys.readouterr().err
     assert "WARN job-count regression" in err and "WARN shuffle regression" in err
+
+
+def test_ledger_counts_a_streaming_querys_jobs_for_its_pass():
+    """Jobs under a group that is not a pass's (a streaming query's run
+    id) join the pass whose window holds their submission; a group
+    outside every window joins none, and the passes' own rows keep
+    their numbers."""
+    import bench
+
+    def acc(intervals, **counts):
+        base = dict.fromkeys(("jobs", "stages", "tasks", "shuffle_read_bytes", "executor_run_s"), 0)
+        return dict(base, intervals=intervals, **counts)
+
+    windows = {"q@p0": (10.0, 20.0), "q@p1": (20.0, 30.0), "s@p0": (30.0, 40.0)}
+    by_group = {
+        "q@p0": acc([(11.0, 12.0)], jobs=1, tasks=4),
+        "q@p1": acc([(21.0, 22.0)], jobs=1, tasks=4, shuffle_read_bytes=100),
+        "run-id-a": acc([(23.0, 24.0), (25.0, 26.0)], jobs=2, stages=3, tasks=6, shuffle_read_bytes=50),
+        "run-id-b": acc([(31.0, 33.0)], jobs=1, tasks=2, executor_run_s=0.5),
+        "run-id-late": acc([(45.0, 46.0)], jobs=1, tasks=1),
+    }
+    out = bench.fold_unlabelled_groups(by_group, windows)
+    assert sorted(out) == ["q@p0", "q@p1", "s@p0"]
+    assert out["q@p0"] == by_group["q@p0"]
+    assert out["q@p1"]["jobs"] == 3 and out["q@p1"]["tasks"] == 10 and out["q@p1"]["stages"] == 3
+    assert out["q@p1"]["shuffle_read_bytes"] == 150
+    assert out["q@p1"]["intervals"] == [(21.0, 22.0), (23.0, 24.0), (25.0, 26.0)]
+    assert out["s@p0"]["jobs"] == 1 and out["s@p0"]["executor_run_s"] == 0.5
+    row = bench.ledger_row(dict(out["q@p1"], executor_cpu_s=0, jvm_gc_s=0,
+                                python_bytes_sent=0, python_bytes_returned=0), windows["q@p1"])
+    assert row["jobs"] == 3 and row["driver_gap_s"] == 7.0
+    assert by_group["q@p1"]["jobs"] == 1 and by_group["q@p1"]["intervals"] == [(21.0, 22.0)]

@@ -524,6 +524,20 @@ def test_blocked_near_dup_equals_expression_tier(spark):
         assert sorted(map(tuple, got.collect())) == want, f"n_blocks={n_blocks}"
 
 
+def test_blocked_near_dup_raises_no_user_warning(spark):
+    """Building and running the block-matrix tier warns nothing (its
+    grouped-map function once carried type hints on some parameters,
+    which applyInPandas warns about on every call)."""
+    import warnings
+
+    from ark_invest_api_rust_data_spark.operators.similarity import cosine_near_dup_pairs_blocked
+
+    emb = load_table(spark, SF, "embeddings")
+    with warnings.catch_warnings():
+        warnings.simplefilter("error", UserWarning)
+        assert cosine_near_dup_pairs_blocked(emb, 0.40, n_blocks=3).count() > 0
+
+
 def test_ivf_index_recall_and_pruning(spark, tmp_path):
     """IVF tier: nprobe search must recover most of the exact top-10
     with bit-identical scores, and the saved layout must partition-

@@ -9,6 +9,8 @@ import json
 
 import pyspark.sql.functions as F
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from ark_invest_api_rust_data_spark.operators.adapters import DataSource
 from ark_invest_api_rust_data_spark.operators.merge import canonical_sort, watermark
@@ -100,12 +102,13 @@ def test_refresh_ticker_round_trip_budget(spark, tmp_path, py4j_commands):
     assert out.count() == 15
 
 
-# Spark jobs of a warm API-incremental refresh_ticker: JSON schema
-# inference of the fetched body, the date-format budget aggregate, and
-# dedupe-and-write. The cache's schema and watermark come from its
-# Parquet footer (8 jobs when both were Spark actions and the driver-
-# sized frames kept their shuffles).
-REFRESH_JOBS = 3
+# Spark jobs of a warm API-incremental refresh_ticker: the dedupe-and-
+# write, and nothing else. The cache's schema and watermark come from
+# its Parquet footer, and the fetched day folds into a LocalRelation, so
+# its schema inference and date-format budget run on the driver (8 jobs
+# when the cache's were Spark actions and the driver-sized frames kept
+# their shuffles, 3 while the fetched day was read with read.json).
+REFRESH_JOBS = 1
 
 
 def test_refresh_ticker_job_budget(spark, tmp_path, spark_jobs):
@@ -116,6 +119,36 @@ def test_refresh_ticker_job_budget(spark, tmp_path, spark_jobs):
         with spark_jobs() as jobs:
             refresh_ticker(spark, Ticker.ARKK, Source.API_INCREMENTAL, root, lambda url: API_JSON_PAGE2)
         assert len(jobs) == REFRESH_JOBS, jobs
+
+
+# Spark jobs of an ARK-source refresh_ticker (a CSV body): CSV schema
+# inference, the date-format budget aggregate over the one-partition
+# parsed body, and the write (5 while the body was read from a temp
+# file).
+ARK_REFRESH_JOBS = 3
+
+
+def test_ark_refresh_job_budget(spark, tmp_path, spark_jobs):
+    root = str(tmp_path)
+    refresh_ticker(spark, Ticker.ARKK, Source.ARK, root, lambda url: ARK_CSV)
+    with spark_jobs() as jobs:
+        refresh_ticker(spark, Ticker.ARKK, Source.ARK, root, lambda url: ARK_CSV)
+    assert len(jobs) == ARK_REFRESH_JOBS, jobs
+
+
+def test_ark_refresh_leaves_no_temp_file(spark, tmp_path, monkeypatch):
+    """The CSV body reaches Spark from memory: an ARK-source refresh
+    writes nothing into the temp directory."""
+    import tempfile
+
+    tmp = tmp_path / "tmp"
+    tmp.mkdir()
+    monkeypatch.setenv("TMPDIR", str(tmp))
+    monkeypatch.setattr(tempfile, "tempdir", None)
+    out = refresh_ticker(spark, Ticker.ARKK, Source.ARK, str(tmp_path / "lake"), lambda url: ARK_CSV)
+    assert out.count() == 14
+    assert tempfile.gettempdir() == str(tmp)
+    assert not list(tmp.glob("tmp*.csv"))
 
 
 def _canonical_table(dates, date_type=None, string_type=None):
@@ -207,17 +240,18 @@ def test_footer_watermark_equals_aggregate(spark, tmp_path, name):
 
 
 def test_one_partition_only_on_driver_sized_frames(spark, tmp_path):
-    """The fetched day and the refresh's merge are one partition, so the
-    budget aggregate and the dedupe plan no exchange. The large-frame
-    paths keep theirs: concat_dedupe (the CSV backfill) still hashes
-    the rows across partitions, and normalize adds no repartitioning."""
+    """The fetched day is a LocalRelation and the refresh's merge one
+    partition, so the budget counts on the driver and the dedupe plans
+    no exchange. The large-frame paths keep theirs: concat_dedupe (the
+    CSV backfill) still hashes the rows across partitions, and
+    normalize adds no repartitioning."""
     from ark_invest_api_rust_data_spark.operators.merge import concat_dedupe, incremental_merge
 
     def plan(df):
         return df._jdf.queryExecution().executedPlan().toString()
 
     update = json_to_df(spark, API_JSON_PAGE2)
-    assert update.rdd.getNumPartitions() == 1
+    assert update._jdf.queryExecution().optimizedPlan().getClass().getSimpleName() == "LocalRelation"
     root = str(tmp_path)
     write_ticker(normalize(csv_to_df(spark, ARK_CSV)), root, "ARKK")
     cache = read_ticker(spark, root, "ARKK")
@@ -371,16 +405,34 @@ _JSON_EDGES = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(_JSON_EDGES))
+def _assert_same_frame(got, want):
+    assert got.schema == want.schema
+    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+
+
+def _recorded_json_body(name: str) -> str:
+    """The JSON bodies the other tests and the benchmark feed the reader."""
+    if name == "chaos_api_page":
+        from _retry_chaos_runner import API_JSON
+
+        return API_JSON
+    from perfbench import gen
+
+    tickers = [t.name for t in Ticker][: len(gen.HISTORY_DAYS)]
+    day = gen.LAST_BOOTSTRAP_DAY + datetime.timedelta(days=1)
+    return gen.Holdings(77, tickers).api_json(tickers[0], day)
+
+
+@pytest.mark.parametrize("name", sorted(_JSON_EDGES) + ["chaos_api_page", "perfbench_api_day"])
 def test_json_to_df_matches_python_rdd_reader(spark, name):
     """Same schema and rows as the sc.parallelize reader on every edge
-    input (Spark infers and parses the same way for both origins)."""
-    text = _JSON_EDGES[name]
+    input and recorded body (Spark infers and parses the same way for
+    both origins)."""
+    text = _JSON_EDGES[name] if name in _JSON_EDGES else _recorded_json_body(name)
     got, want = json_to_df(spark, text), _json_via_python_rdd(spark, text)
     if name == "envelope":
         got, want = explode_holdings(got), explode_holdings(want)
-    assert got.schema == want.schema
-    assert sorted(map(str, got.collect())) == sorted(map(str, want.collect()))
+    _assert_same_frame(got, want)
 
 
 def test_json_to_df_runs_no_python_worker(spark):
@@ -392,6 +444,110 @@ def test_json_to_df_runs_no_python_worker(spark):
 
     assert "PythonRDD" not in lineage(json_to_df(spark, API_JSON_PAGE2))
     assert "PythonRDD" in lineage(_json_via_python_rdd(spark, API_JSON_PAGE2))
+
+
+_JSON_KEYS = st.sampled_from(["a", "b", "date", "market value ($)", "weight"])
+_JSON_SCALARS = st.one_of(
+    st.none(),
+    st.booleans(),
+    # past 2**63 the inferencer picks decimal(p,0), past 10**38 double
+    st.integers(-(2**130), 2**130),
+    st.integers(-5, 5),
+    st.floats(allow_nan=False, allow_infinity=False),
+    st.text(st.characters(blacklist_categories=("Cs",)), max_size=6),
+)
+
+
+def _json_containers(inner):
+    return st.lists(inner, max_size=3) | st.dictionaries(_JSON_KEYS, inner, max_size=3)
+
+
+_JSON_VALUES = st.recursive(_JSON_SCALARS, _json_containers, max_leaves=6)
+_JSON_RECORDS = st.lists(st.dictionaries(_JSON_KEYS, _JSON_VALUES, max_size=4), min_size=1, max_size=4)
+
+
+@settings(max_examples=30, deadline=None)
+@given(records=_JSON_RECORDS)
+def test_json_to_df_matches_python_rdd_reader_on_generated_records(spark, records):
+    """Flat records, long/double and string/number mixes, missing keys,
+    nested nulls, integers past 2**63 and nested array<struct>: the
+    driver-side schema and from_json rows equal read.json's."""
+    text = json.dumps(records)
+    _assert_same_frame(json_to_df(spark, text), _json_via_python_rdd(spark, text))
+
+
+def _csv_via_file(spark, text: str, path):
+    """The reader csv_to_df replaced: the body written to a file."""
+    from ark_invest_api_rust_data_spark.operators.adapters import ROW_IDX
+    from ark_invest_api_rust_data_spark.sources.data_reader import _dedup_header
+
+    text, had_dup = _dedup_header(text)
+    path.write_bytes(text.encode())
+    df = spark.read.option("header", True).option("inferSchema", True).csv(str(path))
+    if had_dup:
+        df = df.coalesce(1).withColumn(ROW_IDX, F.monotonically_increasing_id())
+    return df
+
+
+def _csv_bodies() -> dict[str, str]:
+    from ark_invest_api_rust_data_spark.__main__ import DEMO_CSV
+    from ark_invest_api_rust_data_spark.plans.parity import _EUROPE_RAW_CSV
+
+    return {
+        "ark": ARK_CSV,
+        "europe_raw": _EUROPE_RAW_CSV,
+        "demo": DEMO_CSV,
+        "crlf": ARK_CSV.replace("\n", "\r\n") + "\r\n",
+        "blank_lines": ARK_CSV.replace("\n", "\n\n", 3) + "\n",
+    }
+
+
+@pytest.mark.parametrize("name", sorted(_csv_bodies()))
+def test_csv_to_df_matches_file_reader(spark, tmp_path, name):
+    """Same schema and rows, in the same order, as reading the body
+    from a file: the ARK fixture, the duplicate-header Europe body (its
+    parse-order _row_idx included) and other line endings."""
+    text = _csv_bodies()[name]
+    got, want = csv_to_df(spark, text), _csv_via_file(spark, text, tmp_path / "body.csv")
+    assert got.rdd.getNumPartitions() == 1
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+# name -> (the date column, the format the budget picks; None keeps the
+# string column)
+_BUDGET_COLUMNS = {
+    "us": (["1/9/2024"] * 9 + ["2024-01-09"], "M/d/yyyy"),
+    "rejects_us": (["2024/1/9"] * 9 + ["1/9/2024"], "yyyy/M/d"),
+    "iso": (["2024-01-09", "2024-1-9", "junk"] + ["2024-01-10"] * 7, "ISO"),
+    "none_fits": (["junk"] * 5 + ["1/9/2024"] * 5, None),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_BUDGET_COLUMNS))
+def test_budget_branches_pick_the_same_format(spark, tmp_path, spark_jobs, name):
+    """parse_date_with_budget counts a LocalRelation's rows on the
+    driver (no job) and runs the aggregate on any other frame: both
+    pick the same format, so both parse to the same rows."""
+    from ark_invest_api_rust_data_spark.functions.casts import parse_date_with_budget
+
+    dates, fmt = _BUDGET_COLUMNS[name]
+    local = json_to_df(spark, json.dumps([{"date": d, "i": i} for i, d in enumerate(dates)]))
+    local.coalesce(1).write.parquet(str(tmp_path / "p"))
+    scanned = spark.read.parquet(str(tmp_path / "p"))
+    outs = []
+    for frame in (local, scanned):
+        with spark_jobs() as jobs:
+            outs.append(parse_date_with_budget(frame))
+        assert bool(jobs) is (frame is scanned), jobs
+    _assert_same_frame(*outs)
+    got = {r["i"]: r["date"] for r in outs[0].collect()}
+    if fmt is None:
+        assert got == dict(enumerate(dates))
+    else:
+        # the one value the picked format does not parse is null
+        assert got[0] == datetime.date(2024, 1, 9)
+        assert sum(v is None for v in got.values()) == 1
 
 
 def test_read_back_with_written_schema_equals_inferred_read(spark, tmp_path):
